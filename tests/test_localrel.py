@@ -102,3 +102,40 @@ def test_values_df_timestamp_takes_fallback(spark):
     a = values_df(spark, [(ts,)], "t timestamp").collect()
     b = spark.createDataFrame([(ts,)], "t timestamp").collect()
     assert a == b
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_values_df_strings_read_the_same_under_parser_confs(spark, escaped):
+    # quotes and backslashes must not depend on escapedStringLiterals,
+    # and `${...}` must not be replaced by variable substitution
+    texts = ["it's a\\b", "${spark.app.name}", "${env:HOME}", "plain", ""]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        rows = values_df(
+            spark, list(enumerate(texts)), "i int, s string"
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert [r["s"] for r in sorted(rows)] == texts
+
+
+def test_values_df_decimal_gate(spark):
+    from decimal import Decimal
+
+    got = values_df(
+        spark, [(0, Decimal("1.25")), (1, 3), (2, 2.5)],
+        "i int, d decimal(10,2)",
+    ).collect()
+    assert [r["d"] for r in sorted(got)] == [
+        Decimal("1.25"), Decimal("3.00"), Decimal("2.50"),
+    ]
+    # a NaN decimal takes the fallback too, which reads it as NULL
+    nan = values_df(spark, [(Decimal("NaN"),)], "d decimal(10,2)")
+    assert nan.collect()[0]["d"] is None
+    # mistyped or quote-bearing values never reach the SQL parser: they
+    # take the createDataFrame fallback, which raises TypeError
+    for bad in ("1') AS c0 UNION SELECT ('9", "abc", True, float("inf")):
+        with pytest.raises(TypeError):
+            values_df(spark, [(bad,)], "d decimal(10,2)").collect()

@@ -300,3 +300,167 @@ def test_generic_matview_reproduces_pipeline_gold(pipeline):
     assert rows("gold", "daily_zone_demand_mv") == rows(
         "gold", "daily_zone_demand"
     )
+
+
+def test_batch_bookkeeping_commits(pipeline, monkeypatch):
+    """One daily batch costs 2 quality-log commits (the fact's audit row
+    and one audit_batch commit) and 1 gold commit that carries the sync
+    watermark; the refresh finds its cursor without reading the quality
+    log."""
+    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
+        Lakehouse,
+    )
+    from urban_mobility_data_lakehouse_spark.sources.matview import (
+        META_KEY,
+        MaterializedView,
+    )
+
+    p, s = pipeline, pipeline.spark
+    p.refresh_gold_daily_demand()  # bring gold current
+    q0 = len(p.lake.snapshots("silver", "data_quality_log"))
+    g0 = len(p.lake.snapshots("gold", "daily_zone_demand"))
+
+    p.process_days(DATES[2:3])
+    p.audit_batch(DATES[2:3])
+    reads = []
+    real_read = Lakehouse.read
+
+    def spy(self, spark, schema, name, *args, **kwargs):
+        reads.append((schema, name))
+        return real_read(self, spark, schema, name, *args, **kwargs)
+
+    monkeypatch.setattr(Lakehouse, "read", spy)
+    out = p.refresh_gold_daily_demand()
+    monkeypatch.undo()
+
+    assert out["refreshed_days"] == 1.0
+    assert reads and ("silver", "data_quality_log") not in reads
+    assert len(p.lake.snapshots("silver", "data_quality_log")) == q0 + 2
+    gold = p.lake.snapshots("gold", "daily_zone_demand")
+    assert len(gold) == g0 + 1
+    assert gold[-1]["operation"] == "overwrite_partitions"
+    assert gold[-1][META_KEY] == out["silver_version"]
+
+    # the 4 audit_batch rows are the whole of the batch's second commit
+    audit = p.lake.read_changes(s, "silver", "data_quality_log", q0, q0 + 1)
+    assert sorted(r["metric_name"] for r in audit.collect()) == [
+        "batch_bad_row_pct", "batch_days_loaded",
+        "batch_rows", "batch_total_trips",
+    ]
+
+    mv = MaterializedView(
+        p.lake,
+        base=("silver", "fact_mobility"),
+        view=("gold", "daily_zone_demand"),
+        group_by=["partition_date", "origin_zone_id"],
+        aggs={"n_rows": "count(*)"},
+        partition_col="partition_date",
+    )
+    assert mv.last_applied() == out["silver_version"]
+
+
+@pytest.mark.parametrize("no_row_change", ["compact", "rename_column"])
+def test_gold_refresh_advances_past_no_row_change(
+    pipeline, monkeypatch, no_row_change
+):
+    """A silver compaction, or a metadata-only commit (a column renamed
+    and renamed back), changes no row, so the refresh rewrites no gold
+    day — but it still advances the watermark, so the next call is a
+    no-op instead of re-diffing the same window."""
+    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
+        Lakehouse,
+    )
+    from urban_mobility_data_lakehouse_spark.sources.matview import (
+        ADVANCE_OP,
+        META_KEY,
+    )
+
+    p, s = pipeline, pipeline.spark
+    p.refresh_gold_daily_demand()  # bring gold current
+    if no_row_change == "compact":
+        p.lake.compact(
+            s, "silver", "fact_mobility",
+            partition_col="partition_date", vacuum=False,
+        )
+    else:
+        fact = ("silver", "fact_mobility")
+        p.lake.rename_column(s, *fact, "processed_at", "loaded_at")
+        p.lake.rename_column(s, *fact, "loaded_at", "processed_at")
+    out = p.refresh_gold_daily_demand()
+    assert out["refreshed_days"] == 0.0
+    gold = p.lake.snapshots("gold", "daily_zone_demand")
+    assert gold[-1]["operation"] == ADVANCE_OP
+    assert gold[-1][META_KEY] == out["silver_version"]
+
+    def no_diff(*args, **kwargs):
+        raise AssertionError("refresh re-diffed an applied window")
+
+    monkeypatch.setattr(Lakehouse, "read_changes", no_diff)
+    assert p.refresh_gold_daily_demand() == out
+
+
+def _demand_rows(p, schema, name):
+    """{(day, zone): (Σ trips, rows)} of gold, or of silver aggregated
+    from scratch."""
+    df = p.lake.read(p.spark, schema, name)
+    if schema == "silver":
+        df = df.groupBy("partition_date", "origin_zone_id").agg(
+            F.sum("trips").alias("total_trips"),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+    return {
+        (str(r["partition_date"]), r["origin_zone_id"]):
+            (round(r["total_trips"], 6), r["n_rows"])
+        for r in df.collect()
+    }
+
+
+def test_gold_bootstrap_supersedes_pre_watermark_table(spark, tmp_path):
+    """A gold table written before the watermark existed carries none:
+    the first refresh rebuilds it in full, dropping a day that silver
+    no longer holds."""
+    fixtures = write_fixtures(str(tmp_path / "sources"))
+    p = MobilityPipeline(spark, str(tmp_path / "lake"))
+    p.create_schemas()
+    p.ingest_bronze(fixtures)
+    p.ingest_bronze_trips(fixtures["trips_dir"], DATES[:2])
+    p.build_silver_dimensions()
+    p.process_days(DATES[:2])
+    stale = spark.sql(
+        "SELECT DATE'2000-01-01' AS partition_date, 1 AS origin_zone_id,"
+        " 5.0D AS total_trips, 1L AS n_rows"
+    )
+    p.lake.overwrite_partitions(
+        stale, "gold", "daily_zone_demand", partition_col="partition_date"
+    )
+
+    assert p.refresh_gold_daily_demand()["refreshed_days"] == -1.0
+    gold = _demand_rows(p, "gold", "daily_zone_demand")
+    assert gold == _demand_rows(p, "silver", "fact_mobility")
+    assert ("2000-01-01", 1) not in gold
+
+
+def test_gold_refresh_rebuilds_after_vacuum(pipeline):
+    """A silver compaction whose vacuum reclaims the files the refresh
+    window would diff: the refresh rebuilds gold instead of
+    skipping the rows the window deleted."""
+    p, s = pipeline, pipeline.spark
+    p.refresh_gold_daily_demand()  # bring gold current
+    fact = ("silver", "fact_mobility")
+    p.lake.delete_where(
+        s, *fact, F.col("origin_zone_id") == 1,
+        partition_col="partition_date",
+    )
+    # zero grace: maintenance has ALREADY reclaimed the window
+    p.lake.compact(
+        s, *fact, partition_col="partition_date", vacuum_grace_seconds=0
+    )
+    out = p.refresh_gold_daily_demand()
+    assert out["refreshed_days"] == -1.0
+    assert _demand_rows(p, "gold", "daily_zone_demand") == _demand_rows(
+        p, "silver", "fact_mobility"
+    )
+    assert not any(zone == 1 for _day, zone in _demand_rows(
+        p, "gold", "daily_zone_demand"
+    ))
+    assert p.refresh_gold_daily_demand()["refreshed_days"] == 0.0

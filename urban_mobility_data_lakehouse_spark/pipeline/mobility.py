@@ -57,7 +57,10 @@ from ..functions.spatial import (
     wkt_centroid_lon,
 )
 from ..sources.csv import read_bronze_csv
-from ..sources.lakehouse import Lakehouse, log_metric
+from ..sources.lakehouse import HistoryUnavailableError, Lakehouse
+from ..sources.lakehouse import log_metric, metric_rows
+from ..sources.matview import META_KEY, advance_watermark, read_window
+from ..sources.matview import supersede_partitions, watermark
 
 MADRID_TZ = "Europe/Madrid"
 
@@ -246,7 +249,8 @@ class MobilityPipeline:
         """Quality-log audits (:356-397) — same metric names, computed
         in ONE aggregation pass per table (3 jobs total, not ~6): the
         null counts and totals ride a single dimz agg, and the rent
-        coverage reuses that count instead of re-scanning."""
+        coverage reuses that count instead of re-scanning.  All six
+        metrics land in the quality log as ONE commit."""
         s, lake = self.spark, self.lake
         dimz_row = (
             lake.read(s, "silver", "dim_zones")
@@ -283,8 +287,7 @@ class MobilityPipeline:
             "rent_coverage_pct": rent_row["n_zones"]
             * 100.0 / max(dimz_row["total"], 1),
         }
-        for name, value in metrics.items():
-            log_metric(lake, s, "silver.dims", name, float(value))
+        log_metric(lake, s, "silver.dims", metrics)
         return metrics
 
     # ------------------------------------------------------------------
@@ -336,16 +339,11 @@ class MobilityPipeline:
             # cross-table transaction DuckLake offered, S11): a crash
             # can never leave a batch in the fact without its quality-
             # log record, or vice versa
-            from ..sources.lakehouse import QUALITY_LOG_SCHEMA
-
-            from ..sources.localrel import values_df
-
-            audit_row = values_df(
-                s,
-                [(None, "silver.fact_mobility", "batch_days_committed",
-                  float(len(dates)), ",".join(sorted(dates)))],
-                QUALITY_LOG_SCHEMA,
-            ).withColumn("check_timestamp", F.current_timestamp())
+            audit_row = metric_rows(
+                s, "silver.fact_mobility",
+                {"batch_days_committed": len(dates)},
+                ",".join(sorted(dates)),
+            )
             with lake.transaction() as txn:
                 txn.overwrite_partitions(
                     fact, "silver", "fact_mobility",
@@ -354,7 +352,8 @@ class MobilityPipeline:
                 txn.append(audit_row, "silver", "data_quality_log")
 
     def audit_batch(self, dates: list[str]) -> dict[str, float]:
-        """Batch audit (:584-634): rows, Σ trips, days, bad-row %."""
+        """Batch audit (:584-634): rows, Σ trips, days, bad-row %,
+        logged as ONE quality-log commit."""
         s, lake = self.spark, self.lake
         fact = lake.read(s, "silver", "fact_mobility")
         row = fact.agg(
@@ -376,8 +375,7 @@ class MobilityPipeline:
             "batch_days_loaded": float(row["days"]),
             "batch_bad_row_pct": 100.0 * row["bad"] / max(row["n"], 1),
         }
-        for name, value in metrics.items():
-            log_metric(lake, s, "silver.fact_mobility", name, value)
+        log_metric(lake, s, "silver.fact_mobility", metrics)
         return metrics
 
     # ------------------------------------------------------------------
@@ -395,21 +393,23 @@ class MobilityPipeline:
         log arithmetic + changed-slice diff, never a full scan), then
         recomputes and partition-merges ONLY those days.  At 100 TB a
         daily batch refreshes one day's partition regardless of table
-        history.  The sync cursor rides in the quality log, so the
-        refresh itself is idempotent and restartable.
+        history.  The sync cursor is the gold table's watermark
+        (`matview.META_KEY`): it commits atomically with the gold rows
+        it describes and is read back from the gold log, so the refresh
+        is idempotent and restartable.  A window that changes no day (a
+        silver compaction or schema change) advances it with a
+        metadata-only log line.  With no watermark (the first build, or
+        a gold table written before it) or a window that vacuum
+        reclaimed, gold is rebuilt in full, every day it held included.
         """
         s, lake = self.spark, self.lake
-        latest = len(lake.snapshots("silver", "fact_mobility")) - 1
-        cursor = None
-        try:
-            qlog = lake.read(s, "silver", "data_quality_log")
-            row = qlog.filter(
-                (F.col("table_name") == "gold.daily_zone_demand")
-                & (F.col("metric_name") == "synced_silver_version")
-            ).agg(F.max("metric_value")).collect()[0][0]
-            cursor = None if row is None else int(row)
-        except FileNotFoundError:
-            pass
+        fact_t = ("silver", "fact_mobility")
+        gold = ("gold", "daily_zone_demand")
+        latest = len(lake.snapshots(*fact_t)) - 1
+        cursor = watermark(lake, *gold)
+        meta = {META_KEY: latest}
+        if cursor is not None and cursor >= latest:
+            return {"silver_version": float(latest), "refreshed_days": 0.0}
 
         def demand(fact):
             return fact.groupBy("partition_date", "origin_zone_id").agg(
@@ -419,42 +419,37 @@ class MobilityPipeline:
                 F.count(F.lit(1)).alias("n_rows"),
             )
 
-        if cursor is None:
-            fact = lake.read(s, "silver", "fact_mobility")
+        days = None  # None: rebuild in full, see above
+        if cursor is not None:
+            try:
+                cdc = read_window(lake, s, fact_t, cursor, latest)
+                days = [] if cdc is None else [
+                    str(r[0])
+                    for r in cdc.select("partition_date").distinct().collect()
+                ]
+            except HistoryUnavailableError:
+                pass  # vacuum reclaimed the window
+        if days is None:
+            supersede_partitions(
+                lake, demand(lake.read(s, *fact_t)), gold,
+                "partition_date", meta,
+            )
+        elif days:
+            fact = lake.read(s, *fact_t).filter(
+                F.col("partition_date").cast("string").isin(days)
+            )
             lake.overwrite_partitions(
-                demand(fact), "gold", "daily_zone_demand",
+                demand(fact), *gold,
                 partition_col="partition_date",
+                partitions=days,
+                extra_meta=meta,
             )
-            days = -1.0  # bootstrap: full build
-        elif cursor >= latest:
-            days = 0.0
         else:
-            changed = lake.read_changes(
-                s, "silver", "fact_mobility", cursor, latest
-            )
-            changed_days = [
-                str(r[0])
-                for r in changed.select("partition_date")
-                .distinct()
-                .collect()
-            ]
-            if changed_days:
-                fact = lake.read(s, "silver", "fact_mobility").filter(
-                    F.col("partition_date")
-                    .cast("string")
-                    .isin(changed_days)
-                )
-                lake.overwrite_partitions(
-                    demand(fact), "gold", "daily_zone_demand",
-                    partition_col="partition_date",
-                    partitions=changed_days,
-                )
-            days = float(len(changed_days))
-        log_metric(
-            lake, s, "gold.daily_zone_demand",
-            "synced_silver_version", float(latest),
-        )
-        return {"silver_version": float(latest), "refreshed_days": days}
+            advance_watermark(lake, *gold, latest)
+        return {
+            "silver_version": float(latest),
+            "refreshed_days": -1.0 if days is None else float(len(days)),
+        }
 
     def build_gold_clustering(self, k: int = 3, seed: int = 42) -> None:
         """typical_day_by_cluster + dim_cluster_assignments (the latter
@@ -468,10 +463,10 @@ class MobilityPipeline:
                 F.col("period").alias("ts"), F.col("trips").alias("value")
             )
             assignments, gold = typical_day_clustering(events, k=k, seed=seed)
-            lake.overwrite(
+            lake.overwrite(  # ≤|days| VALUES rows: one file, one task
                 assignments.select(
                     F.col("event_date").alias("date"), "cluster_id"
-                ),
+                ).coalesce(1),
                 "gold", "dim_cluster_assignments",
             )
             lake.overwrite(

@@ -4449,30 +4449,28 @@ def temp_lakehouse(schema: str = "gold", prefix: str = "umdl_tmp_lake_"):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def log_metric(
-    lake: Lakehouse,
-    spark: SparkSession,
-    table_name: str,
-    metric_name: str,
-    metric_value: float,
-    notes: str = "",
-) -> None:
-    """Append one audit metric row (silver.data_quality_log,
-    mobility_ingestion_pipeline.py:76-80,362-369)."""
+def metric_rows(
+    spark: SparkSession, table_name: str, metrics: dict, notes: str = ""
+) -> DataFrame:
+    """`{metric_name: value}` as data_quality_log rows: one VALUES
+    relation in ONE partition (one file from one task, not a file per
+    VALUES slice), every row stamped with the same check_timestamp."""
     from .localrel import values_df
 
-    row = values_df(
-        spark,
-        [(None, table_name, metric_name, float(metric_value), notes)],
-        QUALITY_LOG_SCHEMA,
-    ).withColumn("check_timestamp", F.current_timestamp())
+    rows = [(None, table_name, k, float(v), notes) for k, v in metrics.items()]
+    return values_df(spark, rows, QUALITY_LOG_SCHEMA).coalesce(1).withColumn(
+        "check_timestamp", F.current_timestamp()
+    )
+
+
+def log_metric(
+    lake: Lakehouse, spark: SparkSession, table_name: str, metrics: dict
+) -> None:
+    """Append one audit to silver.data_quality_log: a row per
+    `{metric_name: value}` entry, all in ONE commit (the reference's
+    helper, mobility_ingestion_pipeline.py:76-80, commits per row)."""
     lake.append(
-        row.select(
-            "check_timestamp", "table_name", "metric_name",
-            "metric_value", "notes",
-        ),
-        "silver",
-        "data_quality_log",
+        metric_rows(spark, table_name, metrics), "silver", "data_quality_log"
     )
 
 

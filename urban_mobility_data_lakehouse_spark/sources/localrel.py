@@ -26,6 +26,7 @@ and a genuinely large local list is the caller's bug, not a literal.
 from __future__ import annotations
 
 import datetime
+import decimal
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,10 +38,10 @@ MAX_VALUES_ROWS = 50_000
 
 
 def _sql_str(v: str) -> str:
-    # Spark parses backslash escapes in string literals by default
-    # (spark.sql.parser.escapedStringLiterals=false), so escape both
-    # the backslash and the quote.
-    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    # UTF-8 bytes read the same under any
+    # spark.sql.parser.escapedStringLiterals setting and are out of
+    # reach of `${...}` variable substitution, unlike a quoted literal.
+    return f"CAST(X'{v.encode().hex()}' AS STRING)"
 
 
 def _sql_double(v: float) -> str:
@@ -100,6 +101,10 @@ def _lit(v, dt: T.DataType) -> str:
         raise TypeError("values_df: non-null timestamps take the "
                         "createDataFrame fallback (tz semantics)")
     if isinstance(dt, T.DecimalType):
+        # str() of these types is a plain number, never SQL text
+        _ck(v, (decimal.Decimal, int, float), dt)
+        if not decimal.Decimal(v).is_finite():
+            raise TypeError(f"values_df: {v!r} is not a finite decimal")
         return f"CAST('{v}' AS {dt.simpleString()})"
     if isinstance(dt, T.BinaryType):
         return "X'" + bytes(v).hex() + "'"

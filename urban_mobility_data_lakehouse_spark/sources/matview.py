@@ -66,6 +66,78 @@ META_KEY = "mv_base_version"
 ADVANCE_OP = "mv_advance"
 
 
+def watermark(lake: Lakehouse, schema: str, name: str) -> int | None:
+    """Newest `META_KEY` on the table's commit log — the base version a
+    derived table reflects — or None if no commit carries one."""
+    return max(
+        (
+            e[META_KEY]
+            for e in lake.snapshots(schema, name)
+            if e.get(META_KEY) is not None
+        ),
+        default=None,
+    )
+
+
+def advance_watermark(
+    lake: Lakehouse, schema: str, name: str, version: int
+) -> None:
+    """Move the table's watermark to `version` with a metadata-only
+    log line (no data written) — for a refresh window whose changes
+    left the derived table as it was."""
+    lake._log_snapshot(
+        lake._table_dir(schema, name), ADVANCE_OP, **{META_KEY: version}
+    )
+
+
+def read_window(
+    lake: Lakehouse,
+    spark: SparkSession,
+    base: tuple[str, str],
+    last: int,
+    current: int,
+) -> DataFrame | None:
+    """`base`'s row changes over (`last`, `current`], or None when no
+    slice's mapping changed in the window (metadata-only commits:
+    nothing to diff).  A window whose files vacuum reclaimed (e.g. a
+    default OPTIMIZE+VACUUM) raises HistoryUnavailableError — its
+    changes are unknowable, so the caller must rebuild."""
+    try:
+        return lake.read_changes(
+            spark, *base, from_version=last, to_version=current
+        )
+    except HistoryUnavailableError:
+        raise
+    except FileNotFoundError:
+        return None
+
+
+def supersede_partitions(
+    lake: Lakehouse,
+    state: DataFrame,
+    view: tuple[str, str],
+    partition_col: str,
+    meta: dict,
+) -> None:
+    """Replace the whole of a partitioned `view` with `state` in one
+    commit: every partition `state` holds AND every partition the view
+    holds now, which a df-derived partition set would leave stale when
+    its base rows vanished entirely."""
+    old = set(lake._manifest(*view)[0])
+    parts = None
+    if old:
+        parts = sorted(old | {
+            str(r[0])
+            for r in state.select(partition_col).distinct().collect()
+        })
+    lake.overwrite_partitions(
+        state, *view,
+        partition_col=partition_col,
+        partitions=parts,
+        extra_meta=meta,
+    )
+
+
 @dataclass
 class MaterializedView:
     """A grouped-aggregate view of `base`, stored as the lakehouse
@@ -110,12 +182,7 @@ class MaterializedView:
     def last_applied(self) -> int | None:
         """Newest base version reflected in the view (from the view's
         commit log), or None if the view has never been built."""
-        best = None
-        for e in self.lake.snapshots(*self.view):
-            v = e.get(META_KEY)
-            if v is not None and (best is None or v > best):
-                best = v
-        return best
+        return watermark(self.lake, *self.view)
 
     # -- aggregation (shared by full build and incremental recompute) ------
 
@@ -151,15 +218,12 @@ class MaterializedView:
             return {"strategy": "noop", "from": last, "to": last}
 
         try:
-            cdc = self.lake.read_changes(
-                spark, *self.base, from_version=last, to_version=current
-            )
+            cdc = read_window(self.lake, spark, self.base, last, current)
         except HistoryUnavailableError:
-            # vacuum reclaimed the CDC window (e.g. a default
-            # OPTIMIZE+VACUUM): the only honest refresh is a rebuild
-            return self._full_build(spark, current, supersede_existing=True)
-        except FileNotFoundError:
-            # no slice's mapping changed in the window (nothing to diff)
+            # vacuum reclaimed the CDC window: the only honest refresh
+            # is a rebuild
+            return self._full_build(spark, current)
+        if cdc is None:
             return self._advance(last, current)
         affected = (
             cdc.select(*self.group_by).distinct().persist()
@@ -240,39 +304,17 @@ class MaterializedView:
         finally:
             affected.unpersist()
 
-    def _full_build(
-        self,
-        spark: SparkSession,
-        current: int,
-        supersede_existing: bool = False,
-    ) -> dict:
+    def _full_build(self, spark: SparkSession, current: int) -> dict:
         state = self._aggregate(self.lake.read(spark, *self.base))
         meta = {META_KEY: current}
         if self.partition_col:
-            parts: list[str] | None = None
-            if supersede_existing:
-                # a rebuild over an EXISTING view must supersede
-                # partitions whose base groups vanished entirely, which
-                # a df-derived partition set would leave stale
-                new_parts = {
-                    str(r[0])
-                    for r in state.select(self.partition_col)
-                    .distinct()
-                    .collect()
-                }
-                old_map, _extra, _dvs = self.lake._manifest(*self.view)
-                parts = sorted(new_parts | set(old_map))
-            self.lake.overwrite_partitions(
-                state, *self.view,
-                partition_col=self.partition_col,
-                partitions=parts,
-                extra_meta=meta,
+            supersede_partitions(
+                self.lake, state, self.view, self.partition_col, meta
             )
         else:
             self.lake.overwrite(state, *self.view, extra_meta=meta)
         return {"strategy": "full", "from": None, "to": current}
 
     def _advance(self, last: int, current: int) -> dict:
-        path = self.lake._table_dir(*self.view)
-        self.lake._log_snapshot(path, ADVANCE_OP, **{META_KEY: current})
+        advance_watermark(self.lake, *self.view, current)
         return {"strategy": "advance", "from": last, "to": current}
