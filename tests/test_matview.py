@@ -3,7 +3,7 @@
 The invariant under test: after ANY sequence of base-table mutations
 (partition upserts, appends, MERGE, DELETE in both copy-on-write and
 merge-on-read modes, compactions), `refresh()` leaves the view equal to
-a from-scratch recompute — while touching only the affected groups and
+a from-scratch recompute — while touching only the affected
 partitions, with the watermark recorded atomically in the view's log.
 """
 
@@ -22,7 +22,7 @@ AGGS = {
     # decimal accumulation → order-independent, exact equality
     "total": "cast(sum(cast(v as decimal(25,6))) as double)",
     # max is NOT self-maintainable under deletes — proves the
-    # affected-group recompute strategy, not delta arithmetic
+    # affected-partition recompute strategy, not delta arithmetic
     "vmax": "max(v)",
 }
 
@@ -43,14 +43,14 @@ def _rows(spark, lo, hi):
     )
 
 
-def _mv(lake, partitioned=True):
+def _mv(lake):
     return MaterializedView(
         lake,
         base=("silver", "t"),
         view=("gold", "daily"),
         group_by=["day", "kind"],
         aggs=AGGS,
-        partition_col="day" if partitioned else None,
+        partition_col="day",
     )
 
 
@@ -59,17 +59,22 @@ _COLS = ["day", "kind", *AGGS]  # storage may reorder partition cols
 
 def _expect(spark, lake):
     return sorted(
-        tuple(r)
-        for r in lake.read(spark, "silver", "t")
-        .groupBy("day", "kind")
-        .agg(*[F.expr(e).alias(c) for c, e in AGGS.items()])
-        .select(*_COLS)
-        .collect()
+        (
+            tuple(r)
+            for r in lake.read(spark, "silver", "t")
+            .groupBy("day", "kind")
+            .agg(*[F.expr(e).alias(c) for c, e in AGGS.items()])
+            .select(*_COLS)
+            .collect()
+        ),
+        key=repr,  # a NULL day does not order against strings
     )
 
 
 def _got(spark, mv):
-    return sorted(tuple(r) for r in mv.read(spark).select(*_COLS).collect())
+    return sorted(
+        (tuple(r) for r in mv.read(spark).select(*_COLS).collect()), key=repr
+    )
 
 
 def test_full_build_then_noop(spark, lake):
@@ -97,6 +102,49 @@ def test_incremental_day_upsert_rewrites_only_affected(spark, lake):
     assert _got(spark, mv) == _expect(spark, lake)
     # the view commit rewrote exactly the affected partition
     assert lake.snapshots("gold", "daily")[-1]["partitions"] == ["1"]
+
+
+def test_incremental_refresh_never_reads_the_view(spark, lake, monkeypatch):
+    """An incremental refresh recomputes whole affected partitions from
+    the base: it never reads the view back, and its one commit replaces
+    exactly the partitions the CDC window touched."""
+    lake.overwrite_partitions(_rows(spark, 0, 300), "silver", "t", "day")
+    mv = _mv(lake)
+    mv.refresh(spark)
+    lake.delete_where(
+        spark, "silver", "t", F.col("id").isin(4, 10, 22),
+        partition_col="day",
+    )  # ids 4, 10, 22 all live in day 1
+    lake.merge_into(
+        spark, "silver", "t",
+        _rows(spark, 2000, 2001),  # id 2000 → day 2
+        key="id", partition_col="day",
+    )
+    window = lake.read_changes(
+        spark, "silver", "t", from_version=mv.last_applied()
+    )
+    touched = sorted({str(r[0]) for r in window.select("day").collect()})
+    assert touched == ["1", "2"]
+    n_view = len(lake.snapshots("gold", "daily"))
+
+    reads = []
+    real_read = Lakehouse.read
+
+    def spy(self, spark, schema, name, *args, **kwargs):
+        reads.append((schema, name))
+        return real_read(self, spark, schema, name, *args, **kwargs)
+
+    monkeypatch.setattr(Lakehouse, "read", spy)
+    out = mv.refresh(spark)
+    monkeypatch.undo()
+
+    assert out["strategy"] == "incremental"
+    assert out["affected_partitions"] == touched
+    assert reads and ("gold", "daily") not in reads
+    view_log = lake.snapshots("gold", "daily")
+    assert len(view_log) == n_view + 1
+    assert view_log[-1]["partitions"] == touched
+    assert _got(spark, mv) == _expect(spark, lake)
 
 
 def test_incremental_after_merge_delete_append(spark, lake):
@@ -213,15 +261,29 @@ def test_vacuumed_cdc_window_forces_full_rebuild(spark, lake):
     assert mv.refresh(spark)["strategy"] == "noop"
 
 
-def test_unpartitioned_view(spark, lake):
-    lake.overwrite_partitions(_rows(spark, 0, 120), "silver", "t", "day")
-    mv = _mv(lake, partitioned=False)
+def test_null_partition_is_refreshed(spark, lake):
+    """A NULL partition value is the view's null-partition token, not
+    the string 'None': an incremental refresh and a rebuild over an
+    existing view both replace the view's NULL partition."""
+    rows = _rows(spark, 0, 60).withColumn(
+        "day", F.when(F.col("day") != "0", F.col("day"))
+    )
+    lake.overwrite_partitions(rows, "silver", "t", "day")
+    mv = _mv(lake)
     mv.refresh(spark)
     lake.delete_where(
-        spark, "silver", "t", F.col("id") % 5 == 0, partition_col="day"
+        spark, "silver", "t", F.col("id") < 30, partition_col="day"
     )
-    out = mv.refresh(spark)
-    assert out["strategy"] == "incremental"
+    assert mv.refresh(spark)["strategy"] == "incremental"
+    assert _got(spark, mv) == _expect(spark, lake)
+    assert any(r[0] is None for r in _got(spark, mv))
+
+    lake.delete_where(
+        spark, "silver", "t", F.col("id") < 45, partition_col="day"
+    )
+    # zero grace: the refresh window is already reclaimed → rebuild
+    lake.compact(spark, "silver", "t", vacuum_grace_seconds=0)
+    assert mv.refresh(spark)["strategy"] == "full"
     assert _got(spark, mv) == _expect(spark, lake)
 
 
@@ -336,8 +398,13 @@ def test_bad_definitions_rejected(lake):
             lake, base=("silver", "t"), view=("gold", "g"),
             group_by=["day"], aggs={"n": "count(*)"}, partition_col="kind",
         )
+    with pytest.raises(ValueError, match="must be one of"):
+        MaterializedView(
+            lake, base=("silver", "t"), view=("gold", "g"),
+            group_by=["day"], aggs={"n": "count(*)"}, partition_col=None,
+        )
     with pytest.raises(ValueError, match="shadow"):
         MaterializedView(
             lake, base=("silver", "t"), view=("gold", "g"),
-            group_by=["day"], aggs={"day": "count(*)"},
+            group_by=["day"], aggs={"day": "count(*)"}, partition_col="day",
         )

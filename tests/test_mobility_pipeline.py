@@ -255,53 +255,6 @@ def test_incremental_gold_refresh(pipeline):
     assert gold_rows() == expected  # totals unchanged by the re-run
 
 
-def test_generic_matview_reproduces_pipeline_gold(pipeline):
-    """The generic MaterializedView, given the same definition, must
-    reproduce the pipeline's hand-built CDC gold refresh — evidence the
-    reusable machinery subsumes the bespoke one."""
-    from urban_mobility_data_lakehouse_spark.sources.matview import (
-        MaterializedView,
-    )
-
-    p, s = pipeline, pipeline.spark
-    p.refresh_gold_daily_demand()  # bring the hand-built gold current
-    mv = MaterializedView(
-        p.lake,
-        base=("silver", "fact_mobility"),
-        view=("gold", "daily_zone_demand_mv"),
-        group_by=["partition_date", "origin_zone_id"],
-        aggs={
-            "total_trips":
-                "cast(sum(cast(trips as decimal(25,6))) as double)",
-            "n_rows": "count(*)",
-        },
-        partition_col="partition_date",
-    )
-    mv.refresh(s)
-
-    def rows(schema, name):
-        return {
-            (str(r["partition_date"]), r["origin_zone_id"]):
-                (round(r["total_trips"], 6), r["n_rows"])
-            for r in p.lake.read(s, schema, name).collect()
-        }
-
-    assert rows("gold", "daily_zone_demand_mv") == rows(
-        "gold", "daily_zone_demand"
-    )
-
-    # mutate one silver day; both refresh paths stay in lockstep
-    p.process_days(DATES[1:2])
-    p.refresh_gold_daily_demand()
-    out = mv.refresh(s)
-    assert out["strategy"] == "incremental"
-    d = str(DATES[1])  # raw YYYYMMDD → the fact's ISO partition value
-    assert out["affected_partitions"] == [f"{d[:4]}-{d[4:6]}-{d[6:]}"]
-    assert rows("gold", "daily_zone_demand_mv") == rows(
-        "gold", "daily_zone_demand"
-    )
-
-
 def test_batch_bookkeeping_commits(pipeline, monkeypatch):
     """One daily batch costs 2 quality-log commits (the fact's audit row
     and one audit_batch commit) and 1 gold commit that carries the sync

@@ -1564,3 +1564,52 @@ def test_migrate_null_token_literal_form_and_refusals(spark, tmp_path):
         "history_guard_version": None,
     }
     assert lake.null_token("silver", "t_empty") == NULL_SENTINEL
+
+
+@pytest.mark.parametrize("write", ["overwrite", "overwrite_partitions"])
+def test_recreated_table_reads_its_new_schema(spark, tmp_path, write):
+    """Reads memoize each commit dir's parquet schema by dir path.  A
+    table dropped (its directory removed) and recreated at the same
+    path restarts its versions at 0, but every commit dir name carries
+    a writer-unique suffix, so the recreated table's reads never hit
+    the dropped table's memo entries: they return the new schema and
+    rows."""
+    import shutil
+
+    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
+        Lakehouse,
+    )
+
+    lake = Lakehouse(str(tmp_path / "lake"))
+    lake.create_schemas("silver")
+
+    def commit(df):
+        if write == "overwrite":
+            lake.overwrite(df, "silver", "t")
+        else:
+            lake.overwrite_partitions(df, "silver", "t", partition_col="p")
+
+    def data_dirs():
+        return sorted(
+            os.listdir(os.path.join(lake._table_dir("silver", "t"), "_data"))
+        )
+
+    commit(spark.sql("SELECT 1 AS id, 'a' AS p, 1.5D AS v"))
+    first = lake.read(spark, "silver", "t")
+    assert dict(first.dtypes)["v"] == "double"
+    assert first.count() == 1
+    old_dirs = data_dirs()
+
+    shutil.rmtree(lake._table_dir("silver", "t"))
+    commit(spark.sql(
+        "SELECT 2 AS id, 'a' AS p, 'x' AS v, 7L AS extra"
+        " UNION ALL SELECT 3, 'b', 'y', 8L"
+    ))
+    assert lake.snapshots("silver", "t")[-1]["version"] == 0
+    assert not set(data_dirs()) & set(old_dirs)
+    again = lake.read(spark, "silver", "t")
+    assert dict(again.dtypes)["v"] == "string"
+    assert "extra" in again.columns
+    assert sorted(
+        (r["id"], r["p"], r["v"], r["extra"]) for r in again.collect()
+    ) == [(2, "a", "x", 7), (3, "b", "y", 8)]

@@ -119,34 +119,6 @@ def _banded_sides(documents: DataFrame):
     return a, b
 
 
-def near_duplicate_candidates(
-    documents: DataFrame, hamming_max: int = HAMMING_MAX
-) -> DataFrame:
-    """Near-duplicate pairs: agree on ≥1 of 4 15-bit bands AND within
-    `hamming_max` bit flips (the distance the banding is designed to
-    catch — pigeonhole: ≤3 flips leave ≥1 band intact).
-
-    The Hamming post-filter is what keeps this linear-ish in practice:
-    band buckets are only 15 bits, so templated corpora produce hot
-    buckets whose pair lists are quadratic in bucket size (observed:
-    one 1.6k-doc bucket → 1.3M raw pairs at sf0.1).  The XOR+bit_count
-    comparison is row-local codegen, so the quadratic part stays cheap
-    and everything downstream (distinct, sort, result transfer) only
-    sees true near-dups.  At 100 TB, additionally cap bucket size (skip
-    or sub-split buckets past ~10k members — a bucket that large is a
-    template family, not a dedup candidate set)."""
-    a, b = _banded_sides(documents)
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= hamming_max)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 def dedup_map(
     documents: DataFrame, hamming_max: int = HAMMING_MAX
 ) -> DataFrame:

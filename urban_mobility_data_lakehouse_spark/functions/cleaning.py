@@ -5,13 +5,12 @@ The reference's characteristic dirty-data repairs
   - Spanish decimal format "1.200,50" → 1200.50
   - the "Zero Trap": "50.0" strings that must land as integer 50
   - header rows embedded mid-data, 'NA' literals, alphabetic garbage
-  - BOM-prefixed column names, padded codes, trailing whitespace
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 def spanish_number(col: Column) -> Column:
@@ -46,21 +45,6 @@ def is_garbage_numeric(col: Column) -> Column:
         | (F.upper(F.trim(col)) == "NA")
         | col.rlike("[a-zA-Z]")
     )
-
-
-def clean_zone_code(col: Column) -> Column:
-    """TRIM + keep leading zeros (codes are identifiers, not numbers)."""
-    return F.trim(col)
-
-
-def strip_bom_columns(df: DataFrame) -> DataFrame:
-    """Remove UTF-8 BOM / stray whitespace from column names (the INE CSV
-    repair at mobility_ingestion_pipeline.py:155-171)."""
-    for c in df.columns:
-        fixed = c.replace("﻿", "").strip()
-        if fixed != c:
-            df = df.withColumnRenamed(c, fixed)
-    return df
 
 
 def code_name_split(col: Column) -> tuple[Column, Column]:

@@ -2,7 +2,7 @@
 
 The mobility pipeline's temporal semantics: YYYYMMDD strings → dates,
 date+hour → Europe/Madrid instants (DST-correct), holiday year-shift via
-make_date, ISO weekday classification.
+make_date, inclusive date spines.
 """
 
 from __future__ import annotations
@@ -49,17 +49,6 @@ def force_year(date_col: Column, year: int) -> Column:
     return F.make_date(
         F.lit(year), F.month(date_col), F.dayofmonth(date_col)
     )
-
-
-def is_weekend(date_col: Column) -> Column:
-    """EXTRACT(ISODOW) >= 6 (1_sprint1...ipynb:3491-3492): Spark weekday()
-    is Monday=0 … Sunday=6, so ISODOW>=6 ⇔ weekday()>=5."""
-    return F.weekday(date_col) >= 5
-
-
-def day_name(date_col: Column) -> Column:
-    """dayname(date) (mobility_ingestion_pipeline.py:738)."""
-    return F.date_format(date_col, "EEEE")
 
 
 def date_sequence(start: str, end: str) -> Column:

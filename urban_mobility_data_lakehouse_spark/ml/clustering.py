@@ -403,29 +403,3 @@ def hourly_totals_exact(events: DataFrame) -> DataFrame:
         F.to_date("ts").alias("event_date"),
         F.hour("ts").alias("hour"),
     ).agg(dsum("value").alias("total_trips"))
-
-
-def cluster_calendar_contingency(
-    assignments: DataFrame, holidays: DataFrame | None = None
-) -> DataFrame:
-    """U5 semantic validation: cluster × day-type contingency
-    (1_sprint3_schema_reprototyping.ipynb:5691 cell 77)."""
-    day_type = (
-        F.when(F.weekday("event_date") >= 5, "weekend").otherwise("weekday")
-    )
-    df = assignments.withColumn("day_type", day_type)
-    if holidays is not None:
-        df = df.join(
-            F.broadcast(holidays.select(F.col("holiday_date").alias("event_date"))
-                        .withColumn("is_holiday", F.lit(True))),
-            "event_date",
-            "left",
-        ).withColumn(
-            "day_type",
-            F.when(F.col("is_holiday"), "holiday").otherwise(F.col("day_type")),
-        )
-    return (
-        df.groupBy("cluster_id", "day_type")
-        .agg(F.count(F.lit(1)).alias("n_days"))
-        .orderBy("cluster_id", "day_type")
-    )

@@ -26,13 +26,14 @@ MICRO = 1_000_000
 
 def micro_units(col: Column | str) -> Column:
     """A value as exact integer micro-units (BIGINT): round(v·10⁶)
-    half-up.  For ≤6-dp inputs with |v| < 2⁵³/10⁶ ≈ 9.0·10⁹ this equals
-    the unscaled value of CAST(v AS DECIMAL(25,6)) — both round the
-    double's shortest decimal representation half-up at the 6th place
-    (verified row-exhaustively at every SF for every dsum consumer
-    column, r13).  NaN/±Infinity map to NULL exactly as the decimal
-    cast did, so a poisoned row is ignored by SUM rather than summed
-    as 0 / Long.MAX."""
+    half-up.  For ≤6-dp inputs with |v| < 2⁵¹/10⁶ ≈ 2.25·10⁹ this
+    equals the unscaled value of CAST(v AS DECIMAL(25,6)) — both round
+    the double's shortest decimal representation half-up at the 6th
+    place (verified row-exhaustively at every SF for every dsum
+    consumer column, r13); past 2⁵¹ the product v·10⁶ has a ulp of
+    0.5, so the half-up rounding can drift from the decimal cast.
+    NaN/±Infinity map to NULL exactly as the decimal cast did, so a
+    poisoned row is ignored by SUM rather than summed as 0 / Long.MAX."""
     c = F.col(col) if isinstance(col, str) else col
     d = c.cast("double")
     return F.when(
@@ -65,7 +66,7 @@ def dsum(col: Column | str) -> Column:
     unscaled long for ≤6-dp inputs (row-exhaustively verified per SF),
     integer sums are order-free, and `micro_to_double` finishes with one
     exact decimal division per group.  Scale bounds, disclosed: the
-    per-ROW micro/decimal equivalence needs |v| < 2⁵³/10⁶ ≈ 9.0·10⁹
+    per-ROW micro/decimal equivalence needs |v| < 2⁵¹/10⁶ ≈ 2.25·10⁹
     (beyond it the long diverges by ulps from the decimal cast), and
     the BIGINT accumulator holds Σ|v| up to 2⁶³/10⁶ ≈ 9.2·10¹² in
     value units — past THAT a non-ANSI sum(long) silently wraps where
@@ -417,17 +418,6 @@ def compound_key_join(orders: DataFrame) -> DataFrame:
     )
 
 
-def cross_join_bridge(region: DataFrame, orders: DataFrame) -> DataFrame:
-    """J5: deliberate small×small cross join (zone × holiday dense bridge,
-    mobility_ingestion_pipeline.py:345-347)."""
-    priorities = orders.select("o_orderpriority").distinct()
-    return (
-        region.crossJoin(priorities)
-        .select("r_name", "o_orderpriority")
-        .orderBy("r_name", "o_orderpriority")
-    )
-
-
 def anti_join_orphans(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """J6: left-anti referential-integrity check (orphan audit,
     1_sprint3...ipynb:4003 cell 53).  Scale: broadcast the distinct key
@@ -543,26 +533,6 @@ def filter_suite(part: DataFrame) -> DataFrame:
         )
         .filter(F.col("fee") > 10.0)
         .orderBy("p_partkey")
-    )
-
-
-def between_and_in(orders: DataFrame) -> DataFrame:
-    """P5 BETWEEN on dates + P6 IN-list, aggregated (the consultation
-    DAG's date-range filters, mobility_consultations.py:52,65)."""
-    return (
-        orders.filter(
-            F.col("o_orderdate").between(
-                F.lit("1996-01-01").cast("timestamp"),
-                F.lit("1997-12-31").cast("timestamp"),
-            )
-            & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        )
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(dsum("o_totalprice"), 2).alias("total_price"),
-        )
-        .orderBy("o_orderpriority")
     )
 
 

@@ -57,10 +57,8 @@ from ..functions.spatial import (
     wkt_centroid_lon,
 )
 from ..sources.csv import read_bronze_csv
-from ..sources.lakehouse import HistoryUnavailableError, Lakehouse
-from ..sources.lakehouse import log_metric, metric_rows
-from ..sources.matview import META_KEY, advance_watermark, read_window
-from ..sources.matview import supersede_partitions, watermark
+from ..sources.lakehouse import Lakehouse, log_metric, metric_rows
+from ..sources.matview import MaterializedView
 
 MADRID_TZ = "Europe/Madrid"
 
@@ -383,73 +381,34 @@ class MobilityPipeline:
     # ------------------------------------------------------------------
 
     def refresh_gold_daily_demand(self) -> dict[str, float]:
-        """Incremental gold refresh driven by the change feed (beyond
-        reference — the reference rebuilds gold tables from the full
-        fact every run).
+        """gold.daily_zone_demand = per-(day, origin zone) trip totals,
+        partitioned by day, kept current from the silver fact's change
+        feed by a `MaterializedView` (beyond reference — the reference
+        rebuilds gold tables from the full fact every run): a daily
+        batch recomputes only the days it changed, and the sync cursor
+        commits with the gold rows it describes.
 
-        gold.daily_zone_demand = per-(day, origin zone) trip totals,
-        partitioned by day.  Each call reads the silver fact's CDC feed
-        since the last synced version to learn WHICH days changed (pure
-        log arithmetic + changed-slice diff, never a full scan), then
-        recomputes and partition-merges ONLY those days.  At 100 TB a
-        daily batch refreshes one day's partition regardless of table
-        history.  The sync cursor is the gold table's watermark
-        (`matview.META_KEY`): it commits atomically with the gold rows
-        it describes and is read back from the gold log, so the refresh
-        is idempotent and restartable.  A window that changes no day (a
-        silver compaction or schema change) advances it with a
-        metadata-only log line.  With no watermark (the first build, or
-        a gold table written before it) or a window that vacuum
-        reclaimed, gold is rebuilt in full, every day it held included.
-        """
-        s, lake = self.spark, self.lake
-        fact_t = ("silver", "fact_mobility")
-        gold = ("gold", "daily_zone_demand")
-        latest = len(lake.snapshots(*fact_t)) - 1
-        cursor = watermark(lake, *gold)
-        meta = {META_KEY: latest}
-        if cursor is not None and cursor >= latest:
-            return {"silver_version": float(latest), "refreshed_days": 0.0}
-
-        def demand(fact):
-            return fact.groupBy("partition_date", "origin_zone_id").agg(
-                F.sum(F.col("trips").cast("decimal(25,6)"))
-                .cast("double")
-                .alias("total_trips"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-
-        days = None  # None: rebuild in full, see above
-        if cursor is not None:
-            try:
-                cdc = read_window(lake, s, fact_t, cursor, latest)
-                days = [] if cdc is None else [
-                    str(r[0])
-                    for r in cdc.select("partition_date").distinct().collect()
-                ]
-            except HistoryUnavailableError:
-                pass  # vacuum reclaimed the window
-        if days is None:
-            supersede_partitions(
-                lake, demand(lake.read(s, *fact_t)), gold,
-                "partition_date", meta,
-            )
-        elif days:
-            fact = lake.read(s, *fact_t).filter(
-                F.col("partition_date").cast("string").isin(days)
-            )
-            lake.overwrite_partitions(
-                demand(fact), *gold,
-                partition_col="partition_date",
-                partitions=days,
-                extra_meta=meta,
-            )
-        else:
-            advance_watermark(lake, *gold, latest)
-        return {
-            "silver_version": float(latest),
-            "refreshed_days": -1.0 if days is None else float(len(days)),
-        }
+        Returns the synced silver version and the days rewritten: -1
+        for a full rebuild (first build, a gold table without a
+        watermark, or a vacuum-reclaimed window), 0 when nothing
+        changed or the window changed no row."""
+        out = MaterializedView(
+            self.lake,
+            base=("silver", "fact_mobility"),
+            view=("gold", "daily_zone_demand"),
+            group_by=["partition_date", "origin_zone_id"],
+            aggs={
+                "total_trips":
+                    "cast(sum(cast(trips as decimal(25,6))) as double)",
+                "n_rows": "count(*)",
+            },
+            partition_col="partition_date",
+        ).refresh(self.spark)
+        days = {  # noop / advance: nothing rewritten
+            "full": -1.0,
+            "incremental": float(len(out.get("affected_partitions", ()))),
+        }.get(out["strategy"], 0.0)
+        return {"silver_version": float(out["to"]), "refreshed_days": days}
 
     def build_gold_clustering(self, k: int = 3, seed: int = 42) -> None:
         """typical_day_by_cluster + dim_cluster_assignments (the latter

@@ -1,10 +1,8 @@
 """Pipeline orchestration: the reference's Airflow DAG wiring
 (mobility_ingestion_pipeline.py:855-888, `t_schemas >> [t_geo, t_csvs]
 >> t_dims >> t_audit_dims >> t_init_facts >> t_workers >>
-t_audit_facts >> t_gold_cluster >> t_gold_gaps`) as (a) a plain
-callable running the same order, and (b) an optional Airflow TaskFlow
-factory when airflow is installed (it is not in this environment —
-import-gated, same contract).
+t_audit_facts >> t_gold_cluster >> t_gold_gaps`) as a plain callable
+running the same order.
 
 Each task remains an independent method over the shared lakehouse (the
 reference's tasks share only the DuckLake catalog, SURVEY §3.1), so
@@ -51,31 +49,3 @@ def run_pipeline(
     p.build_gold_clustering(k=k, seed=seed)
     p.build_gold_gaps()
     return {"dimensions": dim_audit, "batch": batch_audit}
-
-
-def build_airflow_dag(lake_root: str, fixtures: dict[str, str]):
-    """Airflow TaskFlow adapter (parity with the reference's DAG
-    factory).  Raises ImportError with guidance when airflow isn't
-    installed — the plain `run_pipeline` covers every capability."""
-    try:
-        from airflow.decorators import dag, task  # type: ignore
-    except ImportError as e:  # pragma: no cover - airflow not shipped
-        raise ImportError(
-            "apache-airflow is not installed; use run_pipeline(...) "
-            "directly or any scheduler calling TASK_ORDER"
-        ) from e
-    # pragma: no cover — exercised only where airflow exists
-    import pendulum  # type: ignore
-
-    @dag(schedule=None, start_date=pendulum.datetime(2023, 1, 1), params={})
-    def mobility_unified_pipeline():
-        @task
-        def full_run(**ctx):
-            from ..session import get_spark
-
-            dates = ctx["params"].get("dates", [])
-            return run_pipeline(get_spark(), lake_root, fixtures, dates)
-
-        full_run()
-
-    return mobility_unified_pipeline()

@@ -291,7 +291,7 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver.t (group p → decimal-exact sum(v2), count) is FULL-built
     right after the rename, then incrementally refreshed ONCE after
     the update/delete/widen/append — the refresh reads the CDC feed
-    and recomputes only the affected groups (`sources/matview.py`;
+    and recomputes only the affected partitions (`sources/matview.py`;
     the builder asserts the incremental strategy actually ran, so a
     silent full-rebuild fallback fails the row rather than passing by
     accident).  The oracle aggregates the final state from scratch,

@@ -4,8 +4,8 @@ The reference renders cluster hourly profiles and consultation charts
 (mobility_ingestion_pipeline.py:776-799; mobility_consultations.py:
 97-118).  Chart rendering is driver-side by nature — the engine's
 contract is that ONLY the final small aggregate crosses `.toPandas()`.
-matplotlib is an optional dependency (not shipped in this
-environment); both functions degrade to a clear ImportError.
+matplotlib is an optional dependency; without it the chart function
+raises a clear ImportError.
 """
 
 from __future__ import annotations
@@ -38,19 +38,6 @@ def plot_cluster_profiles(gold: DataFrame, out_path: str) -> str:
         grp = grp.sort_values("hour")
         ax.plot(grp["hour"], grp["avg_trips"], label=f"Cluster {cid}")
     ax.set_xlabel("hour"), ax.set_ylabel("avg trips"), ax.legend()
-    fig.savefig(out_path, dpi=100, bbox_inches="tight")
-    plt.close(fig)
-    return out_path
-
-
-def plot_hourly_activity(profile: DataFrame, out_path: str) -> str:
-    """Bar chart of an hourly activity profile (consultation output:
-    columns hour, total_trips)."""
-    plt = _require_matplotlib()
-    pdf = profile.select("hour", "total_trips").toPandas().sort_values("hour")
-    fig, ax = plt.subplots(figsize=(10, 5))
-    ax.bar(pdf["hour"], pdf["total_trips"])
-    ax.set_xlabel("hour"), ax.set_ylabel("total trips")
     fig.savefig(out_path, dpi=100, bbox_inches="tight")
     plt.close(fig)
     return out_path

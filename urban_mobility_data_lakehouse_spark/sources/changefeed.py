@@ -31,6 +31,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .lakehouse import Lakehouse
+from .matview import advance_watermark, read_window, watermark
+
+ADVANCE_OP = "cdc_advance"
 
 
 @dataclass
@@ -53,12 +56,13 @@ class ChangeFeedPipe:
         return f"cdc_{self.source[0]}_{self.source[1]}_version"
 
     def last_applied(self) -> int | None:
-        best = None
-        for e in self.lake.snapshots(*self.sink):
-            v = e.get(self._meta_key)
-            if v is not None and (best is None or v > best):
-                best = v
-        return best
+        return watermark(self.lake, *self.sink, key=self._meta_key)
+
+    def _advance(self, version: int) -> None:
+        advance_watermark(
+            self.lake, *self.sink, version,
+            key=self._meta_key, op=ADVANCE_OP,
+        )
 
     def poll(self, spark: SparkSession) -> dict:
         """Consume everything new; returns {status, from, to, rows}."""
@@ -81,35 +85,19 @@ class ChangeFeedPipe:
             except FileNotFoundError:
                 # source has commits but zero live rows: the snapshot
                 # is empty — record the offset, write no data
-                self.lake._log_snapshot(
-                    self.lake._table_dir(*self.sink),
-                    "cdc_advance",
-                    **{self._meta_key: current},
-                )
+                self._advance(current)
                 return {
                     "status": "initial", "from": None, "to": current,
                     "rows": 0,
                 }
         else:
-            try:
-                cdc = self.lake.read_changes(
-                    spark, *self.source,
-                    from_version=last, to_version=current,
-                )
-            except FileNotFoundError as err:
-                # HistoryUnavailableError (vacuumed window) also lands
-                # here: an append log can't be silently rebuilt — the
-                # caller must decide (unlike a materialized view, whose
-                # state is derivable).  Plain empty windows advance.
-                from .lakehouse import HistoryUnavailableError
-
-                if isinstance(err, HistoryUnavailableError):
-                    raise
-                self.lake._log_snapshot(
-                    self.lake._table_dir(*self.sink),
-                    "cdc_advance",
-                    **{self._meta_key: current},
-                )
+            # a vacuumed window raises HistoryUnavailableError: an
+            # append log can't be silently rebuilt — the caller must
+            # decide (unlike a materialized view, whose state is
+            # derivable).  Metadata-only windows advance.
+            cdc = read_window(self.lake, spark, self.source, last, current)
+            if cdc is None:
+                self._advance(current)
                 return {
                     "status": "advance", "from": last, "to": current,
                     "rows": 0,

@@ -5,9 +5,9 @@ pipeline run (`airflow/dags/mobility_ingestion_pipeline.py` gold tasks
 recompute each `CREATE OR REPLACE TABLE gold.* AS SELECT … GROUP BY`).
 That is fine at GB scale and catastrophic at 100 TB: a one-day upsert
 should never cost a full-table aggregation.  This module is the
-Spark-first replacement — a grouped-aggregate Gold table maintained
-from the base table's change-data feed with work proportional to the
-CHANGED GROUPS, never the table:
+Spark-first replacement — a grouped-aggregate Gold table, partitioned
+by one of its group keys, maintained from the base table's change-data
+feed with work proportional to the CHANGED PARTITIONS, never the table:
 
     mv = MaterializedView(
         lake, base=("silver", "trips"), view=("gold", "daily_totals"),
@@ -17,28 +17,27 @@ CHANGED GROUPS, never the table:
     )
     mv.refresh(spark)        # full build the first time
     …mutate silver.trips…
-    mv.refresh(spark)        # reads CDC, recomputes only touched groups
+    mv.refresh(spark)        # reads CDC, recomputes only touched days
 
-Refresh algorithm (the affected-group recompute strategy):
+Refresh algorithm (the affected-partition recompute strategy):
 
 1. `read_changes(last_applied, current)` yields every inserted/deleted
    row since the last refresh — by construction only slices whose
    manifest mapping changed are diffed, so a daily upsert diffs one
    partition.
-2. The distinct group keys of those rows are the AFFECTED GROUPS —
-   bounded by the change volume, not the table.
-3. Those groups are recomputed from the CURRENT base state (a
-   partition-pruned scan when the grouping includes the base partition
-   column — the steady-state case) via a broadcast semi-join, giving
-   exact aggregates under inserts, updates AND deletes — no
-   restriction to self-maintainable (algebraic) aggregates, and a
-   group whose rows all vanished disappears from the view.
-4. The view's affected partitions are rewritten in ONE commit
-   (unaffected groups carried over, recomputed groups substituted)
-   whose log line records `mv_base_version` — the watermark is atomic
-   with the data it reflects, so a crashed refresh either fully
-   happened or fully didn't, and re-running it is a no-op or an
-   idempotent recompute of the same groups.  No sidecar state files.
+2. The distinct `partition_col` values of those rows are the AFFECTED
+   PARTITIONS — bounded by the change volume, not the table.
+3. Each affected partition is re-aggregated whole from the CURRENT
+   base state, read partition-pruned.  `partition_col` is a group key,
+   so every group lies in one partition and the recompute is exact
+   under inserts, updates AND deletes — no restriction to
+   self-maintainable (algebraic) aggregates, and a group whose rows all
+   vanished disappears from the view.
+4. The affected partitions are replaced in ONE commit whose log line
+   records `mv_base_version` — the watermark is atomic with the data
+   it reflects, so a crashed refresh either fully happened or fully
+   didn't, and re-running it is a no-op or an idempotent recompute of
+   the same partitions.  No sidecar state files.
 
 Exactly-once without a scheduler: the watermark lives in the view's
 own commit log, concurrency is inherited from the lakehouse's
@@ -57,6 +56,7 @@ from .lakehouse import (
     ConcurrentWriteError,
     HistoryUnavailableError,
     Lakehouse,
+    _token_of,
 )
 
 META_KEY = "mv_base_version"
@@ -66,28 +66,29 @@ META_KEY = "mv_base_version"
 ADVANCE_OP = "mv_advance"
 
 
-def watermark(lake: Lakehouse, schema: str, name: str) -> int | None:
-    """Newest `META_KEY` on the table's commit log — the base version a
+def watermark(
+    lake: Lakehouse, schema: str, name: str, key: str = META_KEY
+) -> int | None:
+    """Newest `key` on the table's commit log — the source version a
     derived table reflects — or None if no commit carries one."""
     return max(
         (
-            e[META_KEY]
+            e[key]
             for e in lake.snapshots(schema, name)
-            if e.get(META_KEY) is not None
+            if e.get(key) is not None
         ),
         default=None,
     )
 
 
 def advance_watermark(
-    lake: Lakehouse, schema: str, name: str, version: int
+    lake: Lakehouse, schema: str, name: str, version: int,
+    key: str = META_KEY, op: str = ADVANCE_OP,
 ) -> None:
-    """Move the table's watermark to `version` with a metadata-only
-    log line (no data written) — for a refresh window whose changes
-    left the derived table as it was."""
-    lake._log_snapshot(
-        lake._table_dir(schema, name), ADVANCE_OP, **{META_KEY: version}
-    )
+    """Move the table's watermark `key` to `version` with a
+    metadata-only `op` log line (no data written) — for a window whose
+    changes left the derived table as it was."""
+    lake._log_snapshot(lake._table_dir(schema, name), op, **{key: version})
 
 
 def read_window(
@@ -101,7 +102,7 @@ def read_window(
     slice's mapping changed in the window (metadata-only commits:
     nothing to diff).  A window whose files vacuum reclaimed (e.g. a
     default OPTIMIZE+VACUUM) raises HistoryUnavailableError — its
-    changes are unknowable, so the caller must rebuild."""
+    changes are unknowable, so the caller must rebuild or refuse."""
     try:
         return lake.read_changes(
             spark, *base, from_version=last, to_version=current
@@ -112,43 +113,15 @@ def read_window(
         return None
 
 
-def supersede_partitions(
-    lake: Lakehouse,
-    state: DataFrame,
-    view: tuple[str, str],
-    partition_col: str,
-    meta: dict,
-) -> None:
-    """Replace the whole of a partitioned `view` with `state` in one
-    commit: every partition `state` holds AND every partition the view
-    holds now, which a df-derived partition set would leave stale when
-    its base rows vanished entirely."""
-    old = set(lake._manifest(*view)[0])
-    parts = None
-    if old:
-        parts = sorted(old | {
-            str(r[0])
-            for r in state.select(partition_col).distinct().collect()
-        })
-    lake.overwrite_partitions(
-        state, *view,
-        partition_col=partition_col,
-        partitions=parts,
-        extra_meta=meta,
-    )
-
-
 @dataclass
 class MaterializedView:
     """A grouped-aggregate view of `base`, stored as the lakehouse
-    table `view`, refreshed incrementally from the base's CDC feed.
+    table `view` partitioned by `partition_col` (one of `group_by`),
+    refreshed incrementally from the base's CDC feed.
 
     `aggs` maps output column name → SQL aggregate expression (evaluated
     per group); identical expressions drive the initial full build and
     every incremental recompute, so the two paths agree by construction.
-    `partition_col` (optional) must be one of `group_by`; when set, the
-    view is stored partitioned by it and refreshes rewrite only the
-    affected partitions.
     """
 
     lake: Lakehouse
@@ -156,11 +129,11 @@ class MaterializedView:
     view: tuple[str, str]
     group_by: list[str]
     aggs: dict[str, str]
-    partition_col: str | None = None
+    partition_col: str
     max_retries: int = field(default=3)
 
     def __post_init__(self) -> None:
-        if self.partition_col and self.partition_col not in self.group_by:
+        if self.partition_col not in self.group_by:
             raise ValueError(
                 f"partition_col {self.partition_col!r} must be one of "
                 f"group_by {self.group_by}"
@@ -186,6 +159,17 @@ class MaterializedView:
 
     # -- aggregation (shared by full build and incremental recompute) ------
 
+    def _values(self, rows: DataFrame) -> list:
+        return [
+            r[0] for r in rows.select(self.partition_col).distinct().collect()
+        ]
+
+    def _tokens(self, table: tuple[str, str], values: list) -> list[str]:
+        """`partition_col` values as `table`'s canonical partition
+        tokens (a NULL value is the table's null token, not 'None')."""
+        nt = self.lake.null_token(*table)
+        return sorted({_token_of(v, nt) for v in values})
+
     def _aggregate(self, rows: DataFrame) -> DataFrame:
         return rows.groupBy(*self.group_by).agg(
             *[F.expr(expr).alias(name) for name, expr in self.aggs.items()]
@@ -197,10 +181,11 @@ class MaterializedView:
     # -- refresh -----------------------------------------------------------
 
     def refresh(self, spark: SparkSession) -> dict:
-        """Bring the view up to the base table's current version.
-        Returns a summary dict: strategy ('noop' | 'full' |
-        'incremental' | 'advance'), the applied version range, and the
-        affected-group count for incremental refreshes."""
+        """Bring the view up to the base table's current version by
+        recomputing the partitions the CDC window touched (see the
+        module docstring).  Returns a summary dict: strategy ('noop' |
+        'full' | 'incremental' | 'advance'), the applied version range,
+        and the rewritten partitions for incremental refreshes."""
         for attempt in range(self.max_retries + 1):
             try:
                 return self._refresh_once(spark)
@@ -223,98 +208,51 @@ class MaterializedView:
             # vacuum reclaimed the CDC window: the only honest refresh
             # is a rebuild
             return self._full_build(spark, current)
-        if cdc is None:
-            return self._advance(last, current)
-        affected = (
-            cdc.select(*self.group_by).distinct().persist()
-        )
+        values = [] if cdc is None else self._values(cdc)
+        if not values:
+            # metadata-only commits, or row changes that cancelled out
+            # (a compaction): advance the watermark, touch no data
+            advance_watermark(self.lake, *self.view, current)
+            return {"strategy": "advance", "from": last, "to": current}
         try:
-            n_groups = affected.count()
-            if n_groups == 0:
-                # commits happened but net row changes cancelled out
-                # (e.g. compaction): advance the watermark, touch no data
-                return self._advance(last, current)
-
-            # either side may be EMPTY (every partition superseded to
-            # zero rows reads as no-data): an empty base recomputes
-            # affected groups to nothing; an empty view carries nothing
-            try:
-                mv_now = self.read(spark)
-            except FileNotFoundError:
-                mv_now = None
-            try:
-                base_now = self.lake.read(spark, *self.base)
-            except FileNotFoundError:
-                base_now = None
-            parts: list[str] | None = None
-            if self.partition_col:
-                parts = sorted(
-                    str(r[0])
-                    for r in affected.select(self.partition_col)
-                    .distinct()
-                    .collect()
-                )
-                pcol = F.col(self.partition_col).cast("string")
-                if base_now is not None:
-                    base_now = base_now.filter(pcol.isin(parts))
-                if mv_now is not None:
-                    mv_now = mv_now.filter(pcol.isin(parts))
-
-            carried = (
-                mv_now.join(F.broadcast(affected), self.group_by, "left_anti")
-                if mv_now is not None
-                else None
+            rows = self.lake.read(
+                spark, *self.base,
+                partition_values=self._tokens(self.base, values),
             )
-            recomputed = (
-                self._aggregate(
-                    base_now.join(
-                        F.broadcast(affected), self.group_by, "left_semi"
-                    )
-                )
-                if base_now is not None
-                else None
-            )
-            if carried is None and recomputed is None:
-                # nothing live anywhere: the affected groups are
-                # already absent from the (empty) view — just advance
-                return self._advance(last, current)
-            if carried is None:
-                new_state = recomputed
-            elif recomputed is None:
-                new_state = carried
-            else:
-                new_state = carried.unionByName(recomputed)
-            meta = {META_KEY: current}
-            if self.partition_col:
-                self.lake.overwrite_partitions(
-                    new_state, *self.view,
-                    partition_col=self.partition_col,
-                    partitions=parts,
-                    extra_meta=meta,
-                )
-            else:
-                self.lake.overwrite(new_state, *self.view, extra_meta=meta)
-            return {
-                "strategy": "incremental",
-                "from": last,
-                "to": current,
-                "affected_groups": n_groups,
-                "affected_partitions": parts,
-            }
-        finally:
-            affected.unpersist()
+        except FileNotFoundError:
+            # the base has no live rows: every affected partition
+            # empties (an empty frame with the base's columns)
+            rows = cdc.filter(F.lit(False))
+        parts = self._tokens(self.view, values)
+        self.lake.overwrite_partitions(
+            self._aggregate(rows), *self.view,
+            partition_col=self.partition_col,
+            partitions=parts,
+            extra_meta={META_KEY: current},
+        )
+        return {
+            "strategy": "incremental",
+            "from": last,
+            "to": current,
+            "affected_partitions": parts,
+        }
 
     def _full_build(self, spark: SparkSession, current: int) -> dict:
+        """Replace the whole view in one commit: every partition the
+        rebuild holds AND every partition the view holds now, which a
+        df-derived partition set would leave stale when its base rows
+        vanished entirely."""
         state = self._aggregate(self.lake.read(spark, *self.base))
-        meta = {META_KEY: current}
-        if self.partition_col:
-            supersede_partitions(
-                self.lake, state, self.view, self.partition_col, meta
+        old = set(self.lake._manifest(*self.view)[0])
+        parts = None
+        if old:
+            parts = sorted(
+                old | set(self._tokens(self.view, self._values(state)))
             )
-        else:
-            self.lake.overwrite(state, *self.view, extra_meta=meta)
+        self.lake.overwrite_partitions(
+            state, *self.view,
+            partition_col=self.partition_col,
+            partitions=parts,
+            extra_meta={META_KEY: current},
+        )
         return {"strategy": "full", "from": None, "to": current}
-
-    def _advance(self, last: int, current: int) -> dict:
-        advance_watermark(self.lake, *self.view, current)
-        return {"strategy": "advance", "from": last, "to": current}
