@@ -1613,3 +1613,36 @@ def test_recreated_table_reads_its_new_schema(spark, tmp_path, write):
     assert sorted(
         (r["id"], r["p"], r["v"], r["extra"]) for r in again.collect()
     ) == [(2, "a", "x", 7), (3, "b", "y", 8)]
+
+
+def test_read_where_refuses_vacuumed_history(spark, tmp_path):
+    """`read_where` at a version whose directories vacuum reclaimed
+    raises HistoryUnavailableError, as `read` does — it never answers
+    from the surviving directories alone (here: 5 of the 10 rows)."""
+    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
+        HistoryUnavailableError,
+        Lakehouse,
+    )
+
+    lake = Lakehouse(str(tmp_path / "lake"))
+    lake.create_schemas("silver")
+    for p in (0, 1, 0):
+        lake.overwrite_partitions(
+            spark.range(5).select(
+                (F.col("id") + 5 * p).alias("id"), F.lit(p).alias("p")
+            ),
+            "silver", "t", partition_col="p",
+        )
+    assert lake.read_where(
+        spark, "silver", "t", [("id", ">=", 0)], version=1
+    ).count() == 10
+    # version 2 rewrote p=0, so vacuum reclaims version 0's directory
+    lake.vacuum("silver", "t", keep_version=2, grace_seconds=0)
+    with pytest.raises(HistoryUnavailableError):
+        lake.read(spark, "silver", "t", version=1)
+    with pytest.raises(HistoryUnavailableError):
+        lake.read_where(spark, "silver", "t", [("id", ">=", 0)], version=1)
+    # the retained version still serves every row
+    assert lake.read_where(
+        spark, "silver", "t", [("id", ">=", 0)]
+    ).count() == 10

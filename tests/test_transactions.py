@@ -99,9 +99,9 @@ def test_txn_then_plain_writes_interleave(spark, lake_and_frames):
 
 
 def test_txn_delete_where_forward_derives_buckets(spark, tmp_path):
-    """predicates on a hidden bucket spec's SOURCE column derive the
-    affected partitions through the transform — no discovery scan —
-    and the staged delete equals the condition path."""
+    """predicates on a hidden bucket spec's SOURCE column find the
+    affected partitions with one pruned probe, and the staged delete
+    equals the condition path."""
     import pyspark.sql.functions as F
 
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
@@ -141,10 +141,10 @@ def test_txn_delete_where_forward_derives_buckets(spark, tmp_path):
 def test_txn_delete_where_predicates_reaches_appended_rows(
     spark, tmp_path
 ):
-    """Forward-derived bucket discovery must count buckets living only
-    in ADDITIVE (append) dirs as live — an appended row's bucket may
-    not be partition-mapped yet, and missing it would silently skip
-    the delete."""
+    """Bucket discovery must reach buckets living only in ADDITIVE
+    (append) dirs — an appended row's bucket may not be
+    partition-mapped yet, and missing it would silently skip the
+    delete."""
     import pyspark.sql.functions as F
 
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
@@ -321,3 +321,94 @@ def test_txn_disjoint_interleaves_still_commit(spark, tmp_path):
     }
     assert rows == {(1, 10.0), (5, 5.0)}
     assert lake.read(spark, "silver", "audit").count() == 2
+
+
+def _present_and_absent_ids(lake, table):
+    """An id the table holds (7) and one it does not whose bucket is
+    live — the shape where deriving partitions from the predicate's
+    values would rewrite a bucket no matching row lives in."""
+    spec = lake.partition_spec("silver", table)
+    live = set(lake._manifest("silver", table)[0])
+    absent = next(
+        i for i in range(1_000, 2_000)
+        if spec.value_of(i) in live and spec.value_of(i) != spec.value_of(7)
+    )
+    return [7, absent]
+
+
+def _merge_cow(spark, lake, writer, table):
+    updates = spark.createDataFrame(
+        [(1, "1", 100), (2, "2", 200), (901, "1", 9)],
+        "id long, p string, v long",
+    )
+    writer.merge_into(
+        spark, "silver", table, updates, "id", partition_col="p"
+    )
+
+
+def _delete_cow_condition(spark, lake, writer, table):
+    writer.delete_where(
+        spark, "silver", table, F.col("id") % 7 == 0, partition_col="p"
+    )
+
+
+def _delete_cow_bucket_predicates(spark, lake, writer, table):
+    writer.delete_where(
+        spark, "silver", table,
+        predicates=[("id", "in", _present_and_absent_ids(lake, table))],
+    )
+
+
+def _delete_mor(spark, lake, writer, table):
+    writer.delete_where(
+        spark, "silver", table, F.col("id") % 7 == 0,
+        mode="merge_on_read",
+    )
+
+
+PARITY_CASES = {
+    "merge_cow": (None, _merge_cow),
+    "delete_cow_condition": (None, _delete_cow_condition),
+    "delete_cow_bucket_predicates": (
+        "bucket(8, id)", _delete_cow_bucket_predicates
+    ),
+    "delete_mor": (None, _delete_mor),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_direct_and_txn_dml_commit_the_same(spark, tmp_path, case):
+    """`Lakehouse` and `Transaction` run one stager per DML op: on twin
+    tables, the direct call and the staged one leave the same rows and
+    log the same operation over the same partitions."""
+    spec, op = PARITY_CASES[case]
+    lake = Lakehouse(str(tmp_path / "lake"))
+    lake.create_schemas("silver")
+    seed = spark.range(200).select(
+        "id",
+        (F.col("id") % 4).cast("string").alias("p"),
+        (F.col("id") * 3).alias("v"),
+    )
+    for t in ("direct", "txn"):
+        if spec is None:
+            lake.overwrite_partitions(seed, "silver", t, partition_col="p")
+        else:
+            lake.set_partition_spec("silver", t, spec)
+            lake.overwrite_partitions(seed, "silver", t)
+    op(spark, lake, lake, "direct")
+    with lake.transaction() as txn:
+        op(spark, lake, txn, "txn")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("id", "p", "v").collect())
+
+    assert (
+        rows(lake.read(spark, "silver", "direct"))
+        == rows(lake.read(spark, "silver", "txn"))
+        != rows(seed)
+    )
+    direct, staged = (lake.snapshots("silver", t) for t in ("direct", "txn"))
+    assert len(direct) == len(staged) == 2
+    assert (direct[-1]["operation"], direct[-1].get("partitions")) == (
+        staged[-1]["operation"], staged[-1].get("partitions")
+    )

@@ -231,6 +231,20 @@ def _with_meta(entry: dict, extra_meta: dict | None) -> dict:
     return entry
 
 
+def _check_mode(op: str, mode: str) -> None:
+    if mode not in ("copy_on_write", "merge_on_read"):
+        raise ValueError(
+            f"{op}: unknown mode {mode!r} (copy_on_write | merge_on_read)"
+        )
+
+
+def _check_filter(op: str, condition, predicates) -> None:
+    if (condition is None) == (predicates is None):
+        raise ValueError(
+            f"{op}: pass exactly one of condition or predicates"
+        )
+
+
 # legal type widenings (Delta's type-widening matrix, the exact
 # subset): every conversion is value-preserving — int32 is exact in
 # float64, bigint is NOT (53-bit mantissa), so bigint→double is
@@ -970,13 +984,18 @@ class Lakehouse:
         partition_col: str | None,
     ) -> tuple[DataFrame, str]:
         """(df, physical partition column).  Explicit `partition_col`
-        wins (internal rewrites pass the hidden column through); with
-        None, a hidden spec derives its value column — recomputed even
-        if present, so a stale caller-supplied value can never
-        disagree with the transform."""
-        if partition_col is not None:
+        wins (internal rewrites pass the hidden column through, and a
+        frame read back through `read`, which strips it, gets it
+        re-derived); with None, a hidden spec derives its value column
+        — recomputed even if present, so a stale caller-supplied value
+        can never disagree with the transform."""
+        if partition_col in df.columns:
             return df, partition_col
         spec = self.partition_spec(schema, name)
+        if partition_col is not None:
+            if spec is not None and partition_col == spec.hidden_col:
+                df = df.withColumn(partition_col, spec.derive(df))
+            return df, partition_col
         if spec is None:
             raise ValueError(
                 f"{schema}.{name}: partition_col is required for "
@@ -996,19 +1015,6 @@ class Lakehouse:
 
         hidden = [c for c in df.columns if c.startswith(HIDDEN_PREFIX)]
         return df.drop(*hidden) if hidden else df
-
-    def _ensure_partition_col(
-        self, df: DataFrame, schema: str, name: str, partition_col: str
-    ) -> DataFrame:
-        """Re-derive a hidden partition column onto a frame that came
-        back through `read` (which strips it).  No-op for physical
-        partition columns."""
-        if partition_col in df.columns:
-            return df
-        spec = self.partition_spec(schema, name)
-        if spec is not None and partition_col == spec.hidden_col:
-            return df.withColumn(partition_col, spec.derive(df))
-        return df
 
     def bloom_index(self, schema: str, name: str) -> dict[str, dict]:
         p = os.path.join(self._table_dir(schema, name), self.BLOOM_FILE)
@@ -1192,67 +1198,37 @@ class Lakehouse:
             .partitionBy(partition_col)
             .parquet(data_dir)
         )
-        if partitions is not None:
-            parts = [str(p) for p in partitions]
-            # r13 (ADVICE): the legacy NULL/'None' mix guard must also
-            # cover explicit-partitions writes (delete_where/update
-            # rewrites, direct callers).  The caller's tokens are
-            # CANONICAL — on a legacy table NULL and literal-'None'
-            # both arrive as 'None' — so the two physical forms are
-            # recovered from the directory names partitionBy just
-            # produced, exactly as the directory-derived branch does.
-            if self.null_token(schema, name) == "None":
-                prefix = f"{partition_col}="
-                raw = {
-                    d[len(prefix):]
-                    for d in os.listdir(data_dir)
-                    if d.startswith(prefix)
-                    and os.path.isdir(os.path.join(data_dir, d))
-                }
-                self._guard_legacy_null_mix(
-                    schema, name, partition_col,
-                    {t for t in ("None", NULL_SENTINEL) if t in raw},
-                )
-        else:
-            # read the partition set off the directory names the write
-            # just produced — the old distinct().collect() recomputed
-            # the df's ENTIRE lineage a second time per commit (hive
-            # escaping unquoted, a no-op for the plain scalar values
-            # this catalog supports)
-            from urllib.parse import unquote
-
-            prefix = f"{partition_col}="
-            parts = [
-                unquote(d[len(prefix):])
-                for d in os.listdir(data_dir)
-                if d.startswith(prefix)
-                and os.path.isdir(os.path.join(data_dir, d))
-            ]
-            # a NULL partition value writes the sentinel directory
-            # __HIVE_DEFAULT_PARTITION__.  On format-v2 tables (every
-            # table this code creates) the sentinel IS the canonical
-            # NULL token, so it stays as-is and a literal string
-            # 'None' is just an ordinary value — two distinct
-            # partition identities, nothing to guard.
-            #
-            # LEGACY tables (no format file) keep the documented token
-            # 'None' (str(None), what the old distinct().collect()
-            # path recorded), where a literal string value 'None'
-            # SHARES partition identity with NULL — so the ambiguous
-            # mix is refused loudly instead of silently merging
-            # identities downstream: both when one write produces both
-            # directory forms, and (r12, the cross-commit case) when
-            # the incoming write carries one form while the table's
-            # live directories already hold the other.
-            nt = self.null_token(schema, name)
-            if nt == "None":
-                self._guard_legacy_null_mix(
-                    schema, name, partition_col,
-                    {p for p in parts if p in ("None", NULL_SENTINEL)},
-                )
-                parts = [
-                    "None" if p == NULL_SENTINEL else p for p in parts
-                ]
+        # the superseded set: every partition the write produced, read
+        # off the directory names partitionBy just wrote (no second
+        # pass over the df's lineage), plus the caller's `partitions`
+        # — a partition the rewrite emptied (delete_where removed all
+        # its rows) has no directory but must still be superseded
+        prefix = f"{partition_col}="
+        raw = [
+            d[len(prefix):]
+            for d in os.listdir(data_dir)
+            if d.startswith(prefix)
+            and os.path.isdir(os.path.join(data_dir, d))
+        ]
+        # a NULL partition value writes the sentinel directory
+        # __HIVE_DEFAULT_PARTITION__.  On format-v2 tables (every
+        # table this code creates) the sentinel IS the canonical NULL
+        # token and a literal string 'None' is an ordinary value.
+        # LEGACY tables (no format file) keep the token 'None', which
+        # a literal string value 'None' SHARES — so the ambiguous mix
+        # is refused loudly instead of silently merging identities
+        # downstream, both within this write and (the cross-commit
+        # case) against the table's live directories.  Only the raw
+        # directory names tell the two forms apart: the caller's
+        # canonical tokens conflate them.
+        nt = self.null_token(schema, name)
+        if nt == "None":
+            self._guard_legacy_null_mix(
+                schema, name, partition_col,
+                {t for t in raw if t in ("None", NULL_SENTINEL)},
+            )
+        parts = {_canon_token(t, nt) for t in raw}
+        parts.update(str(p) for p in partitions or ())
         return self._attach_stats(
             dict(
                 op="overwrite_partitions",
@@ -1274,9 +1250,8 @@ class Lakehouse:
         """Refuse the NULL / literal-'None' identity mix on a LEGACY
         (no `_format.json`) table, where both physical forms share the
         canonical token 'None'.  `incoming` holds the RAW forms this
-        write carries (subset of {'None', NULL_SENTINEL}) — derived
-        from staged directory names by both the directory-derived and
-        the explicit-partitions write paths.  Raises on a same-commit
+        write carries (subset of {'None', NULL_SENTINEL}), read off
+        the staged directory names.  Raises on a same-commit
         mix (both forms staged) and on a cross-commit mix (one form
         staged while the table's live dirs hold the other)."""
         if len(incoming) == 2:
@@ -1372,7 +1347,6 @@ class Lakehouse:
         partition_col: str | None = None,
         partitions: list[str] | None = None,
         extra_meta: dict | None = None,
-        _base: int | None = None,
         files_per_partition: int = 1,
         sort_within: tuple[str, ...] = (),
     ) -> None:
@@ -1381,8 +1355,8 @@ class Lakehouse:
         new partitions land in a fresh version directory and supersede
         the same partitions of earlier versions at read time.
 
-        `partitions` overrides the superseded set (normally derived
-        from `df`) — needed when a partition's new state is EMPTY
+        `partitions` names more partitions to supersede on top of the
+        ones `df` writes — needed when a partition's new state is EMPTY
         (e.g. `delete_where` removed every row): it must still be
         superseded even though no data directory is written for it.
 
@@ -1401,27 +1375,27 @@ class Lakehouse:
         to the one-writer-per-partition rule
         (`_cluster_for_partitioned_write`) — the escape hatch for
         partitions too big for one writer, and the way to keep
-        caller-side clustering alive for file-stat/Bloom pruning.
-
-        `_base`: internal — read-modify-write callers (merge_into,
-        delete_where) pass the version count they captured BEFORE
-        reading the table, so a commit that lands between their read
-        and this commit is conflict-checked rather than silently based
-        on stale state (the TOCTOU window the randomized mixed-op
-        schedule test caught: an interleaved commit with a version
-        BELOW the commit-time base escapes the `[base:]` conflict
-        scan)."""
+        caller-side clustering alive for file-stat/Bloom pruning."""
         df, partition_col = self._resolve_partitioning(
             df, schema, name, partition_col
         )
         base, data_dir = self._next_data_dir(schema, name)
-        if _base is not None:
-            base = _base
         entry = self._stage_overwrite_partitions(
             df, schema, name, partition_col, data_dir, partitions,
             files_per_partition, sort_within,
         )
         self._commit(schema, name, _with_meta(entry, extra_meta), base)
+
+    # -- row-level DML --------------------------------------------------
+    #
+    # Each operation has ONE stager (`_stage_merge`, `_stage_delete`,
+    # `_stage_update`): it reads the table, writes the new files into
+    # the given `data_dir` and returns the log entry (None when no row
+    # matches).  `Lakehouse` commits that entry directly against the
+    # base version it took BEFORE the stager's read (`_next_data_dir`),
+    # so a commit landing between the read and the commit is
+    # conflict-checked rather than silently based on stale state;
+    # `Transaction` stages it for its journal commit.
 
     def merge_into(
         self,
@@ -1474,76 +1448,13 @@ class Lakehouse:
         lives, so the cross-partition hazard doesn't exist).  Readers
         pay the DV anti-join until `compact()` materializes.
         """
-        keys = [key] if isinstance(key, str) else list(key)
-        dup = (
-            updates.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(5)
-            .collect()
+        _check_mode("merge_into", mode)
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_merge(
+            spark, schema, name, data_dir, updates, key, partition_col,
+            validate_cross_partition=validate_cross_partition, mode=mode,
         )
-        if dup:
-            raise ValueError(
-                f"merge_into {schema}.{name}: updates contain duplicate "
-                f"keys {[tuple(r[k] for k in keys) for r in dup]} — "
-                "one source row per key required"
-            )
-        if mode == "merge_on_read":
-            return self._merge_into_mor(spark, schema, name, updates, keys)
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"merge_into: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        updates, partition_col = self._resolve_partitioning(
-            updates, schema, name, partition_col
-        )
-        # optimistic-concurrency base, captured BEFORE any read of
-        # table state: every commit that lands after what this merge
-        # reads must fall in the conflict scan's [base:] range
-        base = len(self.snapshots(schema, name))
-        nt = self.null_token(schema, name)
-        affected = [
-            _token_of(r[0], nt)
-            for r in updates.select(partition_col).distinct().collect()
-        ]
-        if validate_cross_partition:
-            strays = (
-                self._ensure_partition_col(
-                    self.read(spark, schema, name), schema, name,
-                    partition_col,
-                )
-                .filter(
-                    ~self._pvalue_match(
-                        F.col(partition_col), affected, nt
-                    )
-                )
-                .join(updates.select(*keys).distinct(), keys, "left_semi")
-                .select(*keys, partition_col)
-                .limit(5)
-                .collect()
-            )
-            if strays:
-                raise ValueError(
-                    f"merge_into {schema}.{name}: update keys already "
-                    f"exist outside the affected partitions: "
-                    f"{[tuple(r) for r in strays]} — a merge cannot "
-                    "move rows across partitions (delete from the "
-                    "source partition first)"
-                )
-        current = self._ensure_partition_col(
-            self.read(spark, schema, name), schema, name, partition_col
-        ).filter(self._pvalue_match(F.col(partition_col), affected, nt))
-        survivors = current.join(
-            updates.select(*keys).distinct(), keys, "left_anti"
-        )
-        self.overwrite_partitions(
-            # allowMissingColumns = Delta's MERGE schema evolution
-            # (autoMerge): updates may ADD columns — surviving rows
-            # surface NULL there, exactly like an evolving append
-            survivors.unionByName(updates, allowMissingColumns=True),
-            schema, name, partition_col, _base=base,
-        )
+        self._commit(schema, name, entry, base)
 
     def delete_where(
         self,
@@ -1586,91 +1497,30 @@ class Lakehouse:
         `predicates` (the ``read_where`` triple list) may be passed
         INSTEAD of `condition`: the delete condition is derived from
         the triples (one source of truth — the rows deleted are exactly
-        the rows the triples select), and the merge-on-read
-        position-finding scan routes through `read_where`, opening only
-        the stats/bloom-surviving files.  The pruned path is what makes
-        a point erasure (GDPR delete of k ids) O(matching files), not
-        O(table scan), on a Bloom-indexed key.
+        the rows the triples select), and the scan that finds the rows
+        routes through `read_where`, opening only the
+        stats/bloom-surviving files: the merge-on-read position scan,
+        and on a hidden-partitioned table the copy-on-write partition
+        discovery (one pruned probe, `_probe_affected_tokens`).  The
+        pruned path is what makes a point erasure (GDPR delete of k
+        ids) O(matching files), not O(table scan), on a Bloom-indexed
+        key.
 
         Returns True iff a commit happened (False = no matching rows,
         table untouched, no new version) — callers tracking commit
         counts must branch on this rather than assume one version per
         call."""
-        if (condition is None) == (predicates is None):
-            raise ValueError(
-                "delete_where: pass exactly one of condition or "
-                "predicates"
-            )
-        if predicates is not None:
-            from .skipping import predicates_to_column
-
-            condition = predicates_to_column(predicates)
-        if mode == "merge_on_read":
-            return self._delete_where_dv(
-                spark, schema, name, condition, predicates
-            )
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"delete_where: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        # base BEFORE the read — see overwrite_partitions `_base`
-        base = len(self.snapshots(schema, name))
-        nt = self.null_token(schema, name)
-        current = self.read(spark, schema, name)
-        if partition_col is None:
-            current, partition_col = self._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = self._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        affected = [
-            _token_of(r[0], nt)
-            for r in current.filter(condition)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
+        _check_filter("delete_where", condition, predicates)
+        _check_mode("delete_where", mode)
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_delete(
+            spark, schema, name, data_dir, condition, predicates,
+            partition_col, mode,
+        )
+        if entry is None:
             return False
-        survivors = current.filter(
-            self._pvalue_match(F.col(partition_col), affected, nt)
-        ).filter(~F.coalesce(condition, F.lit(False)))
-        self.overwrite_partitions(
-            survivors, schema, name, partition_col, partitions=affected,
-            _base=base,
-        )
+        self._commit(schema, name, entry, base)
         return True
-
-    @staticmethod
-    def _apply_set(df: DataFrame, condition, assignments: dict) -> DataFrame:
-        """Project `df` with SET assignments applied to rows where
-        `condition` is TRUE (SQL three-valued logic: NULL/FALSE rows
-        pass through untouched).  Every expression evaluates against
-        the ORIGINAL row — `SET a = b, b = a` swaps, like SQL UPDATE —
-        and is cast back to the column's existing type so the table
-        schema is invariant under updates (Delta casts the same way).
-        """
-        matched = F.coalesce(
-            condition.cast("boolean"), F.lit(False)
-        )
-        types = dict(df.dtypes)
-        exprs = []
-        for c in df.columns:
-            if c in assignments:
-                new = assignments[c]
-                if isinstance(new, str):
-                    new = F.expr(new)
-                exprs.append(
-                    F.when(matched, new.cast(types[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            else:
-                exprs.append(F.col(c))
-        return df.select(*exprs)
 
     def update_where(
         self,
@@ -1712,234 +1562,408 @@ class Lakehouse:
 
         `predicates` (the ``read_where`` triple list) may be passed
         INSTEAD of `condition` — same contract as `delete_where`: the
-        update condition derives from the triples, and the
-        merge-on-read position-finding scan routes through the pruned
-        read, opening only stats/bloom-surviving files (a point UPDATE
-        of k ids on a Bloom-indexed key is O(matching files) scan).
+        update condition derives from the triples, and the scan that
+        finds the rows routes through the pruned read, opening only
+        stats/bloom-surviving files (a point UPDATE of k ids on a
+        Bloom-indexed key is O(matching files) scan).
 
         Returns True iff a commit happened (False = no matching rows,
         no new version), matching `delete_where`."""
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(
-                f"update_where: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
+        _check_mode("update_where", mode)
         if not set:
             raise ValueError("update_where: empty SET")
-        if (condition is None) == (predicates is None):
-            raise ValueError(
-                "update_where: pass exactly one of condition or "
-                "predicates"
-            )
-        if predicates is not None:
-            from .skipping import predicates_to_column
-
-            condition = predicates_to_column(predicates)
-        if mode == "merge_on_read":
-            return self._update_where_mor(
-                spark, schema, name, condition, set, predicates
-            )
-        # base BEFORE the read — see overwrite_partitions `_base`
-        base = len(self.snapshots(schema, name))
-        current = self.read(spark, schema, name)
-        unknown = sorted(k for k in set if k not in current.columns)
-        if unknown:
-            raise ValueError(
-                f"update_where {schema}.{name}: SET names unknown "
-                f"columns {unknown}"
-            )
+        _check_filter("update_where", condition, predicates)
         spec = self.partition_spec(schema, name)
         moved = spec.source if spec is not None else partition_col
-        if moved is not None and moved in set:
+        if mode == "copy_on_write" and moved is not None and moved in set:
             raise ValueError(
                 f"update_where {schema}.{name}: SET {moved} would "
                 "move rows across partitions under copy-on-write — "
                 'use mode="merge_on_read"'
             )
-        if partition_col is None:
-            current, partition_col = self._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = self._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        nt = self.null_token(schema, name)
-        affected = [
-            _token_of(r[0], nt)
-            for r in current.filter(condition)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
+        base, data_dir = self._next_data_dir(schema, name)
+        entry = self._stage_update(
+            spark, schema, name, data_dir, condition, set, predicates,
+            partition_col, mode,
+        )
+        if entry is None:
             return False
-        rewritten = self._apply_set(
-            current.filter(
-                self._pvalue_match(F.col(partition_col), affected, nt)
-            ),
-            condition,
-            set,
-        )
-        self.overwrite_partitions(
-            rewritten, schema, name, partition_col,
-            partitions=affected, _base=base,
-        )
+        self._commit(schema, name, entry, base)
         return True
 
-    def _update_where_mor(
-        self, spark: SparkSession, schema: str, name: str,
-        condition, assignments: dict,
-        predicates: list[tuple] | None = None,
-    ) -> bool:
-        """Merge-on-read UPDATE: DV over the matched positions + the
-        updated row images appended, one atomic `update_mor` commit
-        (same log shape as MoR MERGE, so CDC/compaction/fsck handling
-        is shared).  With `predicates`, the positional scan routes
-        through the pruned `read_where`, which already applies the
-        same conjunction as its residual filter."""
-        path = self._table_dir(schema, name)
-        # base BEFORE the positional read (see _merge_into_mor)
-        base, data_dir = self._next_data_dir(schema, name)
-        if predicates is not None:
-            current = self.read_where(
-                spark, schema, name, predicates, with_positions=True
+    def _stage_merge(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        data_dir: str,
+        updates: DataFrame,
+        key: str | list[str],
+        partition_col: str | None = None,
+        purge_condition=None,
+        validate_cross_partition: bool = False,
+        mode: str = "copy_on_write",
+    ) -> dict:
+        """MERGE (see `merge_into`); `purge_condition` is the WHEN
+        MATCHED DELETE leg `Transaction.merge_into` exposes."""
+        keys = [key] if isinstance(key, str) else list(key)
+        dup = (
+            updates.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") > 1)
+            .limit(5)
+            .collect()
+        )
+        if dup:
+            raise ValueError(
+                f"merge_into {schema}.{name}: updates contain duplicate "
+                f"keys {[tuple(r[k] for k in keys) for r in dup]} — "
+                "one source row per key required"
             )
-        else:
-            current = self.read(
+        update_keys = updates.select(*keys).distinct()
+        if mode == "merge_on_read":
+            matched = self.read(
                 spark, schema, name, with_positions=True
+            ).join(update_keys, keys, "left_semi")
+            return self._stage_dv(schema, name, matched, updates, data_dir)
+        updates, partition_col = self._resolve_partitioning(
+            updates, schema, name, partition_col
+        )
+        current, _ = self._resolve_partitioning(
+            self.read(spark, schema, name), schema, name, partition_col
+        )
+        affected = self._distinct_tokens(
+            updates, partition_col, schema, name
+        )
+        if purge_condition is not None:
+            affected = sorted(
+                set(affected).union(
+                    self._distinct_tokens(
+                        current.filter(purge_condition), partition_col,
+                        schema, name,
+                    )
+                )
             )
+        in_affected = self._pvalue_match(
+            F.col(partition_col), affected, self.null_token(schema, name)
+        )
+        if validate_cross_partition:
+            strays = (
+                current.filter(~in_affected)
+                .join(update_keys, keys, "left_semi")
+                .select(*keys, partition_col)
+                .limit(5)
+                .collect()
+            )
+            if strays:
+                raise ValueError(
+                    f"merge_into {schema}.{name}: update keys already "
+                    f"exist outside the affected partitions: "
+                    f"{[tuple(r) for r in strays]} — a merge cannot "
+                    "move rows across partitions (delete from the "
+                    "source partition first)"
+                )
+        survivors = current.filter(in_affected).join(
+            update_keys, keys, "left_anti"
+        )
+        if purge_condition is not None:
+            # SQL three-valued logic: only TRUE rows are purged
+            survivors = survivors.filter(
+                ~F.coalesce(purge_condition, F.lit(False))
+            )
+        return self._stage_overwrite_partitions(
+            # allowMissingColumns = Delta's MERGE schema evolution
+            # (autoMerge): updates may ADD columns — surviving rows
+            # surface NULL there, exactly like an evolving append
+            survivors.unionByName(updates, allowMissingColumns=True),
+            schema, name, partition_col, data_dir,
+            # a purge can empty a partition entirely
+            partitions=affected,
+        )
+
+    def _stage_delete(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        data_dir: str,
+        condition=None,
+        predicates: list[tuple] | None = None,
+        partition_col: str | None = None,
+        mode: str = "copy_on_write",
+    ) -> dict | None:
+        """DELETE (see `delete_where`); None when no row matches."""
+        if predicates is not None:
+            from .skipping import predicates_to_column
+
+            condition = predicates_to_column(predicates)
+        if mode == "merge_on_read":
+            matched = self._matching_positions(
+                spark, schema, name, condition, predicates
+            )
+            if matched.limit(1).count() == 0:
+                return None
+            return self._stage_dv(schema, name, matched, None, data_dir)
+        current, partition_col = self._resolve_partitioning(
+            self.read(spark, schema, name), schema, name, partition_col
+        )
+        affected = self._affected_partitions(
+            spark, schema, name, current, condition, predicates,
+            partition_col,
+        )
+        if not affected:
+            return None
+        survivors = current.filter(
+            self._pvalue_match(
+                F.col(partition_col), affected,
+                self.null_token(schema, name),
+            )
+        ).filter(~F.coalesce(condition, F.lit(False)))
+        return self._stage_overwrite_partitions(
+            survivors, schema, name, partition_col, data_dir,
+            partitions=affected,
+        )
+
+    def _stage_update(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        data_dir: str,
+        condition,
+        assignments: dict,
+        predicates: list[tuple] | None = None,
+        partition_col: str | None = None,
+        mode: str = "copy_on_write",
+    ) -> dict | None:
+        """UPDATE (see `update_where`); None when no row matches."""
+        if predicates is not None:
+            from .skipping import predicates_to_column
+
+            condition = predicates_to_column(predicates)
+        mor = mode == "merge_on_read"
+        current = (
+            self._matching_positions(
+                spark, schema, name, condition, predicates
+            )
+            if mor
+            else self.read(spark, schema, name)
+        )
         unknown = sorted(
             k for k in assignments
-            if k not in current.columns or k.startswith("__dv_")
+            if k not in current.columns or k in self._POS_COLS
         )
         if unknown:
             raise ValueError(
                 f"update_where {schema}.{name}: SET names unknown "
                 f"columns {unknown}"
             )
-        matched = (
-            current
-            if predicates is not None
-            else current.filter(condition)
+        if mor:
+            if current.limit(1).count() == 0:
+                return None
+            return self._stage_dv(
+                schema, name, current,
+                self._apply_set(current, F.lit(True), assignments),
+                data_dir,
+            )
+        current, partition_col = self._resolve_partitioning(
+            current, schema, name, partition_col
         )
-        if matched.limit(1).count() == 0:
-            return False  # no matches → no commit (CoW parity)
-        updated = self._apply_set(
-            matched, F.lit(True), assignments
-        ).drop("__dv_file", "__dv_pos")
-        self._enforce_constraints(updated, schema, name)
-        dv_dir = data_dir + "-dv"
+        affected = self._affected_partitions(
+            spark, schema, name, current, condition, predicates,
+            partition_col,
+        )
+        if not affected:
+            return None
+        rewritten = self._apply_set(
+            current.filter(
+                self._pvalue_match(
+                    F.col(partition_col), affected,
+                    self.null_token(schema, name),
+                )
+            ),
+            condition,
+            assignments,
+        )
+        return self._stage_overwrite_partitions(
+            rewritten, schema, name, partition_col, data_dir,
+            partitions=affected,
+        )
+
+    @staticmethod
+    def _apply_set(df: DataFrame, condition, assignments: dict) -> DataFrame:
+        """Project `df` with SET assignments applied to rows where
+        `condition` is TRUE (SQL three-valued logic: NULL/FALSE rows
+        pass through untouched).  Every expression evaluates against
+        the ORIGINAL row — `SET a = b, b = a` swaps, like SQL UPDATE —
+        and is cast back to the column's existing type so the table
+        schema is invariant under updates (Delta casts the same way).
+        """
+        matched = F.coalesce(
+            condition.cast("boolean"), F.lit(False)
+        )
+        types = dict(df.dtypes)
+        exprs = []
+        for c in df.columns:
+            if c in assignments:
+                new = assignments[c]
+                if isinstance(new, str):
+                    new = F.expr(new)
+                exprs.append(
+                    F.when(matched, new.cast(types[c]))
+                    .otherwise(F.col(c))
+                    .alias(c)
+                )
+            else:
+                exprs.append(F.col(c))
+        return df.select(*exprs)
+
+    def _matching_positions(
+        self, spark: SparkSession, schema: str, name: str,
+        condition, predicates: list[tuple] | None,
+    ) -> DataFrame:
+        """The rows a merge-on-read DELETE/UPDATE names, with their
+        physical positions.  Only TRUE rows (SQL three-valued logic);
+        with `predicates` the scan is the pruned `read_where`, whose
+        residual filter already applies the same conjunction."""
+        if predicates is not None:
+            return self.read_where(
+                spark, schema, name, predicates, with_positions=True
+            )
+        return self.read(
+            spark, schema, name, with_positions=True
+        ).filter(condition)
+
+    def _stage_dv(
+        self,
+        schema: str,
+        name: str,
+        matched: DataFrame,
+        new_rows: DataFrame | None,
+        data_dir: str,
+    ) -> dict:
+        """The one deletion-vector writer.  `matched` (a positional
+        read) names the rows to delete by (file path, row index) — a
+        read with positions already excludes earlier vectors, so no
+        vector names a deleted row twice.  Without `new_rows` the
+        vector itself is the commit (`delete_dv`, one parquet at
+        `data_dir`); with them, the vector goes to `<data_dir>-dv` and
+        `new_rows` are appended at `data_dir`, both on ONE `update_mor`
+        entry — the atomic point of a merge-on-read MERGE or UPDATE."""
+        path = self._table_dir(schema, name)
+        dv_dir = data_dir if new_rows is None else data_dir + "-dv"
+        if new_rows is not None:
+            new_rows = new_rows.drop(*self._POS_COLS)
+            self._enforce_constraints(new_rows, schema, name)
         matched.select(
             F.col("__dv_file").alias("file_path"),
             F.col("__dv_pos").alias("row_index"),
         ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
-        self._to_physical(updated, schema, name).write.mode(
-            "overwrite"
-        ).parquet(data_dir)
-        self._commit(
-            schema, name,
-            self._attach_stats(
-                dict(
-                    op="update_mor",
-                    data_dir=os.path.relpath(data_dir, path),
-                    dv_dir=os.path.relpath(dv_dir, path),
-                ),
-                data_dir,
-                schema,
-                name,
-            ),
-            base,
-        )
-        return True
-
-    def _merge_into_mor(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        updates: DataFrame,
-        keys: list[str],
-    ) -> None:
-        """Merge-on-read MERGE: stage (a) the updates as new data files
-        and (b) a deletion vector naming the matched rows' positions,
-        then commit both with one `update_mor` log line — the atomic
-        point, exactly like every other commit."""
-        path = self._table_dir(schema, name)
-        self._enforce_constraints(updates, schema, name)
-        # base BEFORE the positional read: the DV names row positions
-        # in the files of the state it read, so any commit after that
-        # state must conflict (see overwrite_partitions `_base`)
-        base, data_dir = self._next_data_dir(schema, name)
-        current = self.read(spark, schema, name, with_positions=True)
-        matches = current.join(
-            updates.select(*keys).distinct(), keys, "left_semi"
-        ).select(
-            F.col("__dv_file").alias("file_path"),
-            F.col("__dv_pos").alias("row_index"),
-        )
-        dv_dir = data_dir + "-dv"
-        matches.coalesce(1).write.mode("overwrite").parquet(dv_dir)
-        self._to_physical(updates, schema, name).write.mode(
-            "overwrite"
-        ).parquet(data_dir)
-        self._commit(
-            schema, name,
-            self._attach_stats(
-                dict(
-                    op="update_mor",
-                    data_dir=os.path.relpath(data_dir, path),
-                    dv_dir=os.path.relpath(dv_dir, path),
-                ),
-                data_dir,
-                schema,
-                name,
-            ),
-            base,
-        )
-
-    def _delete_where_dv(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        condition,
-        predicates: list[tuple] | None = None,
-    ) -> bool:
-        """Merge-on-read delete: commit the matching rows' physical
-        positions as a deletion vector (one parquet write, no data
-        rewritten).  Reading with positions already excludes earlier
-        DVs, so vectors never name an already-deleted row twice.  With
-        `predicates`, the positional scan routes through `read_where`
-        (stats/bloom/partition pruning) — it already applies the same
-        conjunction as its residual filter, so no re-filter needed."""
-        path = self._table_dir(schema, name)
-        # base BEFORE the positional read (see _merge_into_mor)
-        base, data_dir = self._next_data_dir(schema, name)
-        if predicates is not None:
-            scanned = self.read_where(
-                spark, schema, name, predicates, with_positions=True
+        if new_rows is None:
+            return dict(
+                op="delete_dv", data_dir=os.path.relpath(dv_dir, path)
             )
-        else:
-            scanned = self.read(
-                spark, schema, name, with_positions=True
-            ).filter(condition)  # TRUE rows only (3-valued logic)
-        matches = scanned.select(
-            F.col("__dv_file").alias("file_path"),
-            F.col("__dv_pos").alias("row_index"),
-        )
-        if matches.limit(1).count() == 0:
-            return False  # no matches → no commit (CoW parity)
-        matches.coalesce(1).write.mode("overwrite").parquet(data_dir)
-        self._commit(
-            schema, name,
+        self._to_physical(new_rows, schema, name).write.mode(
+            "overwrite"
+        ).parquet(data_dir)
+        return self._attach_stats(
             dict(
-                op="delete_dv",
+                op="update_mor",
                 data_dir=os.path.relpath(data_dir, path),
+                dv_dir=os.path.relpath(dv_dir, path),
             ),
-            base,
+            data_dir,
+            schema,
+            name,
         )
-        return True
+
+    def _distinct_tokens(
+        self, df: DataFrame, pcol: str, schema: str, name: str
+    ) -> list[str]:
+        """The canonical tokens of the partitions `df`'s rows fall in
+        (one distinct scan)."""
+        nt = self.null_token(schema, name)
+        return sorted(
+            {
+                _token_of(r[0], nt)
+                for r in df.select(pcol).distinct().collect()
+            }
+        )
+
+    def _affected_partitions(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        current: DataFrame,
+        condition,
+        predicates: list[tuple] | None,
+        pcol: str,
+    ) -> list[str]:
+        """Tokens of the partitions holding a row where `condition` is
+        TRUE.  `predicates` on a hidden-partitioned table take the
+        pruned probe (`_probe_affected_tokens`); everything else — and
+        a probe that meets a match in a flat file — scans `current`."""
+        spec = self.partition_spec(schema, name)
+        if (
+            predicates is not None
+            and spec is not None
+            and pcol == spec.hidden_col
+        ):
+            toks = self._probe_affected_tokens(
+                spark, schema, name, predicates, pcol
+            )
+            if toks is not None:
+                return toks
+        return self._distinct_tokens(
+            current.filter(condition), pcol, schema, name
+        )
+
+    def _probe_affected_tokens(
+        self,
+        spark: SparkSession,
+        schema: str,
+        name: str,
+        predicates: list[tuple],
+        pcol: str,
+    ) -> list[str] | None:
+        """Pruned partition discovery: instead of scanning every
+        partition for matches, read only the stats/Bloom-surviving
+        files (`read_where`) and take the touched partition TOKENS from
+        the matching rows' file paths (the `<pcol>=<token>` segments),
+        so the tokens feed `_pvalue_match` unchanged.  With a Bloom
+        index on the predicate column this is O(matching files), not
+        O(table).
+
+        Returns [] when no rows match anywhere (caller commits
+        nothing), or None when any matching row sits in a file whose
+        path carries no `<pcol>=` segment (flat additive file — its
+        partition value can't be attributed from the path; caller
+        falls back to scan discovery)."""
+        from urllib.parse import unquote
+
+        probe = self.read_where(
+            spark, schema, name, predicates, with_positions=True
+        )
+        pfx = f"{os.sep}{pcol}="
+        nt = self.null_token(schema, name)
+        toks: set[str] = set()
+        for r in probe.select("__dv_file").distinct().collect():
+            f = r[0]
+            i = f.rfind(pfx)
+            if i < 0:
+                return None
+            seg = f[i + len(pfx):].split(os.sep, 1)[0]
+            # two encoding layers peel off here: `__dv_file` comes from
+            # `_metadata.file_path`, a URI (the on-disk '%' of a
+            # hive-escaped name arrives as '%25'), so unquote once to
+            # the on-disk directory name, then _canon_token undoes the
+            # hive escaping / NULL sentinel to the catalog's canonical
+            # token — the form _pvalue_match and the commit log speak.
+            # Anything less and a NULL/escaped partition records a
+            # token no reader matches, silently skipping the partition.
+            toks.add(_canon_token(unquote(seg), nt))
+        return sorted(toks)
 
     def overwrite(
         self,
@@ -1995,6 +2019,11 @@ class Lakehouse:
 
         An exception inside the block aborts: nothing was logged, so
         nothing is visible.  One write per table per transaction.
+
+        The staged DML (`merge_into`, `delete_where`) runs the same
+        stagers as the direct `Lakehouse` methods — same rows, same
+        log entry — and differs only in where the entry goes: into the
+        journal line instead of straight onto the table's log.
         """
         return Transaction(self)
 
@@ -2231,10 +2260,7 @@ class Lakehouse:
                 .partitionBy(partition_col)
                 .parquet(data_dir)
             )
-            parts = sorted(
-                _token_of(r[0], self.null_token(schema, name))
-                for r in df.select(partition_col).distinct().collect()
-            )
+            parts = self._distinct_tokens(df, partition_col, schema, name)
             self._commit(
                 schema, name,
                 self._attach_stats(
@@ -2800,13 +2826,10 @@ class Lakehouse:
         the persistent IVF probe runs).  Unpartitioned commit dirs
         (e.g. not-yet-optimized appends) can't dir-prune and fall back
         to a row filter."""
-        part_map, extra, dvs = self._manifest(schema, name, version)
-        self._require_dirs(
-            schema, name, version,
-            {d for d, _ in part_map.values()} | set(extra) | set(dvs),
+        part_map, extra, dvs = self._readable_manifest(
+            schema, name, version
         )
         nt = self.null_token(schema, name)
-        tag = with_positions or bool(dvs)
         wanted = (
             None if partition_values is None else set(partition_values)
         )
@@ -2879,7 +2902,28 @@ class Lakehouse:
             raise FileNotFoundError(
                 f"{schema}.{name} has no data at version {version}"
             )
+        return self._drop_hidden(
+            self._union_frames(
+                spark, frames, schema, name, version, dvs, with_positions
+            )
+        )
+
+    def _union_frames(
+        self,
+        spark: SparkSession,
+        frames: list[DataFrame],
+        schema: str,
+        name: str,
+        version: int | None,
+        dvs: list[str],
+        with_positions: bool,
+    ) -> DataFrame:
+        """The common tail of `read` and `read_where`: one frame per
+        commit-dir slice → the table's logical rows (added-column
+        defaults filled, live deletion vectors anti-joined out, column
+        mapping applied; hidden columns still present)."""
         frames = self._fill_added(frames, schema, name, version)
+        tag = with_positions or bool(dvs)
         if tag:
             tdir = self._table_dir(schema, name)
             frames = [self._with_positions(f, tdir) for f in frames]
@@ -2892,9 +2936,7 @@ class Lakehouse:
             out = self._apply_dvs(
                 spark, out, dvs, keep_positions=with_positions
             )
-        return self._drop_hidden(
-            self._apply_column_mapping(out, schema, name, version)
-        )
+        return self._apply_column_mapping(out, schema, name, version)
 
     def read_where(
         self,
@@ -2931,7 +2973,9 @@ class Lakehouse:
         from .bloom import bloom_survives
         from .skipping import file_survives, predicates_to_column
 
-        part_map, extra, dvs = self._manifest(schema, name, version)
+        part_map, extra, dvs = self._readable_manifest(
+            schema, name, version
+        )
         path = self._table_dir(schema, name)
         nt = self.null_token(schema, name)
         stats_by_dir: dict[str, list[dict]] = {
@@ -3124,19 +3168,23 @@ class Lakehouse:
             return self.read(
                 spark, schema, name, version, with_positions
             ).filter(F.lit(False))
-        frames = self._fill_added(frames, schema, name, version)
-        tag = bool(dvs) or with_positions
-        if tag:
-            frames = [self._with_positions(f, path) for f in frames]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        if tag:
-            out = self._apply_dvs(
-                spark, out, dvs, keep_positions=with_positions
-            )
-        out = self._apply_column_mapping(out, schema, name, version)
+        out = self._union_frames(
+            spark, frames, schema, name, version, dvs, with_positions
+        )
         return self._drop_hidden(out.filter(residual))
+
+    def _readable_manifest(
+        self, schema: str, name: str, version: int | None = None
+    ):
+        """`_manifest`, refused with HistoryUnavailableError when vacuum
+        reclaimed any directory it references — what every versioned
+        read serves from, so none returns partial history."""
+        part_map, extra, dvs = self._manifest(schema, name, version)
+        self._require_dirs(
+            schema, name, version,
+            {d for d, _ in part_map.values()} | set(extra) | set(dvs),
+        )
+        return part_map, extra, dvs
 
     def _require_dirs(
         self, schema: str, name: str, version, dirs: set[str]
@@ -3761,10 +3809,8 @@ class Lakehouse:
         resolved = (
             entries[-1]["version"] if version is None else version
         )
-        part_map, extra, dvs = self._manifest(schema, name, version)
-        self._require_dirs(
-            schema, name, version,
-            {d for d, _ in part_map.values()} | set(extra) | set(dvs),
+        part_map, extra, dvs = self._readable_manifest(
+            schema, name, version
         )
         live_dvs = [d for d in dvs if _count_data_files(d) > 0]
         if live_dvs:
@@ -3944,7 +3990,10 @@ class Transaction:
     Data directories are written eagerly (named `_data/t<txn_id>`, so
     concurrent version numbering never collides); log visibility is
     deferred to `_commit`, whose FIRST action — one journal-line append
-    — is the atomic commit point for every table at once.
+    — is the atomic commit point for every table at once.  Each write
+    method records the table's base version, runs the `Lakehouse`
+    stager for its operation against this transaction's data dir, and
+    stages the returned entry; no write logic lives here.
     """
 
     def __init__(self, lake: Lakehouse):
@@ -4017,12 +4066,12 @@ class Transaction:
         partition_col: str | None = None,
         purge_condition=None,
     ) -> None:
-        """Stage a copy-on-write MERGE (same semantics as
-        `Lakehouse.merge_into`) inside the transaction: the merged
-        partitions are computed against the CURRENT table state at
-        stage time and become visible only at the journal commit —
-        so several tables' merges (e.g. an index's postings + doc
-        lengths + stats) land atomically.
+        """Stage a copy-on-write MERGE (`Lakehouse.merge_into`'s
+        stager) inside the transaction: the merged partitions are
+        computed against the CURRENT table state at stage time and
+        become visible only at the journal commit — so several tables'
+        merges (e.g. an index's postings + doc lengths + stats) land
+        atomically.
 
         `purge_condition` is the WHEN MATCHED DELETE leg (Delta MERGE
         analog): current rows where the predicate is TRUE are dropped
@@ -4033,65 +4082,12 @@ class Transaction:
         live under keys (and partitions) the update frame never
         mentions."""
         self._record_base(schema, name)
-        keys = [key] if isinstance(key, str) else list(key)
-        dup = (
-            updates.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(5)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"txn merge_into {schema}.{name}: duplicate keys "
-                f"{[tuple(r[k] for k in keys) for r in dup]}"
-            )
-        lake = self.lake
-        updates, partition_col = lake._resolve_partitioning(
-            updates, schema, name, partition_col
-        )
-        nt = lake.null_token(schema, name)
-        affected = {
-            _token_of(r[0], nt)
-            for r in updates.select(partition_col).distinct().collect()
-        }
-        current_full = lake._ensure_partition_col(
-            lake.read(spark, schema, name), schema, name, partition_col
-        )
-        if purge_condition is not None:
-            affected |= {
-                _token_of(r[0], nt)
-                for r in current_full.filter(purge_condition)
-                .select(partition_col)
-                .distinct()
-                .collect()
-            }
-        current = current_full.filter(
-            lake._pvalue_match(
-                F.col(partition_col), sorted(affected), nt
-            )
-        )
-        survivors = current.join(
-            updates.select(*keys).distinct(), keys, "left_anti"
-        )
-        if purge_condition is not None:
-            # SQL three-valued logic: only TRUE rows are purged
-            survivors = survivors.filter(
-                ~F.coalesce(purge_condition, F.lit(False))
-            )
         self._stage(
             schema, name,
-            lake._stage_overwrite_partitions(
-                survivors.unionByName(updates, allowMissingColumns=True),
-                schema, name, partition_col,
-                self._data_dir(schema, name),
-                # purge can empty a partition entirely — list the
-                # rewrite set explicitly so the commit still records
-                # (and supersedes) partitions the staged write
-                # produced no directory for
-                partitions=sorted(affected)
-                if purge_condition is not None
-                else None,
+            self.lake._stage_merge(
+                spark, schema, name, self._data_dir(schema, name),
+                updates, key, partition_col,
+                purge_condition=purge_condition,
             ),
         )
 
@@ -4105,235 +4101,29 @@ class Transaction:
         predicates: list[tuple] | None = None,
         mode: str = "copy_on_write",
     ) -> bool:
-        """Stage a row-level DELETE (same semantics as
-        `Lakehouse.delete_where`) inside the transaction — so a
-        multi-table erasure (an index's postings + doc lengths + stats
-        refresh) lands at one journal line and a reader can never
-        observe postings for a document whose length row is already
-        gone.  Returns True iff rows matched (False = nothing staged
-        for this table).
+        """Stage a row-level DELETE (`Lakehouse.delete_where`'s stager,
+        both modes) inside the transaction — so a multi-table erasure
+        (an index's postings + doc lengths + stats refresh) lands at
+        one journal line and a reader can never observe postings for a
+        document whose length row is already gone.  Returns True iff
+        rows matched (False = nothing staged for this table).
 
-        With `predicates` instead of `condition` (one source of truth,
-        like `Lakehouse.delete_where`), and when every triple is an
-        `=`/`in` on the table's hidden-partition SOURCE column, the
-        affected partitions are derived FORWARD through the transform
-        (`PartitionSpec.value_of`) — the discovery step costs zero
-        table scans, the shape a point erasure on a
-        bucket-partitioned key needs at 100 TB.  Other predicates fall
-        back to the scan-based discovery.
-
-        ``mode="merge_on_read"`` stages the Delta deletion-vector
-        shape instead (`Lakehouse.delete_where` MoR twin): ONE small
-        parquet of the matching rows' physical positions, no data
-        rewritten — write cost O(deleted rows) where copy-on-write
-        rewrites every affected partition wholly (a bucket-partitioned
-        postings table can see a single document's erasure touch most
-        buckets).  With `predicates`, the position-finding scan routes
-        through `read_where` (stats/Bloom pruning).  Readers anti-join
-        the vector out until `compact()` materializes; the journal
-        line stays the atomic point for every staged table at once."""
-        lake = self.lake
+        ``mode="merge_on_read"`` stages ONE small deletion-vector
+        parquet instead of rewriting every affected partition wholly
+        (a bucket-partitioned postings table can see a single
+        document's erasure touch most buckets); the journal line stays
+        the atomic point for every staged table at once."""
+        _check_filter("delete_where", condition, predicates)
+        _check_mode("delete_where", mode)
         self._record_base(schema, name)
-        if (condition is None) == (predicates is None):
-            raise ValueError(
-                "txn delete_where: pass exactly one of condition or "
-                "predicates"
-            )
-        if mode == "merge_on_read":
-            if predicates is not None:
-                scanned = lake.read_where(
-                    spark, schema, name, predicates,
-                    with_positions=True,
-                )
-            else:
-                # TRUE rows only (SQL three-valued logic)
-                scanned = lake.read(
-                    spark, schema, name, with_positions=True
-                ).filter(condition)
-            matches = scanned.select(
-                F.col("__dv_file").alias("file_path"),
-                F.col("__dv_pos").alias("row_index"),
-            )
-            if matches.limit(1).count() == 0:
-                return False  # no matches → nothing staged (CoW parity)
-            data_dir = self._data_dir(schema, name)
-            matches.coalesce(1).write.mode("overwrite").parquet(data_dir)
-            self._stage(
-                schema, name,
-                dict(
-                    op="delete_dv",
-                    data_dir=os.path.relpath(
-                        data_dir, lake._table_dir(schema, name)
-                    ),
-                ),
-            )
-            return True
-        if mode != "copy_on_write":
-            raise ValueError(
-                f"txn delete_where: unknown mode {mode!r} "
-                "(copy_on_write | merge_on_read)"
-            )
-        if predicates is not None:
-            from .skipping import predicates_to_column
-
-            condition = predicates_to_column(predicates)
-        affected: list[str] | None = None
-        spec = lake.partition_spec(schema, name)
-        if (
-            predicates is not None
-            and partition_col is None
-            and spec is not None
-            and all(
-                p[0] == spec.source and p[1] in ("=", "==", "in")
-                for p in predicates
-            )
-        ):
-            cand: set[str] = set()
-            for _, op, val in predicates:
-                vals = val if op == "in" else (val,)
-                cand.update(spec.value_of(v) for v in vals)
-            # live partition values: the mapped partitions PLUS any
-            # values sitting in additive (append) dirs, read off their
-            # spec subdirectory names — an appended row's bucket may
-            # not be in part_map yet.  An additive dir WITHOUT spec
-            # subdirs hides its values: fall back to scan discovery
-            # rather than risk missing a bucket.
-            part_map, extra, _dvs = lake._manifest(schema, name)
-            live = set(part_map)
-            pfx = f"{spec.hidden_col}="
-            nt = lake.null_token(schema, name)
-            opaque_additive = False
-            for d in extra:
-                subs = [
-                    s for s in (
-                        os.listdir(d) if os.path.isdir(d) else ()
-                    )
-                    if s.startswith(pfx)
-                ]
-                if subs:
-                    # CANONICAL tokens (escaped / NULL-sentinel dir
-                    # names must intersect with value_of's canonical
-                    # output, not their raw spelling)
-                    live.update(
-                        _canon_token(s[len(pfx):], nt) for s in subs
-                    )
-                elif _count_data_files(d) > 0:
-                    opaque_additive = True
-            if not opaque_additive:
-                affected = sorted(cand & live)
-                if not affected:
-                    return False
-                # the derived buckets may hold none of the ids (id
-                # absent from the table): keep the rows-matched
-                # contract with ONE pruned existence probe.  Only on
-                # this branch — the scan-discovery fallback below
-                # answers the same question itself
-                if (
-                    lake.read_where(spark, schema, name, predicates)
-                    .limit(1)
-                    .count()
-                    == 0
-                ):
-                    return False
-        current = lake.read(spark, schema, name)
-        if partition_col is None:
-            current, partition_col = lake._resolve_partitioning(
-                current, schema, name, None
-            )
-        else:
-            current = lake._ensure_partition_col(
-                current, schema, name, partition_col
-            )
-        if (
-            affected is None
-            and predicates is not None
-            and spec is not None
-            and partition_col == spec.hidden_col
-        ):
-            # predicates on a NON-source column of a hidden-partitioned
-            # table (e.g. erase-by-doc_id from a bucket(term) postings
-            # table): forward derivation can't apply, but the discovery
-            # scan can still be stats/Bloom-pruned — open only the
-            # read_where-surviving files and read the touched bucket
-            # tokens off their paths.  None = a matching row lives in a
-            # flat additive file (no token in its path) → fall back to
-            # the full scan below
-            affected = self._probe_affected_tokens(
-                spark, schema, name, predicates, partition_col
-            )
-            if affected is not None and not affected:
-                return False
-        if affected is None:
-            affected = [
-                _token_of(r[0], lake.null_token(schema, name))
-                for r in current.filter(condition)
-                .select(partition_col)
-                .distinct()
-                .collect()
-            ]
-        if not affected:
+        entry = self.lake._stage_delete(
+            spark, schema, name, self._data_dir(schema, name),
+            condition, predicates, partition_col, mode,
+        )
+        if entry is None:
             return False
-        survivors = current.filter(
-            lake._pvalue_match(
-                F.col(partition_col), affected,
-                lake.null_token(schema, name),
-            )
-        ).filter(~F.coalesce(condition, F.lit(False)))
-        self._stage(
-            schema, name,
-            lake._stage_overwrite_partitions(
-                survivors, schema, name, partition_col,
-                self._data_dir(schema, name), partitions=affected,
-            ),
-        )
+        self._stage(schema, name, entry)
         return True
-
-    def _probe_affected_tokens(
-        self,
-        spark: SparkSession,
-        schema: str,
-        name: str,
-        predicates: list[tuple],
-        pcol: str,
-    ) -> list[str] | None:
-        """Pruned partition discovery for a staged DELETE: instead of
-        scanning every partition for matches, read only the
-        stats/Bloom-surviving files (`read_where`) and take the
-        touched partition TOKENS from the matching rows' file paths —
-        the same `<pcol>=<token>` segments the forward-derivation
-        branch reads off directory names, so the tokens feed
-        `_pvalue_match` unchanged.  With a Bloom index on the
-        predicate column this is O(matching files), not O(table).
-
-        Returns [] when no rows match anywhere (caller commits
-        nothing), or None when any matching row sits in a file whose
-        path carries no `<pcol>=` segment (flat additive file — its
-        partition value can't be attributed from the path; caller
-        falls back to scan discovery)."""
-        from urllib.parse import unquote
-
-        probe = self.lake.read_where(
-            spark, schema, name, predicates, with_positions=True
-        )
-        pfx = f"{os.sep}{pcol}="
-        nt = self.lake.null_token(schema, name)
-        toks: set[str] = set()
-        for r in probe.select("__dv_file").distinct().collect():
-            f = r[0]
-            i = f.rfind(pfx)
-            if i < 0:
-                return None
-            seg = f[i + len(pfx):].split(os.sep, 1)[0]
-            # two encoding layers peel off here: `__dv_file` comes from
-            # `_metadata.file_path`, a URI (the on-disk '%' of a
-            # hive-escaped name arrives as '%25'), so unquote once to
-            # the on-disk directory name, then _canon_token undoes the
-            # hive escaping / NULL sentinel to the catalog's canonical
-            # token — the form _pvalue_match and the commit log speak.
-            # Anything less and a NULL/escaped partition records a
-            # token no reader matches, silently skipping the partition.
-            toks.add(_canon_token(unquote(seg), nt))
-        return sorted(toks)
 
     def append(self, df: DataFrame, schema: str, name: str) -> None:
         self._record_base(schema, name)

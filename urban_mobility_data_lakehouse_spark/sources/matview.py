@@ -239,20 +239,13 @@ class MaterializedView:
 
     def _full_build(self, spark: SparkSession, current: int) -> dict:
         """Replace the whole view in one commit: every partition the
-        rebuild holds AND every partition the view holds now, which a
-        df-derived partition set would leave stale when its base rows
-        vanished entirely."""
-        state = self._aggregate(self.lake.read(spark, *self.base))
-        old = set(self.lake._manifest(*self.view)[0])
-        parts = None
-        if old:
-            parts = sorted(
-                old | set(self._tokens(self.view, self._values(state)))
-            )
+        rebuild writes AND every partition the view holds now, listed
+        so a partition whose base rows vanished entirely does not stay
+        stale."""
         self.lake.overwrite_partitions(
-            state, *self.view,
+            self._aggregate(self.lake.read(spark, *self.base)), *self.view,
             partition_col=self.partition_col,
-            partitions=parts,
+            partitions=sorted(self.lake._manifest(*self.view)[0]),
             extra_meta={META_KEY: current},
         )
         return {"strategy": "full", "from": None, "to": current}
