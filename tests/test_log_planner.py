@@ -1,0 +1,210 @@
+"""Reads plan from the commit log, never from the filesystem.
+
+Every commit entry that adds files lists them (path, rows, bytes,
+footer stats) with the dir's Spark read schema; `Lakehouse._plan`
+turns those lists into the scan.  Under test: no read-side directory
+listing under `<table>/_data`, a logged schema equal to the schema
+Spark infers for every write op, no Spark job on the first read of a
+fresh commit dir, and one log parse per vacuum whatever the history
+length.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+
+import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.types import StructType
+
+from urban_mobility_data_lakehouse_spark.sources.lakehouse import Lakehouse
+
+
+@pytest.fixture()
+def lake(tmp_path):
+    lk = Lakehouse(str(tmp_path / "lake"))
+    lk.create_schemas("silver")
+    return lk
+
+
+def _rows(spark, lo, n, day="2024-03-01"):
+    """Typed rows: int id, string, timestamps with and without zone,
+    decimal, and a date key spread over three days."""
+    return spark.range(lo, lo + n).select(
+        F.col("id").cast("int").alias("id"),
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("s"),
+        F.lit("2024-03-01 10:00:00").cast("timestamp").alias("ts"),
+        F.lit("2024-03-01 10:00:00").cast("timestamp_ntz").alias("tn"),
+        (F.col("id") / 7).cast("decimal(25,6)").alias("amt"),
+        F.date_add(F.lit(day).cast("date"), (F.col("id") % 3).cast("int"))
+        .alias("d"),
+    )
+
+
+def _assert_logged_schema(spark, lake, name):
+    e = lake.snapshots("silver", name)[-1]
+    d = os.path.join(lake._table_dir("silver", name), e["data_dir"])
+    inferred = spark.read.option("basePath", d).parquet(d).schema
+    assert StructType.fromJson(e["schema"]) == inferred, e["operation"]
+
+
+def test_logged_schema_matches_inference_for_every_write_op(spark, lake):
+    lake.overwrite_partitions(_rows(spark, 0, 30), "silver", "t", "d")
+    _assert_logged_schema(spark, lake, "t")
+    lake.append(_rows(spark, 100, 6), "silver", "t")
+    _assert_logged_schema(spark, lake, "t")
+    lake.merge_into(
+        spark, "silver", "t", _rows(spark, 3, 2), "id", partition_col="d"
+    )
+    assert lake.snapshots("silver", "t")[-1]["operation"] == (
+        "overwrite_partitions"
+    )
+    _assert_logged_schema(spark, lake, "t")
+    lake.merge_into(
+        spark, "silver", "t", _rows(spark, 4, 2), "id",
+        mode="merge_on_read",
+    )
+    assert lake.snapshots("silver", "t")[-1]["operation"] == "update_mor"
+    _assert_logged_schema(spark, lake, "t")
+    assert lake.delete_where(
+        spark, "silver", "t", F.col("id") == 7, partition_col="d"
+    )
+    _assert_logged_schema(spark, lake, "t")
+    assert lake.delete_where(
+        spark, "silver", "t", F.col("id") == 8, mode="merge_on_read"
+    )
+    assert lake.snapshots("silver", "t")[-1]["operation"] == "delete_dv"
+    _assert_logged_schema(spark, lake, "t")
+    assert lake.update_where(
+        spark, "silver", "t", F.col("id") == 9, {"s": F.lit("upd")},
+        partition_col="d",
+    )
+    _assert_logged_schema(spark, lake, "t")
+    lake.compact(spark, "silver", "t", partition_col="d", vacuum=False)
+    assert lake.snapshots("silver", "t")[-1]["operation"] == (
+        "compact_partitioned"
+    )
+    _assert_logged_schema(spark, lake, "t")
+
+    # full writes, with nested types (nullability is made uniform all
+    # the way down, as Spark's read path does)
+    nested = _rows(spark, 0, 5).withColumns({
+        "arr": F.array(F.col("id"), F.lit(None).cast("int")),
+        "st": F.struct(F.col("s").alias("a"), F.col("id").alias("b")),
+        "mp": F.create_map(F.col("s"), F.col("amt")),
+    })
+    lake.overwrite(nested, "silver", "u")
+    _assert_logged_schema(spark, lake, "u")
+    lake.compact(spark, "silver", "u", vacuum=False)
+    assert lake.snapshots("silver", "u")[-1]["operation"] == "compact"
+    _assert_logged_schema(spark, lake, "u")
+
+    lake.set_partition_spec("silver", "h", "days(ts)")
+    lake.append(_rows(spark, 0, 5), "silver", "h")
+    _assert_logged_schema(spark, lake, "h")
+
+    with lake.transaction() as txn:
+        txn.overwrite_partitions(_rows(spark, 50, 4), "silver", "x", "d")
+        txn.append(_rows(spark, 60, 4), "silver", "y")
+    _assert_logged_schema(spark, lake, "x")
+    _assert_logged_schema(spark, lake, "y")
+
+
+def test_read_paths_never_list_the_data_dirs(spark, lake, monkeypatch):
+    lake.overwrite_partitions(_rows(spark, 0, 30), "silver", "t", "d")
+    lake.overwrite_partitions(
+        _rows(spark, 100, 3, day="2024-03-02"), "silver", "t", "d"
+    )
+    lake.append(_rows(spark, 200, 4), "silver", "t")
+    lake.set_partition_spec("silver", "h", "days(ts)")
+    lake.append(_rows(spark, 0, 5), "silver", "h")
+    lake.append(
+        _rows(spark, 10, 5).withColumn(
+            "ts", F.lit("2024-03-05 10:00:00").cast("timestamp")
+        ),
+        "silver", "h",
+    )
+    data = os.path.join(lake.root, "silver")
+    seen: list[str] = []
+
+    def spy(real):
+        def wrapped(p=".", *a, **k):
+            if "_data" in os.fspath(p) and os.fspath(p).startswith(data):
+                seen.append(f"{real.__name__} {p}")
+            return real(p, *a, **k)
+
+        return wrapped
+
+    for fn in ("walk", "listdir", "scandir"):
+        monkeypatch.setattr(os, fn, spy(getattr(os, fn)))
+
+    # live: 03-01 from the first overwrite (10 rows), 03-02..03-04
+    # from the second (1 row each), and the 4 appended rows
+    assert lake.read(spark, "silver", "t").count() == 17
+    assert lake.read(
+        spark, "silver", "t", partition_values=["2024-03-02"]
+    ).count() == 2  # id 102, and appended id 202
+    pruned = lake.read_where(
+        spark, "silver", "h",
+        [("ts", ">=", dt.datetime(2024, 3, 4))],
+    )
+    assert pruned.count() == 5
+    assert len(pruned.inputFiles()) == 1  # the other day is pruned
+    assert lake.read_changes(spark, "silver", "t", 0).count() > 0
+    detail = lake.describe_detail("silver", "t")
+    assert detail["num_rows"] == 17
+    assert detail["size_bytes"] > 0
+    assert lake.recommend_compaction("silver", "t")["unpartitioned_dirs"] == 1
+    lake.compact(spark, "silver", "t", partition_col="d", vacuum=False)
+    seen.clear()  # compact's own write path may list what it wrote
+    assert len(lake.export_manifest("silver", "t", write=False)["files"]) == 4
+    assert seen == []
+
+
+def test_first_read_of_fresh_commit_dir_runs_no_job(spark, lake):
+    lake.overwrite_partitions(_rows(spark, 0, 30), "silver", "t", "d")
+    lake.append(_rows(spark, 100, 6), "silver", "t")
+    assert lake.delete_where(
+        spark, "silver", "t", F.col("id") == 8, mode="merge_on_read"
+    )
+    sc = spark.sparkContext
+    group = "log-planner-fresh-read"
+    sc.setJobGroup(group, group)
+    try:
+        frames = [
+            lake.read(spark, "silver", "t"),
+            lake.read(spark, "silver", "t", partition_values=["2024-03-02"]),
+            lake.read_where(spark, "silver", "t", [("id", "<", 5)]),
+        ]
+        cols = [f.columns for f in frames]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all("amt" in c for c in cols)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert frames[0].count() == 35
+
+
+def test_vacuum_parses_the_log_once(spark, lake, monkeypatch):
+    lake.append(_rows(spark, 0, 3), "silver", "t")
+    calls = []
+    real = Lakehouse._raw_snapshots
+
+    def counting(self, *a):
+        calls.append(a)
+        return real(self, *a)
+
+    monkeypatch.setattr(Lakehouse, "_raw_snapshots", counting)
+
+    def vacuum_calls(n_commits):
+        while len(lake.snapshots("silver", "t")) < n_commits:
+            lake.restore("silver", "t", 0)  # a metadata-only commit
+        calls.clear()
+        lake.vacuum("silver", "t", keep_version=0, dry_run=True)
+        return len(calls)
+
+    short, long = vacuum_calls(10), vacuum_calls(40)
+    assert short == long <= 2
+    calls.clear()
+    assert lake.fsck("silver", "t")["ok"]
+    assert len(calls) <= 4

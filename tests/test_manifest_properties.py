@@ -192,13 +192,9 @@ def test_manifest_contract_under_random_op_tape(spark, tmp_path, seed):
             )
         except ManifestExportError:
             part_map, extra, dvs = lake._manifest("silver", "t")
-            has_dv = any(
-                __import__(
-                    "urban_mobility_data_lakehouse_spark.sources."
-                    "lakehouse", fromlist=["_count_data_files"]
-                )._count_data_files(d) > 0
-                for d in dvs
-            )
+            has_dv = lake.describe_detail("silver", "t")[
+                "num_deletion_vectors"
+            ] > 0
             has_excl = any(excl for excl in extra.values())
             has_default = any(
                 a["default"] is not None

@@ -105,11 +105,23 @@ def test_read_where_in_list(spark, tmp_path):
 
 
 def test_read_where_without_stats_still_correct(spark, tmp_path):
-    """collect_stats=False (or a pre-stats log): pruning no-ops, the
-    residual filter alone answers the query."""
-    lake = _mk_lake(tmp_path, collect_stats=False)
+    """A log written before entries listed their files (no `files`, no
+    `schema`): the planner lists those dirs itself, pruning no-ops,
+    and the residual filter alone answers the query."""
+    import json
+    import os
+
+    lake = _mk_lake(tmp_path)
     for lo in (0, 1000):
         _append_range(spark, lake, lo, lo + 1000)
+    log = os.path.join(lake._table_dir("silver", "t"), "_snapshots.jsonl")
+    with open(log) as f:
+        lines = [json.loads(line) for line in f]
+    with open(log, "w") as f:
+        for e in lines:
+            e.pop("files", None)
+            e.pop("schema", None)
+            f.write(json.dumps(e) + "\n")
     assert "files" not in lake.snapshots("silver", "t")[-1]
     out = lake.read_where(spark, "silver", "t", [("id", ">=", 1500)])
     assert len(out.inputFiles()) == 2  # no stats → no pruning

@@ -96,7 +96,6 @@ def test_lakehouse_compact(spark, tmp_path):
 
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         Lakehouse,
-        _count_data_files,
     )
     from urban_mobility_data_lakehouse_spark.sources.testdata import (
         load_table,
@@ -116,12 +115,11 @@ def test_lakehouse_compact(spark, tmp_path):
     )
     lake.append(events.filter(F.col("event_id") % 3 == 1), "silver", "frag")
     lake.append(events.filter(F.col("event_id") % 3 == 2), "silver", "frag")
-    path = str(tmp_path / "lake" / "silver" / "frag")
     before_rows = sorted(
         (r["event_id"], r["value"]) for r in lake.read(spark, "silver", "frag").collect()
     )
     n_parts = events.select("partition_date").distinct().count()
-    assert _count_data_files(path) > n_parts
+    assert lake.describe_detail("silver", "frag")["num_files"] > n_parts
 
     stats = lake.compact(
         spark, "silver", "frag", partition_col="partition_date",

@@ -53,7 +53,8 @@ import os
 import re
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -179,8 +180,8 @@ def _canon_token(raw: str, null_token: str = "None") -> str:
     NULL token (`Lakehouse.null_token` — 'None' on legacy tables, the
     sentinel itself on format-v2 tables, where this mapping is the
     identity) and hive %-escaping is undone.  EVERY comparison between
-    commit-log partition tokens and on-disk `<pcol>=<raw>` names must
-    go through this (or `_pvalue_subdirs`) — matching the constructed
+    commit-log partition tokens and `<pcol>=<raw>` path segments must
+    go through this — matching the constructed
     canonical name against escaped/sentinel directories silently drops
     those partitions (found via a NULL-keyed erasure miss, r11)."""
     from urllib.parse import unquote
@@ -193,25 +194,63 @@ def _token_of(value, null_token: str = "None") -> str:
     return null_token if value is None else str(value)
 
 
-def _pvalue_subdirs(
-    d: str, pcol: str, values, null_token: str = "None"
+def _path_tokens(rel_path: str) -> dict[str, str]:
+    """Partition column → RAW token for every `<pcol>=<raw>` directory
+    segment of a logged file path (relative to its commit dir); compare
+    with catalog tokens only through `_canon_token`."""
+    return dict(
+        seg.split("=", 1) for seg in rel_path.split(os.sep)[:-1] if "=" in seg
+    )
+
+
+# the deletion-vector file layout (`Lakehouse._stage_dv`)
+_DV_SCHEMA = "file_path string, row_index long"
+
+
+@dataclass
+class _Slice:
+    """One commit dir's share of a planned read (`Lakehouse._plan`)."""
+
+    d: str  # the commit dir; Spark's basePath
+    roots: list[str]  # the paths Spark is handed
+    files: list[dict]  # the planned files' log records (paths under d)
+    schema: dict | None  # the dir's logged Spark read schema
+    # rows kept: partition column ∈ canonical tokens
+    keep: tuple[str, list[str]] | None = None
+    # additive dirs only: partitions superseded by later overwrites
+    excl: dict[str, list[str]] | None = None
+
+
+class _Plan(NamedTuple):
+    slices: list[_Slice]
+    dvs: list[str]  # live deletion-vector dirs
+    partition_cols: list[str]  # the manifest's partition columns
+    version: int | None  # the planned version (None: no commits)
+
+
+def _roots(
+    d: str, files: list[dict], live: list[dict], kept: list[dict]
 ) -> list[str]:
-    """Existing `<pcol>=<raw>` subdirectories of `d` whose CANONICAL
-    token is in `values` — one listdir, escaped and NULL-sentinel
-    names matched correctly (see `_canon_token`)."""
-    pfx = f"{pcol}="
-    want = set(values)
-    try:
-        names = os.listdir(d)
-    except OSError:
-        return []
-    return [
-        p
-        for n in sorted(names)
-        if n.startswith(pfx)
-        and _canon_token(n[len(pfx):], null_token) in want
-        and os.path.isdir(p := os.path.join(d, n))
-    ]
+    """Spark's roots for a slice: the whole dir when the plan kept every
+    live file (the slice's filters drop superseded rows), the kept
+    partitions' subdirs when whole partitions were pruned, else the
+    kept files.  Few roots matter: past
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    Spark lists them with a job of its own."""
+    if len(kept) == len(live):
+        return [d]
+    kept_paths = {f["path"] for f in kept}
+    subs = {
+        f["path"].split(os.sep, 1)[0] if os.sep in f["path"] else None
+        for f in kept
+    }
+    if None not in subs and all(
+        f["path"] in kept_paths
+        for f in files
+        if f["path"].split(os.sep, 1)[0] in subs
+    ):
+        return [os.path.join(d, sub) for sub in sorted(subs)]
+    return [os.path.join(d, f["path"]) for f in kept]
 
 
 def _with_meta(entry: dict, extra_meta: dict | None) -> dict:
@@ -263,12 +302,10 @@ class Lakehouse:
     (bronze/silver/gold → subdirectories, the CREATE SCHEMA analog)."""
 
     root: str
-    # Delta's dataSkippingNumIndexedCols analog: commit-log entries
-    # carry per-file min/max/null_count footer stats for the first
-    # `stats_max_columns` leaf columns (collect_stats=False opts out;
-    # older logs without stats stay readable — pruning just no-ops).
-    collect_stats: bool = True
-    stats_max_columns: int = 32
+    # Every commit entry that adds files lists them (path, rows, bytes,
+    # footer min/max/null stats) together with the dir's Spark read
+    # schema (`skipping.collect_file_stats`); reads plan from that
+    # record (`_plan`), never from a directory listing.
     # Delta checkpoint analog: every `checkpoint_interval` commits the
     # writer snapshots the REPLAYED manifest to `_checkpoints/v<N>.json`,
     # so readers replay only the log suffix after the newest checkpoint
@@ -1099,33 +1136,31 @@ class Lakehouse:
         schema: str | None = None,
         name: str | None = None,
     ) -> dict:
-        """Record per-file footer stats in the commit entry (the Delta
-        add-action stats analog) — the data-skipping index consulted by
-        `read_where`.  Driver-side footer reads only; no Spark job —
-        unless the table has Bloom indexes (`add_bloom_index`), which
-        add one bounded Spark aggregate per indexed column over the new
-        files."""
-        if self.collect_stats:
-            from .skipping import collect_file_stats
+        """Record the new files in the commit entry (the Delta
+        add-action analog): per-file rows, bytes and footer stats plus
+        the dir's read schema (`skipping.collect_file_stats`) — what
+        `_plan` serves every read from.  Driver-side footer reads only;
+        no Spark job — unless the table has Bloom indexes
+        (`add_bloom_index`), which add one bounded Spark aggregate per
+        indexed column over the new files."""
+        from .skipping import collect_file_stats
 
-            entry["files"] = collect_file_stats(
-                data_dir, max_columns=self.stats_max_columns
-            )
-            cfg = (
-                self.bloom_index(schema, name)
-                if schema is not None and name is not None
-                else {}
-            )
-            if cfg and entry["files"]:
-                from .bloom import build_file_blooms
+        entry.update(collect_file_stats(data_dir))
+        cfg = (
+            self.bloom_index(schema, name)
+            if schema is not None and name is not None
+            else {}
+        )
+        if cfg and entry["files"]:
+            from .bloom import build_file_blooms
 
-                spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    blooms = build_file_blooms(spark, data_dir, cfg)
-                    for f in entry["files"]:
-                        b = blooms.get(f["path"])
-                        if b:
-                            f["bloom"] = b
+            spark = SparkSession.getActiveSession()
+            if spark is not None:
+                blooms = build_file_blooms(spark, data_dir, cfg)
+                for f in entry["files"]:
+                    b = blooms.get(f["path"])
+                    if b:
+                        f["bloom"] = b
         return entry
 
     @staticmethod
@@ -1198,18 +1233,24 @@ class Lakehouse:
             .partitionBy(partition_col)
             .parquet(data_dir)
         )
+        entry = self._attach_stats(
+            dict(
+                op="overwrite_partitions", partition_col=partition_col,
+                data_dir=os.path.relpath(data_dir, path),
+            ),
+            data_dir,
+            schema,
+            name,
+        )
         # the superseded set: every partition the write produced, read
-        # off the directory names partitionBy just wrote (no second
-        # pass over the df's lineage), plus the caller's `partitions`
-        # — a partition the rewrite emptied (delete_where removed all
-        # its rows) has no directory but must still be superseded
-        prefix = f"{partition_col}="
-        raw = [
-            d[len(prefix):]
-            for d in os.listdir(data_dir)
-            if d.startswith(prefix)
-            and os.path.isdir(os.path.join(data_dir, d))
-        ]
+        # off the file paths partitionBy just wrote (no second pass
+        # over the df's lineage), plus the caller's `partitions` — a
+        # partition the rewrite emptied (delete_where removed all its
+        # rows) has no directory but must still be superseded
+        raw = {
+            t for f in entry["files"]
+            if (t := _path_tokens(f["path"]).get(partition_col)) is not None
+        }
         # a NULL partition value writes the sentinel directory
         # __HIVE_DEFAULT_PARTITION__.  On format-v2 tables (every
         # table this code creates) the sentinel IS the canonical NULL
@@ -1229,16 +1270,8 @@ class Lakehouse:
             )
         parts = {_canon_token(t, nt) for t in raw}
         parts.update(str(p) for p in partitions or ())
-        return self._attach_stats(
-            dict(
-                op="overwrite_partitions",
-                partitions=sorted(parts), partition_col=partition_col,
-                data_dir=os.path.relpath(data_dir, path),
-            ),
-            data_dir,
-            schema,
-            name,
-        )
+        entry["partitions"] = sorted(parts)
+        return entry
 
     def _guard_legacy_null_mix(
         self,
@@ -1287,26 +1320,17 @@ class Lakehouse:
     def _live_raw_tokens(
         self, schema: str, name: str, pcol: str
     ) -> set[str]:
-        """RAW `<pcol>=<token>` directory names across every live data
-        dir — the one vantage point where NULL (sentinel dir) and a
-        literal string 'None' are physically distinguishable.  Used
-        only by the legacy-table mix guard, and only when the incoming
-        write actually carries one of the two forms (never on the hot
-        path)."""
-        part_map, extra, _dvs = self._manifest(schema, name)
-        dirs = {d for d, pc in part_map.values() if pc == pcol}
-        dirs |= set(extra)
-        pfx = f"{pcol}="
-        out: set[str] = set()
-        for d in dirs:
-            try:
-                names = os.listdir(d)
-            except OSError:
-                continue
-            out.update(
-                n[len(pfx):] for n in names if n.startswith(pfx)
-            )
-        return out
+        """RAW `<pcol>=<token>` directory names of every live file —
+        the one vantage point where NULL (sentinel dir) and a literal
+        string 'None' are physically distinguishable.  Used only by the
+        legacy-table mix guard and the null-token migration (never on
+        the hot path)."""
+        return {
+            t
+            for sl in self._plan(schema, name).slices
+            for f in sl.files
+            if (t := _path_tokens(f["path"]).get(pcol)) is not None
+        }
 
     def _stage_full_write(
         self, df: DataFrame, schema: str, name: str, op: str, data_dir: str
@@ -1860,17 +1884,21 @@ class Lakehouse:
             F.col("__dv_pos").alias("row_index"),
         ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
         if new_rows is None:
-            return dict(
-                op="delete_dv", data_dir=os.path.relpath(dv_dir, path)
+            return self._attach_stats(
+                dict(op="delete_dv", data_dir=os.path.relpath(dv_dir, path)),
+                dv_dir,
             )
         self._to_physical(new_rows, schema, name).write.mode(
             "overwrite"
         ).parquet(data_dir)
+        from .skipping import collect_file_stats
+
         return self._attach_stats(
             dict(
                 op="update_mor",
                 data_dir=os.path.relpath(data_dir, path),
                 dv_dir=os.path.relpath(dv_dir, path),
+                dv_files=collect_file_stats(dv_dir, max_columns=0)["files"],
             ),
             data_dir,
             schema,
@@ -2078,9 +2106,9 @@ class Lakehouse:
         files into `target_files_per_partition` right-sized ones.
 
         `target_file_bytes` sizes the output by BYTES instead (Delta's
-        `maxFileSize` knob, ~1 GiB in production): the live size from
-        `describe_detail` (pure log arithmetic) divides into a file
-        count — per partition when partitioned (averaged over live
+        `maxFileSize` knob, ~1 GiB in production): the live size of the
+        log-planned files (`_plan`, pure log arithmetic) divides into a
+        file count — per partition when partitioned (averaged over live
         partitions), total otherwise — overriding
         `target_files_per_partition`.  The knob that matters at 100 TB:
         a fixed files-per-partition count right for day one is wrong
@@ -2132,7 +2160,9 @@ class Lakehouse:
         # interleaved append raises ConcurrentWriteError and the
         # compact retries over the newer state.
         version, data_dir = self._next_data_dir(schema, name)
-        before = self._count_live_files(schema, name)
+        plan = self._plan(schema, name)
+        before = sum(len(sl.files) for sl in plan.slices)
+        live_values = self._manifest(schema, name)[0]
         df = self.read(spark, schema, name)
         # rewrite in PHYSICAL names (the namespace every data dir
         # shares); sort/zorder args arrive logical and translate the
@@ -2167,8 +2197,7 @@ class Lakehouse:
                     "compact: partitions=/where= need a partitioned "
                     "table (partition_col or a hidden spec)"
                 )
-            _pm, extras_live, _dvs = self._manifest(schema, name)
-            if any(_count_data_files(x) > 0 for x in extras_live):
+            if any(sl.excl is not None for sl in plan.slices):
                 raise ValueError(
                     "compact: partition-scoped compaction needs a "
                     "partition-disciplined table — additive commit "
@@ -2195,8 +2224,7 @@ class Lakehouse:
                     spark.conf.get("spark.sql.session.timeZone"),
                 )
                 values = {
-                    v
-                    for v in self._manifest(schema, name)[0]
+                    v for v in live_values
                     if partition_survives(spec, preds, v)
                 }
             df = df.filter(
@@ -2208,14 +2236,10 @@ class Lakehouse:
         if target_file_bytes is not None:
             import math
 
-            detail = self.describe_detail(schema, name)
-            live_parts = len(self._manifest(schema, name)[0]) or 1
-            denom = live_parts if partition_col is not None else 1
+            size = sum(f["bytes"] for sl in plan.slices for f in sl.files)
+            denom = (len(live_values) or 1) if partition_col else 1
             target_files_per_partition = max(
-                1,
-                math.ceil(
-                    detail["size_bytes"] / denom / target_file_bytes
-                ),
+                1, math.ceil(size / denom / target_file_bytes)
             )
         zcol = "__zorder_key"
         if zorder_by:
@@ -2239,9 +2263,8 @@ class Lakehouse:
                 )
                 # explicit task count: AQE would otherwise coalesce
                 # small shuffles back to one task per partition
-                n_parts = len(self._manifest(schema, name)[0]) or 1
                 compacted = df.repartition(
-                    n_parts * target_files_per_partition,
+                    (len(live_values) or 1) * target_files_per_partition,
                     F.col(partition_col),
                     bucket,
                 )
@@ -2322,27 +2345,11 @@ class Lakehouse:
         return {"files_before": before, "files_after": after}
 
     def _count_live_files(self, schema: str, name: str) -> int:
-        """Data files reachable from the LATEST manifest only: each
-        live partition's slice of its version directory plus the
-        additive (append/MoR-update) dirs.  Superseded version dirs —
-        still on disk for time travel or awaiting the vacuum grace —
-        are not layout; counting them made OPTIMIZE metrics depend on
-        reclamation timing."""
-        part_map, extras, _dvs = self._manifest(schema, name)
-        nt = self.null_token(schema, name)
-        n = 0
-        seen: set[str] = set()
-        for value, (d, pcol) in part_map.items():
-            subs = _pvalue_subdirs(d, pcol, [value], nt)
-            for p in subs if subs else [d]:
-                if p not in seen:
-                    seen.add(p)
-                    n += _count_data_files(p)
-        for d in extras:
-            if d not in seen:
-                seen.add(d)
-                n += _count_data_files(d)
-        return n
+        """Data files reachable from the LATEST manifest only (`_plan`).
+        Superseded version dirs — still on disk for time travel or
+        awaiting the vacuum grace — are not layout; counting them made
+        OPTIMIZE metrics depend on reclamation timing."""
+        return sum(len(sl.files) for sl in self._plan(schema, name).slices)
 
     def vacuum_retain(
         self,
@@ -2443,10 +2450,12 @@ class Lakehouse:
         entries = self.snapshots(schema, name)
         if not entries:
             return {"dirs": [], "bytes": 0}
+        path = self._table_dir(schema, name)
         keep: set[str] = set()
         last_ref: dict[str, int] = {}
+        # one log parse: every version's manifest replays from it
         for v in range(entries[-1]["version"] + 1):
-            part_map, extra, dvs = self._manifest(schema, name, v)
+            part_map, extra, dvs = self._replay(entries, path, v)
             dirs = {d for d, _ in part_map.values()} | set(extra) | set(dvs)
             for d in dirs:
                 last_ref[d] = v
@@ -2498,7 +2507,8 @@ class Lakehouse:
     # -- reads (incl. versioned time travel) -------------------------------
 
     def _manifest(
-        self, schema: str, name: str, version: int | None = None
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
     ) -> tuple[
         dict[str, tuple[str, str]], dict[str, dict[str, list[str]]],
         list[str],
@@ -2508,7 +2518,8 @@ class Lakehouse:
         live deletion-vector dirs).  Pure log arithmetic — no
         filesystem listing, no Spark job.  Seeds from the newest
         checkpoint ≤ `version` when one exists, replaying only the log
-        suffix after it."""
+        suffix after it.  `entries` is the caller's already-parsed
+        log (`snapshots()`), if it has one."""
         if version is not None:
             mg = self._migration_guard_version(schema, name)
             if mg is not None and version < mg:
@@ -2519,7 +2530,8 @@ class Lakehouse:
                     "be re-read under the v2 scheme without guessing "
                     "which physical form they meant"
                 )
-        entries = self.snapshots(schema, name)
+        if entries is None:
+            entries = self.snapshots(schema, name)
         path = self._table_dir(schema, name)
         cp = self._load_checkpoint(path, version)
         if cp is None:
@@ -2725,10 +2737,11 @@ class Lakehouse:
     def _read_dv_keys(
         self, spark: SparkSession, dvs: list[str]
     ) -> DataFrame | None:
-        live = [d for d in dvs if _count_data_files(d) > 0]
-        if not live:
+        """The union of the live deletion vectors `dvs` (a plan's
+        `dvs`) as position keys, or None when there are none."""
+        if not dvs:
             return None
-        return spark.read.parquet(*live).select(
+        return spark.read.schema(_DV_SCHEMA).parquet(*dvs).select(
             F.col("file_path").alias("__dv_file"),
             F.col("row_index").alias("__dv_pos"),
         )
@@ -2801,6 +2814,174 @@ class Lakehouse:
             f = f.filter(~self._pvalue_match(c, vals, nt))
         return f
 
+    def _plan(
+        self,
+        schema: str,
+        name: str,
+        version: int | None = None,
+        partition_values: list[str] | None = None,
+        predicates: list[tuple] | None = None,
+        tz: str | None = None,
+    ) -> _Plan:
+        """The live files of the table as of `version` (None = latest),
+        planned from the commit log alone: the replayed manifest says
+        which commit dir serves which partition (and which additive
+        dirs and deletion vectors are live), and each commit entry's
+        `files` list says what the dir holds — no directory listing,
+        no stat(), no Spark job.  A file's partition is its logged
+        path's `<pcol>=<raw>` segment, read through `_canon_token`.
+
+        Every pruning layer filters that list: superseded partitions
+        (partition dirs) and superseded additive-dir partitions go
+        first — what is left is the live set; `partition_values`,
+        hidden-spec transform pruning of `predicates` (session time
+        zone `tz`), footer stats and Bloom probes then drop what cannot
+        match.  Each surviving dir becomes one `_Slice`, handed to
+        Spark as the whole dir when nothing was pruned, as partition
+        subdirs when whole partitions were, and as explicit files only
+        where stats or Bloom pruning dropped files inside a partition.
+
+        A commit logged before entries listed their files is listed
+        once here (`collect_file_stats` without stats: it is read
+        whole and never pruned); one without a logged schema lets
+        Spark infer it."""
+        from .bloom import bloom_survives
+        from .skipping import collect_file_stats, file_survives
+
+        entries = self.snapshots(schema, name)
+        part_map, extra, dvs = self._readable_manifest(
+            schema, name, version, entries
+        )
+        path = self._table_dir(schema, name)
+        logged: dict[str, tuple[list[dict] | None, dict | None]] = {}
+        for e in entries:
+            if e.get("data_dir") is not None:
+                logged[os.path.join(path, e["data_dir"])] = (
+                    e.get("files"), e.get("schema"),
+                )
+            if e.get("dv_dir") is not None:
+                logged[os.path.join(path, e["dv_dir"])] = (
+                    e.get("dv_files"), None,
+                )
+
+        def files_of(d: str) -> tuple[list[dict], dict | None]:
+            files, sch = logged.get(d, (None, None))
+            if files is None or any("bytes" not in f for f in files):
+                listed = collect_file_stats(d, max_columns=0)["files"]
+                if files is None:
+                    return listed, sch
+                size = {f["path"]: f["bytes"] for f in listed}
+                files = [{**f, "bytes": size.get(f["path"], 0)} for f in files]
+            return files, sch
+
+        nt = self.null_token(schema, name)
+        spec = self.partition_spec(schema, name)
+        pcols = sorted({pcol for _d, pcol in part_map.values()})
+        pcol_any = next(iter(pcols), None)
+        wanted = None if partition_values is None else set(partition_values)
+        phys = p_preds = None
+        if predicates is not None:
+            # predicates arrive in LOGICAL names; footer stats and
+            # bloom filters are keyed by the PHYSICAL names the files
+            # store
+            cmap, _ = self.column_state(schema, name, version)
+            inv = {l: p for p, l in cmap.items()}
+            phys = [(inv.get(p[0], p[0]), *p[1:]) for p in predicates]
+            bloom_cfg = self.bloom_index(schema, name)
+            if spec is not None:
+                from .transforms import localize_predicates
+
+                # naive temporal literals read in the SESSION timezone
+                # — exactly how the residual filter interprets them
+                p_preds = localize_predicates(predicates, tz)
+
+        def survives(f: dict) -> bool:
+            return phys is None or (
+                file_survives(f, phys) and bloom_survives(f, phys, bloom_cfg)
+            )
+
+        def value_kept(pcol: str, v: str) -> bool:
+            if wanted is not None and pcol == pcol_any and v not in wanted:
+                return False
+            if p_preds is None or pcol != spec.hidden_col:
+                return True
+            from .transforms import partition_survives
+
+            return partition_survives(spec, p_preds, v)
+
+        slices: list[_Slice] = []
+
+        def add(d: str, is_live, keep, excl=None) -> None:
+            files, sch = files_of(d)
+            toks = {
+                f["path"]: {
+                    pc: _canon_token(raw, nt)
+                    for pc, raw in _path_tokens(f["path"]).items()
+                }
+                for f in files
+            }
+            live = [f for f in files if is_live(toks[f["path"]])]
+            kept = [
+                f for f in live
+                if all(value_kept(pc, t) for pc, t in toks[f["path"]].items())
+                and survives(f)
+            ]
+            if kept:
+                slices.append(_Slice(
+                    d, _roots(d, files, live, kept), kept, sch, keep, excl
+                ))
+
+        by_dir: dict[str, tuple[str, list[str]]] = {}
+        for value, (d, pcol) in part_map.items():
+            by_dir.setdefault(d, (pcol, []))[1].append(value)
+        for d, (pcol, values) in sorted(by_dir.items()):
+            add(
+                d, lambda t: t.get(pcol) in values,
+                (pcol, sorted(v for v in values if value_kept(pcol, v))),
+            )
+        extra_keep = (
+            (pcol_any, sorted(wanted))
+            if wanted is not None and pcol_any is not None
+            else None
+        )
+        for d, excl in sorted(extra.items()):
+            add(
+                d,
+                lambda t: not any(
+                    t.get(pc) in vals for pc, vals in excl.items()
+                ),
+                extra_keep, excl,
+            )
+        return _Plan(
+            slices,
+            [d for d in dvs if files_of(d)[0]],
+            pcols,
+            entries[-1]["version"] if version is None and entries else version,
+        )
+
+    def _slice_frame(
+        self, spark: SparkSession, schema: str, name: str, sl: _Slice
+    ) -> DataFrame:
+        """One planned slice as a frame: its roots read under the
+        commit dir as `basePath` with the dir's logged schema, then its
+        partition-membership and supersede filters."""
+        from pyspark.sql.types import StructType
+
+        reader = spark.read.option("basePath", sl.d)
+        if sl.schema is not None:
+            reader = reader.schema(StructType.fromJson(sl.schema))
+        df = reader.parquet(*sl.roots)
+        if sl.keep is not None:
+            df = df.filter(
+                self._pvalue_match(
+                    F.col(sl.keep[0]), sl.keep[1],
+                    self.null_token(schema, name),
+                )
+            )
+        if sl.excl:
+            df = self._exclusion_filter(df, sl.excl, schema, name)
+        return df
+
     def read(
         self,
         spark: SparkSession,
@@ -2810,101 +2991,39 @@ class Lakehouse:
         with_positions: bool = False,
         partition_values: list[str] | None = None,
     ) -> DataFrame:
-        """Read the table as of `version` (None = latest) by unioning
-        each commit directory's still-live slice.  Superseded partitions
-        are excluded with partition-column filters — directory-level
-        pruning, no data rows ever read from dead partitions.  Live
-        deletion vectors (merge-on-read deletes) are anti-joined out;
-        `with_positions=True` keeps the physical (__dv_file, __dv_pos)
-        columns — the handle `delete_where(mode="merge_on_read")` uses
-        to name rows.
+        """Read the table as of `version` (None = latest): one frame per
+        commit dir of the log-planned live file set (`_plan`), unioned.
+        Superseded partitions are excluded with partition-column
+        filters — directory-level pruning, no data rows ever read from
+        dead partitions.  Live deletion vectors (merge-on-read deletes)
+        are anti-joined out; `with_positions=True` keeps the physical
+        (__dv_file, __dv_pos) columns — the handle
+        `delete_where(mode="merge_on_read")` uses to name rows.
 
         `partition_values` restricts the read to those partitions at
-        the DIRECTORY level: only the named `<pcol>=<value>` subdirs
-        are handed to Spark (the planned file set — `inputFiles()` —
-        shrinks, nothing else is even listed; the point-lookup shape
-        the persistent IVF probe runs).  Unpartitioned commit dirs
-        (e.g. not-yet-optimized appends) can't dir-prune and fall back
-        to a row filter."""
-        part_map, extra, dvs = self._readable_manifest(
-            schema, name, version
-        )
-        nt = self.null_token(schema, name)
-        wanted = (
-            None if partition_values is None else set(partition_values)
-        )
-        pcol_any: str | None = None
-        by_dir: dict[str, tuple[str, list[str]]] = {}
-        for value, (d, pcol) in part_map.items():
-            pcol_any = pcol
-            if wanted is not None and value not in wanted:
-                continue
-            # a partition superseded to EMPTY (delete_where removed all
-            # its rows) maps to a version dir holding no files for it —
-            # or no files at all; skip unreadable dirs
-            if _count_data_files(d) == 0:
-                continue
-            by_dir.setdefault(d, (pcol, []))[1].append(value)
-
-        def _subdirs(d: str, pcol: str, v: str) -> list[str]:
-            # canonical matching (_canon_token): the table's null
-            # token matches the hive sentinel directory (and, on
-            # legacy tables, a literal 'pcol=None' dir), and
-            # hive-escaped names (e.g. 'a%3Ab' for 'a:b') match their
-            # canonical form
-            return _pvalue_subdirs(d, pcol, [v], nt)
-
-        def _partitioned(d: str, pcol: str, values: list[str]) -> DataFrame:
-            paths = [d]
-            if wanted is not None:
-                # point the scan at the surviving value subdirs only;
-                # a value whose subdir is absent in this commit dir
-                # contributes nothing (and must not fail the listing)
-                paths = [
-                    p
-                    for v in sorted(values)
-                    for p in _subdirs(d, pcol, v)
-                ]
-                if not paths:
-                    return None
-            return _read_commit_dir(
-                spark, d, paths, base_path=True
-            ).filter(self._pvalue_match(F.col(pcol), values, nt))
-
-        frames = [
-            f
-            for d, (pcol, values) in sorted(by_dir.items())
-            if (f := _partitioned(d, pcol, values)) is not None
-        ]
-        for d in sorted(extra):
-            # an append/overwrite of an EMPTY frame commits a directory
-            # with no parquet files; reading it would fail schema
-            # inference, so skip — the commit stays in history
-            if _count_data_files(d) == 0:
-                continue
-            f = self._exclusion_filter(
-                _read_commit_dir(spark, d), extra[d], schema, name
-            )
-            if wanted is not None and pcol_any is not None:
-                f = f.filter(
-                    self._pvalue_match(
-                        F.col(pcol_any), sorted(wanted), nt
-                    )
-                )
-            frames.append(f)
-        if not frames and wanted is not None:
-            # probe of values the table simply doesn't hold: an empty
-            # frame with the table's schema, not an error
-            return self.read(
-                spark, schema, name, version, with_positions
-            ).filter(F.lit(False))
-        if not frames:
+        the FILE level: only the named partitions' subdirs are handed
+        to Spark (the planned file set — `inputFiles()` — shrinks; the
+        point-lookup shape the persistent IVF probe runs).  Flat files
+        of additive commit dirs (e.g. not-yet-optimized appends) carry
+        no partition in their path and fall back to a row filter."""
+        plan = self._plan(schema, name, version, partition_values)
+        if not plan.slices:
+            if partition_values is not None:
+                # probe of values the table simply doesn't hold: an
+                # empty frame with the table's schema, not an error
+                return self.read(
+                    spark, schema, name, version, with_positions
+                ).filter(F.lit(False))
             raise FileNotFoundError(
                 f"{schema}.{name} has no data at version {version}"
             )
+        frames = [
+            self._slice_frame(spark, schema, name, sl) for sl in plan.slices
+        ]
         return self._drop_hidden(
             self._union_frames(
-                spark, frames, schema, name, version, dvs, with_positions
+                spark, frames, schema, name, version, plan.dvs,
+                with_positions,
             )
         )
 
@@ -2961,237 +3080,50 @@ class Lakehouse:
         a point erasure then opens only the stats/bloom-surviving
         files instead of scanning the table for positions.
 
-        Four pruning layers compose here: superseded-partition
-        exclusion (directory), footer-stats skipping (file — this),
-        Bloom-filter probes for `=`/`in` on indexed columns (file —
-        `add_bloom_index`, the high-cardinality case where every
-        file's range overlaps), and parquet row-group zonemaps (page,
-        free once files are sorted/z-ordered by `compact`).  At 100 TB
-        the file layers are what turn a needle query from "schedule
-        80k tasks" into "schedule the 3 files whose range matches".
+        Five pruning layers compose, all but the last on the logged
+        file list (`_plan`): superseded-partition exclusion, hidden-
+        spec transform pruning (a predicate on a `set_partition_spec`
+        source column drops the partitions — in partition dirs and
+        spec-partitioned additive dirs alike — its transform proves
+        empty of matches), footer-stats skipping, Bloom-filter probes
+        for `=`/`in` on indexed columns (`add_bloom_index`, the
+        high-cardinality case where every file's range overlaps), and
+        parquet row-group zonemaps (free once files are
+        sorted/z-ordered by `compact`).  At 100 TB the file layers are
+        what turn a needle query from "schedule 80k tasks" into
+        "schedule the 3 files whose range matches".
         """
-        from .bloom import bloom_survives
-        from .skipping import file_survives, predicates_to_column
+        from .skipping import predicates_to_column
 
-        part_map, extra, dvs = self._readable_manifest(
-            schema, name, version
+        plan = self._plan(
+            schema, name, version, predicates=predicates,
+            tz=spark.conf.get("spark.sql.session.timeZone"),
         )
-        path = self._table_dir(schema, name)
-        nt = self.null_token(schema, name)
-        stats_by_dir: dict[str, list[dict]] = {
-            os.path.join(path, e["data_dir"]): e["files"]
-            for e in self.snapshots(schema, name)
-            if e.get("data_dir") is not None and e.get("files") is not None
-        }
-        # predicates arrive in LOGICAL names; footer stats and bloom
-        # filters are keyed by the PHYSICAL names the files store —
-        # translate for the pruning layers, keep the logical form for
-        # the residual filter (applied after the mapping projection)
-        _cmap, _ = self.column_state(schema, name, version)
-        _inv = {l: p for p, l in _cmap.items()}
-        phys_preds = [
-            (_inv.get(p[0], p[0]), *p[1:]) for p in predicates
-        ]
-        residual = predicates_to_column(predicates)
-        bloom_cfg = self.bloom_index(schema, name)
-
-        def surviving(d: str) -> list[str] | None:
-            """Absolute paths of files worth reading, or None for
-            'no stats — read the whole directory'."""
-            files = stats_by_dir.get(d)
-            if files is None:
-                return None
-            return [
-                os.path.join(d, f["path"])
-                for f in files
-                if file_survives(f, phys_preds)
-                and bloom_survives(f, phys_preds, bloom_cfg)
-            ]
-
-        by_dir: dict[str, tuple[str, list[str]]] = {}
-        for value, (d, pcol) in part_map.items():
-            if _count_data_files(d) == 0:
-                continue
-            by_dir.setdefault(d, (pcol, []))[1].append(value)
-        # hidden-partitioning (set_partition_spec): predicates on the
-        # RAW source column prune partitions through the transform —
-        # equality via the exact value mapping, ranges through the
-        # order-preserving transforms.  Like every layer here it only
-        # REMOVES partitions the transform proves empty of matches;
-        # the residual filter still re-applies the real predicate.
-        p_spec = self.partition_spec(schema, name)
-        if p_spec is not None:
-            from .transforms import (
-                localize_predicates,
-                partition_survives,
-            )
-
-            # naive temporal literals read in the SESSION timezone —
-            # exactly how the residual filter will interpret them
-            p_preds = localize_predicates(
-                predicates,
-                spark.conf.get("spark.sql.session.timeZone"),
-            )
-            by_dir = {
-                d: (pcol, kept)
-                for d, (pcol, values) in by_dir.items()
-                if (
-                    kept := (
-                        [
-                            v
-                            for v in values
-                            if partition_survives(p_spec, p_preds, v)
-                        ]
-                        if pcol == p_spec.hidden_col
-                        else values
-                    )
-                )
-            }
-        frames = []
-        for d, (pcol, values) in sorted(by_dir.items()):
-            keep = surviving(d)
-            if (
-                p_spec is not None
-                and pcol == p_spec.hidden_col
-                and keep is None
-            ):
-                # no footer stats: still prune at the DIRECTORY level —
-                # hand Spark only the surviving value subdirs (matched
-                # canonically: escaped / NULL-sentinel dir names count)
-                keep = _pvalue_subdirs(d, pcol, values, nt)
-            elif (
-                p_spec is not None
-                and pcol == p_spec.hidden_col
-                and keep
-            ):
-                # intersect file-stats survivors with partition
-                # pruning — the file's dir segment is matched through
-                # _canon_token, never by constructing the name (an
-                # escaped or NULL-sentinel directory would not match
-                # its canonical token and its rows would silently drop)
-                want = set(values)
-                pfx = f"{pcol}="
-                keep = [
-                    p
-                    for p in keep
-                    if any(
-                        seg.startswith(pfx)
-                        and _canon_token(seg[len(pfx):], nt) in want
-                        for seg in os.path.relpath(p, d).split(
-                            os.sep
-                        )[:-1]
-                    )
-                ]
-            src = (
-                _read_commit_dir(spark, d, base_path=True)
-                if keep is None
-                else _read_commit_dir(spark, d, keep, base_path=True)
-                if keep
-                else None
-            )
-            if src is not None:
-                frames.append(
-                    src.filter(
-                        self._pvalue_match(F.col(pcol), values, nt)
-                    )
-                )
-        hidden_pfx = (
-            None if p_spec is None else f"{p_spec.hidden_col}="
-        )
-        for d in sorted(extra):
-            if _count_data_files(d) == 0:
-                continue
-            keep = surviving(d)
-            if hidden_pfx is not None and any(
-                s.startswith(hidden_pfx) for s in os.listdir(d)
-            ):
-                # spec-partitioned ADDITIVE dir (append/overwrite on a
-                # hidden-spec table): transform-prune its value subdirs
-                # exactly like the part_map dirs above.  `live` keeps
-                # the RAW directory tokens (that is what the file
-                # paths carry) but every decision — transform pruning,
-                # supersede exclusion — runs on the CANONICAL token,
-                # so escaped / NULL-sentinel dirs are neither wrongly
-                # pruned (value_of(lit) is canonical) nor wrongly kept
-                excl = set(extra[d].get(p_spec.hidden_col, ()))
-                live = {
-                    raw
-                    for s in os.listdir(d)
-                    if s.startswith(hidden_pfx)
-                    and partition_survives(
-                        p_spec,
-                        p_preds,
-                        _canon_token(raw := s[len(hidden_pfx):], nt),
-                    )
-                    and _canon_token(raw, nt) not in excl
-                }
-                if keep is None:
-                    keep = [
-                        os.path.join(d, f"{hidden_pfx}{v}")
-                        for v in sorted(live)
-                    ]
-                else:
-                    allowed = {f"{hidden_pfx}{v}" for v in live}
-                    keep = [
-                        p
-                        for p in keep
-                        if allowed
-                        & set(os.path.relpath(p, d).split(os.sep)[:-1])
-                    ]
-                if keep:
-                    frames.append(
-                        self._exclusion_filter(
-                            _read_commit_dir(
-                                spark, d, keep, base_path=True
-                            ),
-                            extra[d], schema, name,
-                        )
-                    )
-                continue
-            if keep is None:
-                frames.append(
-                    self._exclusion_filter(
-                        _read_commit_dir(spark, d), extra[d], schema, name
-                    )
-                )
-            elif keep:
-                frames.append(
-                    self._exclusion_filter(
-                        _read_commit_dir(spark, d, keep),
-                        extra[d], schema, name,
-                    )
-                )
-        if not frames:
+        if not plan.slices:
             # every file provably irrelevant: an empty frame with the
             # table's schema (Catalyst folds the FALSE filter away —
             # no file is opened)
             return self.read(
                 spark, schema, name, version, with_positions
             ).filter(F.lit(False))
+        frames = [
+            self._slice_frame(spark, schema, name, sl) for sl in plan.slices
+        ]
         out = self._union_frames(
-            spark, frames, schema, name, version, dvs, with_positions
+            spark, frames, schema, name, version, plan.dvs, with_positions
         )
-        return self._drop_hidden(out.filter(residual))
+        return self._drop_hidden(out.filter(predicates_to_column(predicates)))
 
     def _readable_manifest(
-        self, schema: str, name: str, version: int | None = None
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
     ):
         """`_manifest`, refused with HistoryUnavailableError when vacuum
         reclaimed any directory it references — what every versioned
-        read serves from, so none returns partial history."""
-        part_map, extra, dvs = self._manifest(schema, name, version)
-        self._require_dirs(
-            schema, name, version,
-            {d for d, _ in part_map.values()} | set(extra) | set(dvs),
-        )
-        return part_map, extra, dvs
-
-    def _require_dirs(
-        self, schema: str, name: str, version, dirs: set[str]
-    ) -> None:
-        """Versioned reads must see every directory their manifest
-        references; a missing one means vacuum reclaimed that history.
-        O(|manifest|) stat calls — no listing, no data read."""
+        read serves from, so none returns partial history.  O(|manifest|)
+        isdir checks — no listing, no data read."""
+        part_map, extra, dvs = self._manifest(schema, name, version, entries)
+        dirs = {d for d, _ in part_map.values()} | set(extra) | set(dvs)
         missing = sorted(d for d in dirs if not os.path.isdir(d))
         if missing:
             raise HistoryUnavailableError(
@@ -3202,6 +3134,7 @@ class Lakehouse:
                 "time travel / CDC cannot reach past retention — "
                 "recompute from the current state instead"
             )
+        return part_map, extra, dvs
 
     def read_snapshot(
         self, spark: SparkSession, schema: str, name: str, version: int
@@ -3411,108 +3344,71 @@ class Lakehouse:
         the compaction that later materializes those vectors still
         diffs empty.
         """
-        old_map, old_extra, old_dvs = self._manifest(
-            schema, name, from_version
-        )
-        new_map, new_extra, new_dvs = self._manifest(
-            schema, name, to_version
-        )
-        # vacuum may have reclaimed the from-side's files (e.g. a
-        # default OPTIMIZE+VACUUM landed inside the window): refuse to
-        # serve a diff that would misreport surviving rows as inserts
-        self._require_dirs(
-            schema, name, from_version,
-            {d for d, _ in old_map.values()} | set(old_extra) | set(old_dvs)
-            | {d for d, _ in new_map.values()} | set(new_extra)
-            | set(new_dvs),
-        )
+        old = self._plan(schema, name, from_version)
+        new = self._plan(schema, name, to_version)
 
         # dirs holding files whose DV coverage changed between versions
-        dv_delta = [
-            d
-            for d in set(old_dvs).symmetric_difference(new_dvs)
-        ]
         dv_touched: set[str] = set()
-        if dv_delta:
-            keys = self._read_dv_keys(spark, dv_delta)
-            if keys is not None:
-                tdir = self._table_dir(schema, name)
-                touched_files = [
-                    os.path.join(tdir, r[0])  # stored table-relative
-                    for r in keys.select("__dv_file").distinct().collect()
-                ]
-                all_dirs = {d for d, _ in old_map.values()} | set(old_extra) \
-                    | {d for d, _ in new_map.values()} | set(new_extra)
-                for fpath in touched_files:
-                    for d in all_dirs:
-                        if fpath.startswith(d + os.sep):
-                            dv_touched.add(d)
+        keys = self._read_dv_keys(
+            spark, sorted(set(old.dvs).symmetric_difference(new.dvs))
+        )
+        if keys is not None:
+            tdir = self._table_dir(schema, name)
+            touched_files = [
+                os.path.join(tdir, r[0])  # stored table-relative
+                for r in keys.select("__dv_file").distinct().collect()
+            ]
+            dv_touched = {
+                sl.d
+                for sl in old.slices + new.slices
+                if any(f.startswith(sl.d + os.sep) for f in touched_files)
+            }
 
-        def changed(side_map, side_extra, other_map, other_extra, side_dvs):
+        def changed(side: _Plan, other: _Plan) -> DataFrame | None:
             """Slices on this side whose mapping OR DV coverage differs
             — each read through this side's deletion vectors."""
-            by_dir: dict[str, tuple[str, list[str]]] = {}
-            for value, (d, pcol) in side_map.items():
-                if (
-                    other_map.get(value) != (d, pcol) or d in dv_touched
-                ) and _count_data_files(d) > 0:  # emptied-partition commit
-                    by_dir.setdefault(d, (pcol, []))[1].append(value)
-            dirs = [
-                d
-                for d in side_extra
-                if (
-                    d not in other_extra
+            others = {sl.d: sl for sl in other.slices}
+            diff = []
+            for sl in side.slices:
+                o = others.get(sl.d)
+                if sl.d in dv_touched:
+                    diff.append(sl)
+                elif sl.excl is not None:
                     # an exclusion added between the versions changes
                     # the dir's LIVE slice (a partition overwrite
                     # superseded some of its rows) — diff it
-                    or side_extra[d] != other_extra[d]
-                    or d in dv_touched
-                )
-                and _count_data_files(d) > 0
-            ]
-            frames = [
-                _read_commit_dir(spark, d, base_path=True)
-                .filter(
-                    self._pvalue_match(
-                        F.col(pcol), values,
-                        self.null_token(schema, name),
+                    if o is None or o.excl != sl.excl:
+                        diff.append(sl)
+                else:
+                    pcol, values = sl.keep
+                    same = (
+                        set(o.keep[1])
+                        if o is not None and o.excl is None
+                        and o.keep[0] == pcol
+                        else set()
                     )
-                )
-                for d, (pcol, values) in sorted(by_dir.items())
-            ] + [
-                self._exclusion_filter(
-                    _read_commit_dir(spark, d), side_extra[d], schema, name
-                )
-                for d in sorted(dirs)
-            ]
-            frames = self._fill_added(frames, schema, name, to_version)
-            if side_dvs and frames:
-                tdir = self._table_dir(schema, name)
-                frames = [
-                    self._with_positions(f, tdir) for f in frames
-                ]
-            out = None
-            for f in frames:
-                out = (
-                    f
-                    if out is None
-                    else out.unionByName(f, allowMissingColumns=True)
-                )
-            if out is not None and side_dvs:
-                out = self._apply_dvs(spark, out, side_dvs)
-            if out is None:
+                    moved = [v for v in values if v not in same]
+                    if moved:
+                        diff.append(replace(sl, keep=(pcol, moved)))
+            if not diff:
                 return None
+            frames = [
+                self._slice_frame(spark, schema, name, sl) for sl in diff
+            ]
             # both sides surface the TO-version logical names so the
             # diff compares columns consistently across a rename; a
             # column dropped inside the window simply leaves the diff
             # (its deletions are invisible post-drop — same as Delta
             # CDF after a schema change)
             return self._drop_hidden(
-                self._apply_column_mapping(out, schema, name, to_version)
+                self._union_frames(
+                    spark, frames, schema, name, to_version, side.dvs,
+                    False,
+                )
             )
 
-        old_df = changed(old_map, old_extra, new_map, new_extra, old_dvs)
-        new_df = changed(new_map, new_extra, old_map, old_extra, new_dvs)
+        old_df = changed(old, new)
+        new_df = changed(new, old)
         if old_df is None and new_df is None:
             raise FileNotFoundError(
                 f"{schema}.{name}: no commits in ({from_version}, "
@@ -3573,84 +3469,21 @@ class Lakehouse:
 
     def describe_detail(self, schema: str, name: str) -> dict:
         """DESCRIBE DETAIL analog — current version, live file count,
-        physical row count, and bytes, computed from LOG ARITHMETIC
-        plus the commit entries' footer stats: no Spark job, no data
-        read.  `num_rows` is the physical count (before deletion-
-        vector filtering; `num_deletion_vectors` says whether any
-        apply) and is None if any live file predates stats collection.
-        """
-        part_map, extra, dvs = self._manifest(schema, name)
-        path = self._table_dir(schema, name)
-        nt = self.null_token(schema, name)
-        entries = self.snapshots(schema, name)
-        stats_by_dir = {
-            os.path.join(path, e["data_dir"]): e["files"]
-            for e in entries
-            if e.get("data_dir") is not None and e.get("files") is not None
-        }
-
-        def live_files(d: str, values: list[str] | None, pcol: str | None):
-            """(relpath) files of `d` belonging to live partitions."""
-            files = stats_by_dir.get(d)
-            if files is None:
-                return None  # pre-stats commit: unknown
-            if values is None:
-                return files
-            # canonical match on the leading dir segment (escaped /
-            # NULL-sentinel names must count toward their partition)
-            want = set(values)
-            pfx = f"{pcol}="
-            out = []
-            for f in files:
-                seg = f["path"].split(os.sep, 1)[0]
-                if seg.startswith(pfx) and _canon_token(
-                    seg[len(pfx):], nt
-                ) in want:
-                    out.append(f)
-            return out
-
-        by_dir: dict[str, tuple[str, list[str]]] = {}
-        for value, (d, pcol) in part_map.items():
-            by_dir.setdefault(d, (pcol, []))[1].append(value)
-        num_files = 0
-        num_rows: int | None = 0
-        size_bytes = 0
-        partition_cols: set[str] = set()
-        slices = [
-            (d, values, pcol) for d, (pcol, values) in by_dir.items()
-        ] + [(d, None, None) for d in extra]
-        for d, values, pcol in slices:
-            if pcol:
-                partition_cols.add(pcol)
-            files = live_files(d, values, pcol)
-            if files is None:
-                # fall back to walking the dir; rows stay unknown
-                num_rows = None
-                for root, _dirs, fnames in os.walk(d):
-                    for fn in fnames:
-                        if fn.endswith(".parquet"):
-                            num_files += 1
-                            size_bytes += os.path.getsize(
-                                os.path.join(root, fn)
-                            )
-                continue
-            for f in files:
-                num_files += 1
-                if num_rows is not None:
-                    num_rows += f["rows"]
-                fpath = os.path.join(d, f["path"])
-                if os.path.exists(fpath):
-                    size_bytes += os.path.getsize(fpath)
+        physical row count, and bytes, summed over the planned live
+        files (`_plan`: the commit log's file records): no Spark job,
+        no listing, no data read.  `num_rows` is the physical count
+        (before deletion-vector filtering; `num_deletion_vectors` says
+        how many live vectors apply)."""
+        plan = self._plan(schema, name)
+        files = [f for sl in plan.slices for f in sl.files]
         return {
             "name": f"{schema}.{name}",
-            "version": entries[-1]["version"] if entries else None,
-            "num_files": num_files,
-            "num_rows": num_rows,
-            "size_bytes": size_bytes,
-            "num_deletion_vectors": len(
-                [d for d in dvs if _count_data_files(d) > 0]
-            ),
-            "partition_columns": sorted(partition_cols),
+            "version": plan.version,
+            "num_files": len(files),
+            "num_rows": sum(f["rows"] for f in files),
+            "size_bytes": sum(f["bytes"] for f in files),
+            "num_deletion_vectors": len(plan.dvs),
+            "partition_columns": plan.partition_cols,
             "partition_spec": (
                 f"{s.transform}({'' if s.n is None else f'{s.n}, '}"
                 f"{s.source})"
@@ -3669,11 +3502,11 @@ class Lakehouse:
     ) -> dict:
         """OPTIMIZE advisor (Delta auto-compaction's decision function,
         surfaced as a queryable recommendation): per live partition,
-        how many live files there are and how many are SMALL, from log
-        arithmetic + driver-side `stat()` only — no Spark job, no data
-        read.  At 100 TB the small-file problem is an ops loop
-        (streaming appends accrete files until scans schedule tens of
-        thousands of splits); this is the loop's sensor.  On a
+        how many live files there are and how many are SMALL, from the
+        planned live files' logged sizes (`_plan`) — no Spark job, no
+        listing, no data read.  At 100 TB the small-file problem is an
+        ops loop (streaming appends accrete files until scans schedule
+        tens of thousands of splits); this is the loop's sensor.  On a
         partition-disciplined table the returned `partitions` list
         feeds `compact(partitions=...)` directly so the rewrite stays
         scoped to the offenders; when `unpartitioned_dirs` > 0 the
@@ -3687,72 +3520,36 @@ class Lakehouse:
                     "unpartitioned_dirs": n_extra_dirs,
                     "reason": ...}`` — a partition is recommended when
         it holds ≥ `min_small_files` live files under
-        `small_file_bytes`; any additive (unpartitioned append) dir's
-        `<pcol>=<value>` subdirs count toward their partitions, and
-        everything else in it — flat top-level files AND files under
-        unrecognized subdirs — lands in the `<unpartitioned>` detail
+        `small_file_bytes`; an additive dir's files under a
+        `<pcol>=<value>` subdir count toward their partitions, and
+        every other file in it lands in the `<unpartitioned>` detail
         row.  `unpartitioned_dirs` counts only dirs holding such
         UNATTRIBUTED data files (a dir whose every data file attributed
         to a partition does not appear; compact() folds all of them in
         regardless).
         """
-        part_map, extra, _dvs = self._manifest(schema, name)
+        plan = self._plan(schema, name)
         nt = self.null_token(schema, name)
+        pcol = next(iter(plan.partition_cols), None)
         detail: dict[str, dict] = {}
-
-        def account(key: str, path: str) -> None:
-            sz = os.path.getsize(path)
-            row = detail.setdefault(
-                key, {"files": 0, "small": 0, "bytes": 0}
-            )
-            row["files"] += 1
-            row["bytes"] += sz
-            if sz < small_file_bytes:
-                row["small"] += 1
-
-        def scan(d: str, value: str, pcol: str) -> None:
-            for base in _pvalue_subdirs(d, pcol, [value], nt):
-                for root, _dirs, fnames in os.walk(base):
-                    for fn in fnames:
-                        if fn.endswith(".parquet"):
-                            account(value, os.path.join(root, fn))
-
-        for value, (d, pcol) in part_map.items():
-            scan(d, value, pcol)
-        pcol_any = next(
-            (pcol for _v, (_d, pcol) in part_map.items()), None
-        )
         unattributed_dirs = 0
-        for d in extra:
-            if not os.path.isdir(d):
-                continue
-            stray = 0
-            for root, dirs, fnames in os.walk(d):
-                if root == d and pcol_any is not None:
-                    # peel attributed <pcol>=<value> subdirs out of the
-                    # walk; they count toward their partitions — keyed
-                    # by CANONICAL token (an escaped or NULL-sentinel
-                    # dir name would otherwise self-miss in scan's
-                    # _pvalue_subdirs match and detail under a raw key)
-                    for sub in sorted(dirs):
-                        if sub.startswith(f"{pcol_any}="):
-                            scan(
-                                d,
-                                _canon_token(sub.split("=", 1)[1], nt),
-                                pcol_any,
-                            )
-                    dirs[:] = [
-                        s for s in dirs
-                        if not s.startswith(f"{pcol_any}=")
-                    ]
-                for fn in fnames:
-                    if fn.endswith(".parquet"):
-                        account(
-                            "<unpartitioned>", os.path.join(root, fn)
-                        )
-                        stray += 1
-            if stray:
-                unattributed_dirs += 1
+        for sl in plan.slices:
+            stray = False
+            for f in sl.files:
+                raw = _path_tokens(f["path"]).get(
+                    pcol if sl.excl is not None else sl.keep[0]
+                )
+                if raw is None:
+                    key, stray = "<unpartitioned>", True
+                else:
+                    key = _canon_token(raw, nt)
+                row = detail.setdefault(
+                    key, {"files": 0, "small": 0, "bytes": 0}
+                )
+                row["files"] += 1
+                row["bytes"] += f["bytes"]
+                row["small"] += f["bytes"] < small_file_bytes
+            unattributed_dirs += stray
         recommended = sorted(
             v for v, row in detail.items()
             if v != "<unpartitioned>" and row["small"] >= min_small_files
@@ -3803,23 +3600,17 @@ class Lakehouse:
         With `write=True` the manifest also lands atomically at
         `<table>/_manifests/v<N>.json` for out-of-band consumers.
         """
-        entries = self.snapshots(schema, name)
-        if not entries:
+        plan = self._plan(schema, name, version)
+        if plan.version is None:
             raise FileNotFoundError(f"{schema}.{name} does not exist")
-        resolved = (
-            entries[-1]["version"] if version is None else version
-        )
-        part_map, extra, dvs = self._readable_manifest(
-            schema, name, version
-        )
-        live_dvs = [d for d in dvs if _count_data_files(d) > 0]
-        if live_dvs:
+        resolved = plan.version
+        if plan.dvs:
             raise ManifestExportError(
-                f"{schema}.{name}@v{resolved} has {len(live_dvs)} live "
+                f"{schema}.{name}@v{resolved} has {len(plan.dvs)} live "
                 "deletion-vector dir(s); a file manifest cannot express "
                 "row-position deletes - compact() first"
             )
-        if any(excl for excl in extra.values()):
+        if any(sl.excl for sl in plan.slices):
             raise ManifestExportError(
                 f"{schema}.{name}@v{resolved} has additive-dir partition "
                 "exclusions (a rewrite superseded rows inside append "
@@ -3843,35 +3634,15 @@ class Lakehouse:
         # laid out) store every column in the data.  One mixed
         # read_parquet(hive_partitioning=...) call is a binder error in
         # DuckDB/Trino alike — consumers read each group and union.
+        # Appends under a hidden/explicit spec DO lay out by
+        # <pcol>=<value> subdirs — classify by path.
         hive_files: list[str] = []
         flat_files: list[str] = []
-        partition_cols: set[str] = set()
-        nt = self.null_token(schema, name)
-        for value, (d, pcol) in sorted(part_map.items()):
-            partition_cols.add(pcol)
-            # canonical subdir match: an escaped or NULL-sentinel
-            # partition directory must land in the manifest too —
-            # a constructed-name isdir() would skip it and export a
-            # silently incomplete file list
-            for sub in _pvalue_subdirs(d, pcol, [value], nt):
-                for root, _dirs, fnames in os.walk(sub):
-                    hive_files.extend(
-                        os.path.join(root, fn)
-                        for fn in fnames
-                        if fn.endswith(".parquet")
-                    )
-        for d in sorted(extra):
-            for root, _dirs, fnames in os.walk(d):
-                for fn in fnames:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(root, fn)
-                    # appends under a hidden/explicit spec DO lay out
-                    # by <pcol>=<value> subdirs — classify by path
-                    if "=" in os.path.relpath(p, d):
-                        hive_files.append(p)
-                    else:
-                        flat_files.append(p)
+        for sl in plan.slices:
+            for f in sl.files:
+                (hive_files if "=" in f["path"] else flat_files).append(
+                    os.path.join(sl.d, f["path"])
+                )
         mapping, dropped = self.column_state(schema, name, version)
         spec = self.partition_spec(schema, name)
         manifest = {
@@ -3887,7 +3658,7 @@ class Lakehouse:
             # NULL-backed columns missing from older files
             "union_by_name": True,
             # partition value lives in the hive path, not the file
-            "hive_partition_columns": sorted(partition_cols),
+            "hive_partition_columns": plan.partition_cols,
             # hidden partitioning: the derived hive column is plumbing,
             # not part of the logical schema - drop it after the read
             "hidden_partition_columns": (
@@ -4393,49 +4164,3 @@ def attach_bucketed(
         f"LOCATION '{loc}'"
     )
     return True
-
-
-
-# per-(session, commit-dir) parquet schema memo: commit directories are
-# immutable once a manifest references them (every mutation commits a
-# NEW version directory; type widening is metadata-only and casts after
-# the scan), so the schema inferred on first contact can be re-supplied
-# to every later scan of the same dir.  Skipping per-read footer/schema
-# inference measurably cuts the driver cost of the lifecycle suites
-# (~56 ms of plan time per read; bm25_search alone issues ~80 commit-dir
-# reads per run).  Keyed weakly by session; the `kind` key separates the
-# basePath-anchored shape (partition columns discovered relative to the
-# commit dir) from the bare-subset shape (no partition columns).
-_DIR_SCHEMAS: "weakref.WeakKeyDictionary" = None  # lazy init
-
-
-def _read_commit_dir(spark, d, paths=None, base_path=False):
-    global _DIR_SCHEMAS
-    import weakref
-
-    if _DIR_SCHEMAS is None:
-        _DIR_SCHEMAS = weakref.WeakKeyDictionary()
-    try:
-        per = _DIR_SCHEMAS.setdefault(spark, {})
-    except TypeError:  # session not weakref-able (mock/stub)
-        per = {}
-    kind = "base" if base_path else ("full" if paths is None else "sub")
-    reader = spark.read
-    if base_path:
-        reader = reader.option("basePath", d)
-    sch = per.get((d, kind))
-    if sch is not None:
-        reader = reader.schema(sch)
-    df = reader.parquet(*(paths or [d]))
-    if sch is None:
-        per[(d, kind)] = df.schema
-    return df
-
-
-def _count_data_files(path: str) -> int:
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        n += sum(
-            1 for f in files if f.endswith(".parquet") and not f.startswith("_")
-        )
-    return n

@@ -19,8 +19,14 @@ between scheduling 80 000 tasks and 800 on a needle-in-haystack query.
 Combined with `compact(zorder_by=[...])` (multi-column locality) the
 three layers prune at directory, file, and row-group granularity.
 
+The same footer pass records each file's row and byte counts and the
+directory's Spark read schema, so every lakehouse read plans from the
+log alone (`Lakehouse._plan`).  A commit logged before this record
+existed is listed once at plan time with no stats: it is read whole,
+and pruning on it does nothing.
+
 Parity notes vs Delta (public protocol, delta-io/delta PROTOCOL.md):
-  - stats are collected for the first `max_columns` leaf columns
+  - stats are collected for the first `STATS_MAX_COLUMNS` leaf columns
     (Delta's `dataSkippingNumIndexedCols`, default 32);
   - a file with missing/partial stats for a column is never pruned on
     that column (conservative — exactly Delta's null-stats rule);
@@ -41,6 +47,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
+import json
 import os
 
 # Conjunctive predicate: list of (column, op, value) with op in _OPS.
@@ -49,6 +56,13 @@ import os
 _OPS = ("=", "==", "<", "<=", ">", ">=", "in")
 
 _PARQUET_SUFFIX = ".parquet"
+
+# Delta's dataSkippingNumIndexedCols default: footer stats cover the
+# first this-many top-level leaf columns of each file.
+STATS_MAX_COLUMNS = 32
+
+# the footer key under which Spark stores a file's row schema (JSON)
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 # -- JSON-safe stat value encoding ------------------------------------------
@@ -106,29 +120,42 @@ def _comparable(a, b) -> bool:
 # -- footer harvest at commit time ------------------------------------------
 
 def collect_file_stats(
-    data_dir: str, max_columns: int = 32
-) -> list[dict]:
-    """Per-file stats for every parquet file under `data_dir`
-    (recursing through partition subdirectories), from footers only.
+    data_dir: str, max_columns: int = STATS_MAX_COLUMNS
+) -> dict:
+    """The commit-log record of every parquet file under `data_dir`
+    (recursing through partition subdirectories), from footers only:
 
-    Returns ``[{"path": <rel>, "rows": N,
-                "stats": {col: {"min": v, "max": v, "nulls": n}}}]``.
+        {"files": [{"path": <rel>, "rows": N, "bytes": B,
+                    "stats": {col: {"min": v, "max": v, "nulls": n}}}],
+         "schema": <Spark read schema JSON>}   # absent for an empty dir
 
-    A column appears in a file's `stats` only if EVERY non-empty row
+    Stats cover the first `max_columns` top-level leaf columns.  A
+    column appears in a file's `stats` only if EVERY non-empty row
     group in that file carries min/max for it — a partial bound is not
     a bound.  `nulls` is present only when every row group reports a
     null count.  Partition columns are directory-encoded, never in
-    footers; `read_where` prunes those via the partition map instead.
+    footers; `read_where` prunes those through the file paths instead.
+
+    `schema` is the schema Spark would infer for the directory: the
+    row schema Spark stored in the first footer, every field made
+    nullable (Spark's read-side `asNullable`), plus one string column
+    per `<pcol>=<value>` path segment (partition type inference is off
+    in the engine's session confs).  Reads pass it to the reader, so
+    the first read of a commit dir runs no schema-inference job.
     """
     import pyarrow.parquet as pq
 
     out: list[dict] = []
+    read_schema = None
     for root, _dirs, files in sorted(os.walk(data_dir)):
         for fname in sorted(files):
             if not fname.endswith(_PARQUET_SUFFIX):
                 continue
             fpath = os.path.join(root, fname)
+            rel = os.path.relpath(fpath, data_dir)
             meta = pq.ParquetFile(fpath).metadata
+            if read_schema is None:
+                read_schema = _read_schema(meta, rel)
             schema = meta.schema
             # leaf columns, top-level only (dotted path = nested)
             col_idx = [
@@ -180,12 +207,54 @@ def collect_file_stats(
                     stats[cname] = entry
             out.append(
                 {
-                    "path": os.path.relpath(fpath, data_dir),
+                    "path": rel,
                     "rows": meta.num_rows,
+                    "bytes": os.path.getsize(fpath),
                     "stats": stats,
                 }
             )
-    return out
+    record: dict = {"files": out}
+    if read_schema is not None:
+        record["schema"] = read_schema
+    return record
+
+
+def _read_schema(meta, rel_path: str) -> dict | None:
+    """Spark's read schema for a commit dir, from one file's footer
+    (see `collect_file_stats`); None when Spark did not write it."""
+    raw = (meta.metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
+    if raw is None:
+        return None
+    fields = [_nullable_field(f) for f in json.loads(raw)["fields"]]
+    fields += [
+        {"name": seg.split("=", 1)[0], "type": "string",
+         "nullable": True, "metadata": {}}
+        for seg in rel_path.split(os.sep)[:-1]
+        if "=" in seg
+    ]
+    return {"type": "struct", "fields": fields}
+
+
+def _nullable_field(f: dict) -> dict:
+    return {**f, "nullable": True, "type": _nullable_type(f["type"])}
+
+
+def _nullable_type(t):
+    """A Spark data-type JSON with every nested field, array element
+    and map key/value made nullable (Scala's `DataType.asNullable`)."""
+    if not isinstance(t, dict):
+        return t
+    kind = t.get("type")
+    if kind == "struct":
+        return {**t, "fields": [_nullable_field(f) for f in t["fields"]]}
+    if kind == "array":
+        return {**t, "elementType": _nullable_type(t["elementType"]),
+                "containsNull": True}
+    if kind == "map":
+        return {**t, "keyType": _nullable_type(t["keyType"]),
+                "valueType": _nullable_type(t["valueType"]),
+                "valueContainsNull": True}
+    return t
 
 
 # -- pruning decision at read time ------------------------------------------
