@@ -5,14 +5,17 @@ footer stats) with the dir's Spark read schema; `Lakehouse._plan`
 turns those lists into the scan.  Under test: no read-side directory
 listing under `<table>/_data`, a logged schema equal to the schema
 Spark infers for every write op, no Spark job on the first read of a
-fresh commit dir, and one log parse per vacuum whatever the history
-length.
+fresh commit dir, one log parse per vacuum whatever the history
+length, one journal parse per read, and a restore-aware replay that
+visits each log entry once however restores chain.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+import random
 
 import pyspark.sql.functions as F
 import pytest
@@ -208,3 +211,109 @@ def test_vacuum_parses_the_log_once(spark, lake, monkeypatch):
     calls.clear()
     assert lake.fsck("silver", "t")["ok"]
     assert len(calls) <= 4
+
+
+def _synthetic_log(n: int) -> list[dict]:
+    """`n` log entries of mixed ops, with every 10th a restore to one
+    of the last few versions, so each restore's history holds the one
+    before it (no Spark, no data files)."""
+    rng = random.Random(7)
+    entries = []
+    for v in range(n):
+        if v % 10 == 9:
+            back = 1 + rng.randrange(3)
+            e = {"operation": "restore", "of_version": v - back}
+        else:
+            d, c = f"_data/c{v:04d}", f"c{rng.randrange(3)}"
+            e = rng.choice([
+                {"operation": "overwrite", "data_dir": d},
+                {"operation": "overwrite_partitions", "data_dir": d,
+                 "partition_col": "p",
+                 "partitions": [f"p{rng.randrange(5)}"]},
+                {"operation": "append", "data_dir": d},
+                {"operation": "delete_dv", "data_dir": d},
+                {"operation": "update_mor", "data_dir": d,
+                 "dv_dir": f"_data/dv{v:04d}"},
+                {"operation": "rename_column", "old": c, "new": f"r{v}"},
+                {"operation": "drop_column", "column": c},
+                {"operation": "add_column", "column": f"a{v}",
+                 "dtype": "int", "default": v},
+                {"operation": "widen_column", "column": c,
+                 "to_type": "bigint"},
+            ])
+        entries.append({"version": v, **e})
+    return entries
+
+
+def _effective(entries: list[dict]) -> list[list[dict]]:
+    """Per version, the restore-free entry list whose plain replay is
+    the table's state at that version: a restore's is its target's."""
+    out: list[list[dict]] = []
+    for e in entries:
+        if e["operation"] == "restore":
+            out.append(out[e["of_version"]])
+        else:
+            out.append((out[-1] if out else []) + [e])
+    return out
+
+
+class _Counted(dict):
+    """A log entry that counts how often a replay reads its op."""
+
+    reads = 0
+
+    def __getitem__(self, key):
+        if key == "operation":
+            _Counted.reads += 1
+        return super().__getitem__(key)
+
+
+def test_chained_restores_replay_each_entry_once(lake):
+    n = 180
+    entries = _synthetic_log(n)
+    path = lake._table_dir("silver", "t")
+    os.makedirs(path)
+    with open(os.path.join(path, "_snapshots.jsonl"), "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in entries)
+    effective = _effective(entries)
+    for v in list(range(n)) + [None]:
+        eff = effective[-1 if v is None else v]
+        assert lake._manifest("silver", "t", v) == lake._replay(
+            eff, path, None
+        ), f"manifest diverges at version {v}"
+        for fn in (lake.column_state, lake._widened, lake._added_columns):
+            assert fn("silver", "t", v) == fn(
+                "silver", "t", entries=eff
+            ), f"{fn.__name__} diverges at version {v}"
+
+    def visits(k: int) -> int:
+        _Counted.reads = 0
+        lake._replay([_Counted(e) for e in entries[:k]], path, None)
+        return _Counted.reads
+
+    # each entry's op is read at most three times (the restore-target
+    # scan, the walk and the step); replaying every restore's history
+    # again from version 0 reads the 180 entries' ops millions of times
+    half, full = visits(n // 2), visits(n)
+    assert half <= 3 * (n // 2) and full <= 3 * n
+    assert full <= 2.2 * half
+
+
+def test_read_parses_the_journal_once(spark, lake, monkeypatch):
+    for i in range(5):
+        with lake.transaction() as txn:
+            txn.append(_rows(spark, 10 * i, 4), "silver", "t")
+    counts = {"_journal_entries": 0, "_raw_snapshots": 0}
+    for fn in counts:
+        real = getattr(Lakehouse, fn)
+
+        def counting(self, *a, _fn=fn, _real=real):
+            counts[_fn] += 1
+            return _real(self, *a)
+
+        monkeypatch.setattr(Lakehouse, fn, counting)
+    df = lake.read(spark, "silver", "t")
+    assert df.columns == ["id", "s", "ts", "tn", "amt", "d"]
+    assert counts["_journal_entries"] <= 1
+    assert counts["_raw_snapshots"] <= 2
+    assert df.count() == 20

@@ -48,6 +48,7 @@ never row-level); writes never funnel through the driver.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import re
@@ -207,6 +208,37 @@ def _path_tokens(rel_path: str) -> dict[str, str]:
 _DV_SCHEMA = "file_path string, row_index long"
 
 
+def _fold_log(entries, version, init, step, seed=None, seeded_at=-1):
+    """Fold `step(state, entry)` over the commit log up to `version`
+    (inclusive; None = latest) and return the state.  `step` mutates
+    the state in place.  A `restore` entry resets the state to what it
+    was after its `of_version`: the walk keeps a copy of the state at
+    every version some restore names, so each entry is visited once
+    however restores chain.  `seed` is a state as of `seeded_at` (a
+    checkpoint); the walk starts after it, unless a later restore
+    names a version the seed already covers — then it starts at 0."""
+    live = [e for e in entries if version is None or e["version"] <= version]
+    restores = [e for e in live if e["operation"] == "restore"]
+    targets = {e["of_version"] for e in restores}
+    if seed is not None and any(
+        e["version"] > seeded_at and e["of_version"] <= seeded_at
+        for e in restores
+    ):
+        seed, seeded_at = None, -1
+    state = init() if seed is None else seed
+    kept = {}
+    for e in live:
+        if e["version"] <= seeded_at:
+            continue
+        if e["operation"] == "restore":
+            state = copy.deepcopy(kept[e["of_version"]])
+        else:
+            step(state, e)
+        if e["version"] in targets:
+            kept[e["version"]] = copy.deepcopy(state)
+    return state
+
+
 @dataclass
 class _Slice:
     """One commit dir's share of a planned read (`Lakehouse._plan`)."""
@@ -226,6 +258,7 @@ class _Plan(NamedTuple):
     dvs: list[str]  # live deletion-vector dirs
     partition_cols: list[str]  # the manifest's partition columns
     version: int | None  # the planned version (None: no commits)
+    entries: list[dict]  # the parsed log the plan was made from
 
 
 def _roots(
@@ -625,42 +658,38 @@ class Lakehouse:
     # state.
 
     def column_state(
-        self, schema: str, name: str, version: int | None = None
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
     ) -> tuple[dict[str, str], set[str]]:
         """(physical→logical renames, dropped physical names) as of
         `version` (None = latest), replayed from the metadata commits.
         Empty structures mean logical == physical (the common case —
-        callers fast-path on it)."""
-        entries = self.snapshots(schema, name)
+        callers fast-path on it).  `entries` is the caller's
+        already-parsed log (`snapshots()`), if it has one."""
 
-        def replay(upto: int | None) -> tuple[dict[str, str], set[str]]:
-            mapping: dict[str, str] = {}
-            dropped: set[str] = set()
-            for e in entries:
-                if upto is not None and e["version"] > upto:
-                    break
-                op = e["operation"]
-                if op == "restore":
-                    mapping, dropped = replay(e["of_version"])
-                elif op == "rename_column":
-                    phys = next(
-                        (p for p, l in mapping.items() if l == e["old"]),
-                        e["old"],
-                    )
-                    if e["new"] == phys:
-                        mapping.pop(phys, None)  # renamed back home
-                    else:
-                        mapping[phys] = e["new"]
-                elif op == "drop_column":
-                    phys = next(
-                        (p for p, l in mapping.items() if l == e["column"]),
-                        e["column"],
-                    )
-                    mapping.pop(phys, None)
-                    dropped.add(phys)
-            return mapping, dropped
+        def step(state: tuple[dict[str, str], set[str]], e: dict) -> None:
+            mapping, dropped = state
+            op = e["operation"]
+            if op == "rename_column":
+                phys = next(
+                    (p for p, l in mapping.items() if l == e["old"]),
+                    e["old"],
+                )
+                if e["new"] == phys:
+                    mapping.pop(phys, None)  # renamed back home
+                else:
+                    mapping[phys] = e["new"]
+            elif op == "drop_column":
+                phys = next(
+                    (p for p, l in mapping.items() if l == e["column"]),
+                    e["column"],
+                )
+                mapping.pop(phys, None)
+                dropped.add(phys)
 
-        return replay(version)
+        if entries is None:
+            entries = self.snapshots(schema, name)
+        return _fold_log(entries, version, lambda: ({}, set()), step)
 
     def _retired_physical(self, schema: str, name: str) -> set[str]:
         """Physical names no data-facing writer may reuse: dropped
@@ -840,59 +869,47 @@ class Lakehouse:
         )
 
     def _widened(
-        self, schema: str, name: str, version: int | None = None
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
     ) -> dict[str, str]:
         """physical column → widest committed type as of `version`
         (restore-aware, like `column_state`).  Later widenings of the
         same column override earlier ones (the commit guard only
         admits strictly-widening steps, so last-wins == widest)."""
-        entries = self.snapshots(schema, name)
 
-        def replay(upto: int | None) -> dict[str, str]:
-            widened: dict[str, str] = {}
-            for e in entries:
-                if upto is not None and e["version"] > upto:
-                    break
-                op = e["operation"]
-                if op == "restore":
-                    widened = replay(e["of_version"])
-                elif op == "widen_column":
-                    widened[e["column"]] = e["to_type"]
-            return widened
+        def step(widened: dict[str, str], e: dict) -> None:
+            if e["operation"] == "widen_column":
+                widened[e["column"]] = e["to_type"]
 
-        return replay(version)
+        if entries is None:
+            entries = self.snapshots(schema, name)
+        return _fold_log(entries, version, dict, step)
 
     def _added_columns(
-        self, schema: str, name: str, version: int | None = None
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
     ) -> list[dict]:
         """add_column declarations live as of `version` (restore-aware,
         like `column_state`).  Keyed by PHYSICAL name — the name the
         column had when added; later renames layer on top."""
-        entries = self.snapshots(schema, name)
 
-        def replay(upto: int | None) -> list[dict]:
-            adds: list[dict] = []
-            for e in entries:
-                if upto is not None and e["version"] > upto:
-                    break
-                op = e["operation"]
-                if op == "restore":
-                    adds = replay(e["of_version"])
-                elif op == "add_column":
-                    adds.append(
-                        {
-                            "column": e["column"],
-                            "dtype": e["dtype"],
-                            "default": e.get("default"),
-                        }
-                    )
-            return adds
+        def step(adds: list[dict], e: dict) -> None:
+            if e["operation"] == "add_column":
+                adds.append(
+                    {
+                        "column": e["column"],
+                        "dtype": e["dtype"],
+                        "default": e.get("default"),
+                    }
+                )
 
-        return replay(version)
+        if entries is None:
+            entries = self.snapshots(schema, name)
+        return _fold_log(entries, version, list, step)
 
     def _fill_added(
         self, frames: list[DataFrame], schema: str, name: str,
-        version: int | None = None,
+        version: int | None = None, entries: list[dict] | None = None,
     ) -> list[DataFrame]:
         """Attach declared-but-absent added columns (typed default or
         NULL) to each per-commit frame BEFORE the union — frame
@@ -904,8 +921,8 @@ class Lakehouse:
         int64 file generations surface as one bigint column) — every
         read path (read / read_where / read_changes) funnels through
         here, so widening applies uniformly."""
-        adds = self._added_columns(schema, name, version)
-        widened = self._widened(schema, name, version)
+        adds = self._added_columns(schema, name, version, entries)
+        widened = self._widened(schema, name, version, entries)
         if not adds and not widened:
             return frames
         out = []
@@ -924,12 +941,12 @@ class Lakehouse:
 
     def _apply_column_mapping(
         self, df: DataFrame, schema: str, name: str,
-        version: int | None = None,
+        version: int | None = None, entries: list[dict] | None = None,
     ) -> DataFrame:
         """physical→logical projection for read paths.  Hidden and
         positional plumbing columns pass through untouched (they are
         never renameable)."""
-        mapping, dropped = self.column_state(schema, name, version)
+        mapping, dropped = self.column_state(schema, name, version, entries)
         if not mapping and not dropped:
             return df
         return df.select(
@@ -2065,19 +2082,21 @@ class Lakehouse:
         with open(p) as f:
             return [json.loads(line) for line in f if line.strip()]
 
-    def _heal_from_journal(self, schema: str, name: str) -> None:
-        """Append any table-log lines a crashed committer never wrote.
-        Every read/write path calls snapshots() (and thus this) before
-        assigning new versions, so healed lines keep log order."""
+    def _heal_from_journal(self, schema: str, name: str) -> list[dict]:
+        """Append any table-log lines a crashed committer never wrote,
+        and return the table's parsed log.  Every read/write path calls
+        snapshots() (and thus this) before assigning new versions, so
+        healed lines keep log order."""
         journal = self._journal_entries()
         if not journal:
-            return
+            return self._raw_snapshots(schema, name)
         path = self._table_dir(schema, name)
         # check-and-append under the table lock so two concurrent
         # healers can't both append the same missing line
         with self._table_lock(path):
             raw = self._raw_snapshots(schema, name)
             seen = {e.get("txn_id") for e in raw if e.get("txn_id")}
+            healed = False
             for j in journal:
                 if j["txn_id"] in seen:
                     continue
@@ -2086,6 +2105,8 @@ class Lakehouse:
                         self._append_log_line(
                             path, txn_id=j["txn_id"], **t["entry"]
                         )
+                        healed = True
+            return self._raw_snapshots(schema, name) if healed else raw
 
     def compact(
         self,
@@ -2625,40 +2646,28 @@ class Lakehouse:
         dict[str, tuple[str, str]], dict[str, dict[str, list[str]]],
         list[str],
     ]:
-        part_map: dict[str, tuple[str, str]] = {}
-        # additive (append / MoR-update) dirs → partition exclusions:
-        # a later partition OVERWRITE supersedes same-partition rows
-        # that live in OLDER additive dirs, so each overwritten value
-        # is recorded here and filtered out at read time (a newer
-        # append of the same partition is unaffected — its dir enters
-        # the map after the overwrite, with no exclusion)
-        extra: dict[str, dict[str, list[str]]] = {}
-        dvs: list[str] = []  # live deletion-vector dirs
-        if seed is not None:
-            part_map, extra, dvs = (
-                dict(seed[0]), self._norm_extra(seed[1]), list(seed[2]),
-            )
-        for e in entries:
-            if e["version"] <= start_after:
-                continue
-            if version is not None and e["version"] > version:
-                break
-            op = e["operation"]
-            if op == "restore":
-                # reset to the state as of the restored version — the
-                # rollback is one log line, no data is copied
-                part_map, extra, dvs = self._replay(
-                    entries, path, e["of_version"]
-                )
-                continue
+        def step(state: tuple[dict, dict, list], e: dict) -> None:
+            # part_map: partition → (data_dir, partition_col).
+            # extra: additive (append / MoR-update) dirs → partition
+            # exclusions: a later partition OVERWRITE supersedes
+            # same-partition rows that live in OLDER additive dirs, so
+            # each overwritten value is recorded here and filtered out
+            # at read time (a newer append of the same partition is
+            # unaffected — its dir enters the map after the overwrite,
+            # with no exclusion).  dvs: live deletion-vector dirs.
+            part_map, extra, dvs = state
             d = e.get("data_dir")
             if d is None:
-                continue
+                return
             d = os.path.join(path, d)
+            op = e["operation"]
             if op in ("overwrite", "compact"):
                 # full rewrite: data was read THROUGH the DV filter, so
                 # the new files are clean — vectors reset
-                part_map, extra, dvs = {}, {d: {}}, []
+                part_map.clear()
+                extra.clear()
+                dvs.clear()
+                extra[d] = {}
             elif op == "append":
                 extra[d] = {}
             elif op == "delete_dv":
@@ -2671,7 +2680,9 @@ class Lakehouse:
                 dvs.append(os.path.join(path, e["dv_dir"]))
             elif op in ("overwrite_partitions", "compact_partitioned"):
                 if op == "compact_partitioned":
-                    part_map, extra, dvs = {}, {}, []
+                    part_map.clear()
+                    extra.clear()
+                    dvs.clear()
                 pcol = e["partition_col"]
                 parts = [str(p) for p in e["partitions"]]
                 for p in parts:
@@ -2686,7 +2697,16 @@ class Lakehouse:
                 # a partition overwrite leaves vectors in place: DV rows
                 # referencing superseded files go inert (their file
                 # paths are no longer scanned); compaction reclaims them
-        return part_map, extra, dvs
+
+        if seed is not None:
+            seed = (
+                dict(seed[0]), self._norm_extra(seed[1]), list(seed[2]),
+            )
+        # a restore resets to the state as of the restored version —
+        # the rollback is one log line, no data is copied
+        return _fold_log(
+            entries, version, lambda: ({}, {}, []), step, seed, start_after
+        )
 
     def restore(self, schema: str, name: str, version: int) -> None:
         """RESTORE TABLE ... TO VERSION AS OF analog: make the table's
@@ -2822,6 +2842,7 @@ class Lakehouse:
         partition_values: list[str] | None = None,
         predicates: list[tuple] | None = None,
         tz: str | None = None,
+        entries: list[dict] | None = None,
     ) -> _Plan:
         """The live files of the table as of `version` (None = latest),
         planned from the commit log alone: the replayed manifest says
@@ -2844,11 +2865,14 @@ class Lakehouse:
         A commit logged before entries listed their files is listed
         once here (`collect_file_stats` without stats: it is read
         whole and never pruned); one without a logged schema lets
-        Spark infer it."""
+        Spark infer it.  `entries` is the caller's already-parsed log
+        (`snapshots()`), if it has one; the plan carries the log it
+        was made from, so one read parses the log once."""
         from .bloom import bloom_survives
         from .skipping import collect_file_stats, file_survives
 
-        entries = self.snapshots(schema, name)
+        if entries is None:
+            entries = self.snapshots(schema, name)
         part_map, extra, dvs = self._readable_manifest(
             schema, name, version, entries
         )
@@ -2884,7 +2908,7 @@ class Lakehouse:
             # predicates arrive in LOGICAL names; footer stats and
             # bloom filters are keyed by the PHYSICAL names the files
             # store
-            cmap, _ = self.column_state(schema, name, version)
+            cmap, _ = self.column_state(schema, name, version, entries)
             inv = {l: p for p, l in cmap.items()}
             phys = [(inv.get(p[0], p[0]), *p[1:]) for p in predicates]
             bloom_cfg = self.bloom_index(schema, name)
@@ -2957,6 +2981,7 @@ class Lakehouse:
             [d for d in dvs if files_of(d)[0]],
             pcols,
             entries[-1]["version"] if version is None and entries else version,
+            entries,
         )
 
     def _slice_frame(
@@ -3023,7 +3048,7 @@ class Lakehouse:
         return self._drop_hidden(
             self._union_frames(
                 spark, frames, schema, name, version, plan.dvs,
-                with_positions,
+                with_positions, plan.entries,
             )
         )
 
@@ -3036,12 +3061,14 @@ class Lakehouse:
         version: int | None,
         dvs: list[str],
         with_positions: bool,
+        entries: list[dict],
     ) -> DataFrame:
         """The common tail of `read` and `read_where`: one frame per
         commit-dir slice → the table's logical rows (added-column
         defaults filled, live deletion vectors anti-joined out, column
-        mapping applied; hidden columns still present)."""
-        frames = self._fill_added(frames, schema, name, version)
+        mapping applied; hidden columns still present).  `entries` is
+        the parsed log the slices were planned from."""
+        frames = self._fill_added(frames, schema, name, version, entries)
         tag = with_positions or bool(dvs)
         if tag:
             tdir = self._table_dir(schema, name)
@@ -3055,7 +3082,9 @@ class Lakehouse:
             out = self._apply_dvs(
                 spark, out, dvs, keep_positions=with_positions
             )
-        return self._apply_column_mapping(out, schema, name, version)
+        return self._apply_column_mapping(
+            out, schema, name, version, entries
+        )
 
     def read_where(
         self,
@@ -3110,7 +3139,8 @@ class Lakehouse:
             self._slice_frame(spark, schema, name, sl) for sl in plan.slices
         ]
         out = self._union_frames(
-            spark, frames, schema, name, version, plan.dvs, with_positions
+            spark, frames, schema, name, version, plan.dvs, with_positions,
+            plan.entries,
         )
         return self._drop_hidden(out.filter(predicates_to_column(predicates)))
 
@@ -3345,7 +3375,7 @@ class Lakehouse:
         diffs empty.
         """
         old = self._plan(schema, name, from_version)
-        new = self._plan(schema, name, to_version)
+        new = self._plan(schema, name, to_version, entries=old.entries)
 
         # dirs holding files whose DV coverage changed between versions
         dv_touched: set[str] = set()
@@ -3403,7 +3433,7 @@ class Lakehouse:
             return self._drop_hidden(
                 self._union_frames(
                     spark, frames, schema, name, to_version, side.dvs,
-                    False,
+                    False, new.entries,
                 )
             )
 
@@ -3617,7 +3647,9 @@ class Lakehouse:
                 "files); compact() first"
             )
         bad_adds = [
-            a for a in self._added_columns(schema, name, version)
+            a for a in self._added_columns(
+                schema, name, version, plan.entries
+            )
             if a["default"] is not None
         ]
         if bad_adds:
@@ -3643,7 +3675,9 @@ class Lakehouse:
                 (hive_files if "=" in f["path"] else flat_files).append(
                     os.path.join(sl.d, f["path"])
                 )
-        mapping, dropped = self.column_state(schema, name, version)
+        mapping, dropped = self.column_state(
+            schema, name, version, plan.entries
+        )
         spec = self.partition_spec(schema, name)
         manifest = {
             "table": f"{schema}.{name}",
@@ -3671,7 +3705,9 @@ class Lakehouse:
                     "column": mapping.get(a["column"], a["column"]),
                     "dtype": a["dtype"],
                 }
-                for a in self._added_columns(schema, name, version)
+                for a in self._added_columns(
+                    schema, name, version, plan.entries
+                )
             ],
             # type-widened columns: files keep their narrow physical
             # type (immutable), so consumers must CAST after the read
@@ -3679,7 +3715,9 @@ class Lakehouse:
             # but a table whose files are all still narrow would
             # otherwise surface the narrow type.  Keyed by PHYSICAL
             # name (pre-mapping), values are Spark/ANSI type names.
-            "widened_columns": self._widened(schema, name, version),
+            "widened_columns": self._widened(
+                schema, name, version, plan.entries
+            ),
         }
         if write:
             mdir = os.path.join(
@@ -3712,8 +3750,7 @@ class Lakehouse:
     def snapshots(self, schema: str, name: str) -> list[dict]:
         """Commit history for a table (DESCRIBE HISTORY analog), after
         healing any committed-but-unlogged transaction lines."""
-        self._heal_from_journal(schema, name)
-        return self._raw_snapshots(schema, name)
+        return self._heal_from_journal(schema, name)
 
     def _log_snapshot(self, path: str, op: str, **extra) -> None:
         """Serialized version-assign + append (no conflict check — used
