@@ -306,3 +306,25 @@ def test_read_where_with_positions_matches_read(spark, lake):
         map(key, full.collect())
     )
     assert pruned.filter(F.col("id") < 10).count() == 0  # DVs applied
+
+
+def test_mor_dml_matching_nothing_commits_and_stages_nothing(spark, lake):
+    """A merge-on-read DELETE or UPDATE that names no row commits
+    nothing and leaves no staged dir under `_data/`: the vector is
+    written, its footer row count is 0, and the dir is removed."""
+    import os
+
+    _seed(spark, lake)
+    data = os.path.join(lake._table_dir("silver", "t"), "_data")
+    staged = sorted(os.listdir(data))
+    assert not lake.delete_where(
+        spark, "silver", "t", F.col("id") < 0,
+        partition_col="p", mode="merge_on_read",
+    )
+    assert not lake.update_where(
+        spark, "silver", "t", F.col("id") < 0, {"v": F.lit(0)},
+        partition_col="p", mode="merge_on_read",
+    )
+    assert len(lake.snapshots("silver", "t")) == 1
+    assert sorted(os.listdir(data)) == staged
+    assert lake.read(spark, "silver", "t").count() == 1000

@@ -611,7 +611,7 @@ def test_escaped_and_null_partition_values_read_exactly(
         lake.read(spark, "silver", "t").inputFiles()
     )
     # partition_values read (the IVF probe shape) on the NULL token
-    # (the sentinel on this format-v2 table)
+    # (the sentinel)
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         NULL_SENTINEL,
     )

@@ -969,28 +969,12 @@ def test_overwrite_partitions_layout_knobs(spark, tmp_path):
         assert first_page_min == want, (path, first_page_min)
 
 
-def _make_legacy(lake, schema: str, name: str) -> None:
-    """Pin a table to the pre-r12 token scheme (NULL token 'None') the
-    way a table created before the format flag existed behaves — the
-    format file must exist BEFORE the first write or _ensure_format
-    stamps the v2 sentinel."""
-    import json
-    import os
-
-    path = lake._table_dir(schema, name)
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, lake.FORMAT_FILE), "w") as f:
-        json.dump({"null_token": "None"}, f)
-
-
 def test_null_partition_value_records_canonical_token(spark, tmp_path):
     """A NULL partition value lands in the __HIVE_DEFAULT_PARTITION__
-    directory; on a format-v2 table (every table this code creates)
-    the sentinel IS the canonical null token recorded on the commit
-    line, so overwrite/conflict bookkeeping for null-keyed partitions
-    stays stable across code paths and commits — and a literal string
-    'None' is a DISTINCT identity.  A legacy table (format file
-    predating the flag) keeps the documented 'None' token."""
+    directory, and the sentinel IS the canonical null token recorded
+    on the commit line, so overwrite/conflict bookkeeping for
+    null-keyed partitions stays stable across code paths and commits —
+    and a literal string 'None' is a DISTINCT identity."""
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         NULL_SENTINEL,
         Lakehouse,
@@ -1004,7 +988,6 @@ def test_null_partition_value_records_canonical_token(spark, tmp_path):
     lake.overwrite_partitions(df, "silver", "t", partition_col="k")
     recorded = lake.snapshots("silver", "t")[-1]["partitions"]
     assert sorted(recorded) == [NULL_SENTINEL, "a"]
-    assert lake.null_token("silver", "t") == NULL_SENTINEL
 
     # second commit touching only the null partition: derived token
     # matches the first commit's, so supersede actually replaces it
@@ -1019,25 +1002,12 @@ def test_null_partition_value_records_canonical_token(spark, tmp_path):
     }
     assert got == {(1, "a"), (3, "a"), (9, None)}
 
-    # legacy table: the old token scheme, unchanged
-    _make_legacy(lake, "silver", "t_old")
-    lake.overwrite_partitions(df, "silver", "t_old", partition_col="k")
-    assert sorted(
-        lake.snapshots("silver", "t_old")[-1]["partitions"]
-    ) == ["None", "a"]
-    assert lake.null_token("silver", "t_old") == "None"
-    got_old = {
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t_old").collect()
-    }
-    assert got_old == {(1, "a"), (2, None), (3, "a")}
-
 
 def test_null_partition_supersede_and_probe(spark, tmp_path):
     """NULL-keyed rows must (a) be superseded out of older additive
     dirs when the null partition is overwritten — the exclusion filter
     was NULL-blind and resurrected them — and (b) be reachable through
-    a `partition_values=['None']` directory probe."""
+    a `partition_values=[NULL_SENTINEL]` directory probe."""
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         Lakehouse,
     )
@@ -1061,8 +1031,7 @@ def test_null_partition_supersede_and_probe(spark, tmp_path):
     }
     assert got == {(2, "a"), (7, None)}
 
-    # directory probe by the canonical null token (the sentinel on
-    # this format-v2 table)
+    # directory probe by the canonical null token (the sentinel)
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         NULL_SENTINEL,
     )
@@ -1164,11 +1133,12 @@ def test_null_partition_dml_preserves_neighbors(spark, tmp_path):
 def test_null_and_literal_none_are_distinct_on_v2_tables(
     spark, tmp_path
 ):
-    """Format-v2 tables (every table this code creates) retire the
-    NULL/'None' identity collision: the sentinel is the canonical NULL
-    token, so NULL-keyed and literal-string-'None'-keyed rows land in
-    DISTINCT partitions — written in the same or separate commits —
-    and a delete scoped to one never touches the other."""
+    """The sentinel is the one canonical NULL token, so NULL-keyed and
+    literal-string-'None'-keyed rows land in DISTINCT partitions —
+    written in the same or separate commits, rewritten through the
+    explicit `partitions=` path, deleted copy-on-write or
+    merge-on-read — and an operation scoped to one never touches the
+    other, at the latest version or any earlier one."""
     import pyspark.sql.functions as F
 
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
@@ -1178,132 +1148,68 @@ def test_null_and_literal_none_are_distinct_on_v2_tables(
 
     lake = Lakehouse(str(tmp_path / "lake"))
     lake.create_schemas("silver")
-    # the same-commit mix, refused on legacy tables, just works here
-    mixed = spark.createDataFrame(
-        [(1, "None"), (2, None), (3, "a")], "id long, k string"
-    )
-    lake.overwrite_partitions(mixed, "silver", "t", partition_col="k")
+
+    def write(row_list, partitions=None):
+        lake.overwrite_partitions(
+            spark.createDataFrame(row_list, "id long, k string"),
+            "silver", "t", partition_col="k", partitions=partitions,
+        )
+
+    def rows(version=None):
+        return {
+            (r["id"], r["k"])
+            for r in lake.read(spark, "silver", "t", version).collect()
+        }
+
+    # the same-commit mix
+    write([(1, "None"), (2, None), (3, "a")])
     assert sorted(lake.snapshots("silver", "t")[-1]["partitions"]) == [
         "None", NULL_SENTINEL, "a",
     ]
     # separate commits: supersede keys on distinct tokens
-    lake.overwrite_partitions(
-        spark.createDataFrame([(9, None)], "id long, k string"),
-        "silver", "t", partition_col="k",
-    )
-    lake.overwrite_partitions(
-        spark.createDataFrame([(8, "None")], "id long, k string"),
-        "silver", "t", partition_col="k",
-    )
-    rows = {
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t").collect()
-    }
-    assert rows == {(3, "a"), (8, "None"), (9, None)}
-    # a delete of the NULL partition leaves the literal-'None' row
-    lake.delete_where(
+    write([(9, None)])
+    write([(8, "None")])
+    assert rows() == {(3, "a"), (8, "None"), (9, None)}
+    # explicit-partitions rewrites: a literal-'None' write naming
+    # 'None' leaves the NULL partition, and a same-token NULL rewrite
+    # naming the sentinel replaces only the NULL partition
+    write([(5, "None")], partitions=["None"])
+    assert rows() == {(3, "a"), (5, "None"), (9, None)}
+    write([(6, None)], partitions=[NULL_SENTINEL])
+    assert lake.snapshots("silver", "t")[-1]["partitions"] == [
+        NULL_SENTINEL
+    ]
+    assert rows() == {(3, "a"), (5, "None"), (6, None)}
+    before_deletes = lake.snapshots("silver", "t")[-1]["version"]
+    # a merge-on-read delete of the NULL partition leaves the literal
+    assert lake.delete_where(
         spark, "silver", "t", F.col("k").isNull(), partition_col="k",
+        mode="merge_on_read",
     )
-    rows = {
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t").collect()
-    }
-    assert rows == {(3, "a"), (8, "None")}
-    # and a delete of the literal partition leaves everything else
+    assert rows() == {(3, "a"), (5, "None")}
+    write([(7, None)], partitions=[NULL_SENTINEL])
+    # a copy-on-write delete of the literal partition leaves NULL...
     lake.delete_where(
         spark, "silver", "t", F.col("k") == "None", partition_col="k",
     )
-    rows = {
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t").collect()
-    }
-    assert rows == {(3, "a")}
+    assert rows() == {(3, "a"), (7, None)}
+    # ...and one of the NULL partition leaves everything else
+    lake.delete_where(
+        spark, "silver", "t", F.col("k").isNull(), partition_col="k",
+    )
+    assert rows() == {(3, "a")}
+    # time travel to before the deletes sees both partitions again
+    assert rows(before_deletes) == {(3, "a"), (5, "None"), (6, None)}
+    assert rows(before_deletes + 1) == {(3, "a"), (5, "None")}
 
 
-def test_null_and_literal_none_partition_mix_is_refused_on_legacy(
-    spark, tmp_path
-):
-    """LEGACY tables keep the documented collision (a literal string
-    'None' shares partition identity with NULL), refused LOUDLY at the
-    one point the two forms are physically distinguishable for free —
-    the hive dir names — both when one write produces both forms and
-    (r12) when the incoming write carries one form while the table's
-    live directories already hold the other.  Either value alone still
-    writes fine (no false positives)."""
-    import pytest as _pytest
-
-    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
-        Lakehouse,
-    )
-
-    lake = Lakehouse(str(tmp_path / "lake"))
-    lake.create_schemas("silver")
-    for t in ("t", "t_lit", "t_null", "t_x1", "t_x2"):
-        _make_legacy(lake, "silver", t)
-    mixed = spark.createDataFrame(
-        [(1, "None"), (2, None), (3, "a")], "id long, k string"
-    )
-    with _pytest.raises(ValueError, match="mixes NULL and the literal"):
-        lake.overwrite_partitions(
-            mixed, "silver", "t", partition_col="k"
-        )
-    # literal 'None' alone: allowed (it IS the 'None' token)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(1, "None")], "id long, k string"),
-        "silver", "t_lit", partition_col="k",
-    )
-    assert lake.snapshots("silver", "t_lit")[-1]["partitions"] == [
-        "None"
-    ]
-    # NULL alone: allowed (canonical token path, unchanged)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(2, None)], "id long, k string"),
-        "silver", "t_null", partition_col="k",
-    )
-    assert lake.snapshots("silver", "t_null")[-1]["partitions"] == [
-        "None"
-    ]
-    # cross-commit mix, both directions: NULL-keyed first, literal
-    # 'None' second — and vice versa — both refused (the r11 guard
-    # only saw a single write's dir listing)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(2, None)], "id long, k string"),
-        "silver", "t_x1", partition_col="k",
-    )
-    with _pytest.raises(ValueError, match="cross-commit"):
-        lake.overwrite_partitions(
-            spark.createDataFrame([(1, "None")], "id long, k string"),
-            "silver", "t_x1", partition_col="k",
-        )
-    lake.overwrite_partitions(
-        spark.createDataFrame([(1, "None")], "id long, k string"),
-        "silver", "t_x2", partition_col="k",
-    )
-    with _pytest.raises(ValueError, match="cross-commit"):
-        lake.overwrite_partitions(
-            spark.createDataFrame([(2, None)], "id long, k string"),
-            "silver", "t_x2", partition_col="k",
-        )
-    # same-token rewrites still pass the guard (no false positives)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(7, None)], "id long, k string"),
-        "silver", "t_x1", partition_col="k",
-    )
-    assert [
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t_x1").collect()
-    ] == [(7, None)]
-
-
-def test_legacy_mix_guard_covers_explicit_partitions_writes(
-    spark, tmp_path
-):
-    """r13 (ADVICE): the legacy NULL/'None' mix guard must also fire
-    on the EXPLICIT `partitions=[...]` write path (delete_where /
-    update rewrites, direct callers) — the caller's canonical tokens
-    conflate the two forms, but the staged directory names don't.
-    Same-token rewrites through the same path stay allowed."""
-    import pytest as _pytest
+def test_table_without_sentinel_format_is_refused(spark, tmp_path):
+    """The NULL sentinel is the only NULL-partition token.  A table
+    with commits whose `_format.json` is missing, or names another
+    token (the retired 'None' scheme, under which NULL and a literal
+    'None' shared a partition), is refused with one ValueError on
+    read, read_where and write — never misread, and nothing staged."""
+    import json
 
     from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
         Lakehouse,
@@ -1311,49 +1217,29 @@ def test_legacy_mix_guard_covers_explicit_partitions_writes(
 
     lake = Lakehouse(str(tmp_path / "lake"))
     lake.create_schemas("silver")
-    for t in ("t_null", "t_lit"):
-        _make_legacy(lake, "silver", t)
-    # table holds NULL-keyed rows; an explicit-partitions write
-    # carrying literal 'None' is the cross-commit mix
-    lake.overwrite_partitions(
-        spark.createDataFrame([(1, None)], "id long, k string"),
-        "silver", "t_null", partition_col="k",
-    )
-    with _pytest.raises(ValueError, match="cross-commit"):
-        lake.overwrite_partitions(
-            spark.createDataFrame([(2, "None")], "id long, k string"),
-            "silver", "t_null", partition_col="k",
-            partitions=["None"],
-        )
-    # ...and the other direction
-    lake.overwrite_partitions(
-        spark.createDataFrame([(1, "None")], "id long, k string"),
-        "silver", "t_lit", partition_col="k",
-    )
-    with _pytest.raises(ValueError, match="cross-commit"):
-        lake.overwrite_partitions(
-            spark.createDataFrame([(2, None)], "id long, k string"),
-            "silver", "t_lit", partition_col="k",
-            partitions=["None"],
-        )
-    # a same-commit mix staged through the explicit path is refused too
-    with _pytest.raises(ValueError, match="mixes NULL and the literal"):
-        lake.overwrite_partitions(
-            spark.createDataFrame(
-                [(3, None), (4, "None")], "id long, k string"
-            ),
-            "silver", "t_lit", partition_col="k",
-            partitions=["None"],
-        )
-    # same-token rewrite via the explicit path: no false positive
-    lake.overwrite_partitions(
-        spark.createDataFrame([(9, None)], "id long, k string"),
-        "silver", "t_null", partition_col="k", partitions=["None"],
-    )
-    assert [
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t_null").collect()
-    ] == [(9, None)]
+    df = spark.createDataFrame([(1, None), (2, "a")], "id long, k string")
+    lake.overwrite_partitions(df, "silver", "t", partition_col="k")
+    path = lake._table_dir("silver", "t")
+    fmt = os.path.join(path, lake.FORMAT_FILE)
+    staged = sorted(os.listdir(os.path.join(path, "_data")))
+    calls = [
+        lambda: lake.read(spark, "silver", "t"),
+        lambda: lake.read_where(spark, "silver", "t", [("id", "=", 1)]),
+        lambda: lake.overwrite_partitions(
+            df, "silver", "t", partition_col="k"
+        ),
+    ]
+    for case in ("missing", "None token"):
+        if case == "missing":
+            os.remove(fmt)
+        else:
+            with open(fmt, "w") as f:
+                json.dump({"null_token": "None"}, f)
+        for call in calls:
+            with pytest.raises(ValueError, match="unsupported table format"):
+                call()
+    assert len(lake.snapshots("silver", "t")) == 1
+    assert sorted(os.listdir(os.path.join(path, "_data"))) == staged
 
 
 @pytest.fixture()
@@ -1449,119 +1335,6 @@ def test_bronze_e2e_over_http(spark, tmp_path, loopback_http):
     assert dict(df.dtypes)["viajes"] == "string"
     assert all(r["source_url"] == url for r in rows)
     assert all(r["filename"].endswith("trips.csv.gz") for r in rows)
-
-
-def test_migrate_null_token_null_form(spark, tmp_path):
-    """r13: a legacy table whose 'None' token holds TRUE-NULL rows
-    migrates in one versioned commit; afterwards a NULL-delete touches
-    only the true-NULL partition and a literal 'None' value is a
-    DISTINCT partition that can coexist."""
-    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
-        NULL_SENTINEL,
-        HistoryUnavailableError,
-        Lakehouse,
-    )
-
-    lake = Lakehouse(str(tmp_path / "lake"))
-    lake.create_schemas("silver")
-    _make_legacy(lake, "silver", "t")
-    lake.overwrite_partitions(
-        spark.createDataFrame(
-            [(1, None), (2, "a"), (3, None)], "id long, k string"
-        ),
-        "silver", "t", partition_col="k",
-    )
-    res = lake.migrate_null_token(spark, "silver", "t")
-    assert res["migrated"] and NULL_SENTINEL in res["rewritten_partitions"]
-    assert lake.null_token("silver", "t") == NULL_SENTINEL
-    # contents unchanged
-    assert sorted(
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t").collect()
-    ) == [(1, None), (2, "a"), (3, None)]
-    # a literal 'None' string is now a distinct identity (v2 rules)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(9, "None")], "id long, k string"),
-        "silver", "t", partition_col="k",
-    )
-    # NULL-delete touches only the true-NULL partition
-    assert lake.delete_where(
-        spark, "silver", "t", F.col("k").isNull(), partition_col="k"
-    )
-    assert sorted(
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t").collect()
-    ) == [(2, "a"), (9, "None")]
-    # time travel below the migration commit surfaces the ambiguity
-    import pytest as _pytest
-
-    with _pytest.raises(HistoryUnavailableError, match="migration"):
-        lake.read(spark, "silver", "t", version=0)
-    # idempotent: a second call is a no-op
-    assert lake.migrate_null_token(spark, "silver", "t") == {
-        "migrated": False, "reason": "already_v2",
-    }
-
-
-def test_migrate_null_token_literal_form_and_refusals(spark, tmp_path):
-    """Literal-'None' legacy tables migrate keeping their token; a
-    genuinely mixed HISTORY refuses; an empty legacy table just flips
-    the scheme."""
-    import pytest as _pytest
-
-    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
-        NULL_SENTINEL,
-        Lakehouse,
-    )
-
-    lake = Lakehouse(str(tmp_path / "lake"))
-    lake.create_schemas("silver")
-    for t in ("t_lit", "t_mixed", "t_empty"):
-        _make_legacy(lake, "silver", t)
-    # literal form
-    lake.overwrite_partitions(
-        spark.createDataFrame(
-            [(1, "None"), (2, "b")], "id long, k string"
-        ),
-        "silver", "t_lit", partition_col="k",
-    )
-    res = lake.migrate_null_token(spark, "silver", "t_lit")
-    assert res["migrated"] and res["rewritten_partitions"] == ["None"]
-    assert sorted(
-        (r["id"], r["k"])
-        for r in lake.read(spark, "silver", "t_lit").collect()
-    ) == [(1, "None"), (2, "b")]
-    # NULL rows can now join as a distinct partition
-    lake.overwrite_partitions(
-        spark.createDataFrame([(5, None)], "id long, k string"),
-        "silver", "t_lit", partition_col="k",
-    )
-    assert lake.read(spark, "silver", "t_lit").count() == 3
-    # mixed HISTORY refuses even when the live state is single-form:
-    # literal 'None' written, deleted, then NULLs written (the live
-    # guard allowed it — the 'None' partition was empty)
-    lake.overwrite_partitions(
-        spark.createDataFrame([(1, "None")], "id long, k string"),
-        "silver", "t_mixed", partition_col="k",
-    )
-    lake.delete_where(
-        spark, "silver", "t_mixed", F.col("k") == "None",
-        partition_col="k",
-    )
-    lake.overwrite_partitions(
-        spark.createDataFrame([(2, None)], "id long, k string"),
-        "silver", "t_mixed", partition_col="k",
-    )
-    with _pytest.raises(ValueError, match="BOTH"):
-        lake.migrate_null_token(spark, "silver", "t_mixed")
-    # empty table: pure metadata flip
-    res = lake.migrate_null_token(spark, "silver", "t_empty")
-    assert res == {
-        "migrated": True,
-        "rewritten_partitions": [],
-        "history_guard_version": None,
-    }
-    assert lake.null_token("silver", "t_empty") == NULL_SENTINEL
 
 
 @pytest.mark.parametrize("write", ["overwrite", "overwrite_partitions"])

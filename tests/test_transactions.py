@@ -183,8 +183,8 @@ def test_txn_probe_discovery_handles_null_and_escaped_tokens(
     """The r11 probe branch (predicates on a NON-source column of a
     hidden-partitioned table) must canonicalize the partition tokens
     it reads off file paths exactly like the write path: the
-    __HIVE_DEFAULT_PARTITION__ dir maps to the catalog's 'None' token
-    and hive escaping is undone — otherwise a delete matching a row
+    __HIVE_DEFAULT_PARTITION__ dir is the catalog's NULL token and
+    hive escaping is undone — otherwise a delete matching a row
     in the NULL partition silently skips it (the GDPR-erasure miss)."""
     lake = Lakehouse(str(tmp_path / "lake"))
     lake.create_schemas("silver")

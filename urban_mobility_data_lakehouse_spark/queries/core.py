@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import relational as R
-from ..sources.testdata import fan_out, load_table
+from ..sources.testdata import load_table
 from . import register
 
 
@@ -327,10 +327,8 @@ def roleplay_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the lineitem×orders orderkey join is FACT×FACT — ride the
     # same write-time bucketed layout gravity_gaps and
     # bucketed_fact_join use (ensure_bucketed_facts), so the join needs
-    # NO exchange on either side; the four dims stay broadcast.  The
-    # former shape fan_out-shuffled the full lineitem projection
-    # (~11 MB at sf0.1) into a shuffle join on every run.  Unprepared
-    # sessions fall back to the fan_out plan — same rows, one shuffle.
+    # NO exchange on either side; the four dims stay broadcast.
+    # Unprepared sessions fall back to plain scans — same rows.
     from .functions_suite import attach_bucketed_facts
 
     names = attach_bucketed_facts(spark, sf_dir)
@@ -338,7 +336,7 @@ def roleplay_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem, orders = (spark.table(n) for n in names)
         lineitem = lineitem.hint("MERGE")
     else:
-        lineitem = fan_out(_t(spark, sf_dir, "lineitem"))
+        lineitem = _t(spark, sf_dir, "lineitem")
         orders = _t(spark, sf_dir, "orders")
     return R.roleplay_nations(
         lineitem,

@@ -52,6 +52,7 @@ import copy
 import json
 import os
 import re
+import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
@@ -166,33 +167,30 @@ def _commits_conflict(mine: dict, other: dict) -> bool:
     )
 
 
-# Hive's NULL-partition directory name.  For tables created at format
-# v2 (see Lakehouse.null_token) it is ALSO the catalog's canonical
-# NULL partition token, which retires the NULL/'None' identity
-# collision: a literal string 'None' tokenizes as 'None', NULL as the
-# sentinel — two distinct partitions.  Legacy tables (created before
-# the format file existed) keep the documented 'None' token.
+# Hive's NULL-partition directory name, and the catalog's one NULL
+# partition token: a NULL partition key tokenizes as the sentinel and a
+# literal string 'None' as 'None' — two distinct partitions.  Every
+# table records it in `_format.json` (`Lakehouse._ensure_format`); a
+# table whose format file is missing or names another token is refused
+# (`Lakehouse._check_format`).
 NULL_SENTINEL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _canon_token(raw: str, null_token: str = "None") -> str:
+def _canon_token(raw: str) -> str:
     """Hive directory-name token → the catalog's canonical partition
-    token: the __HIVE_DEFAULT_PARTITION__ sentinel maps to the table's
-    NULL token (`Lakehouse.null_token` — 'None' on legacy tables, the
-    sentinel itself on format-v2 tables, where this mapping is the
-    identity) and hive %-escaping is undone.  EVERY comparison between
-    commit-log partition tokens and `<pcol>=<raw>` path segments must
-    go through this — matching the constructed
-    canonical name against escaped/sentinel directories silently drops
-    those partitions (found via a NULL-keyed erasure miss, r11)."""
+    token: hive %-escaping is undone (the NULL sentinel has none to
+    undo).  EVERY comparison between commit-log partition tokens and
+    `<pcol>=<raw>` path segments must go through this — matching the
+    constructed canonical name against escaped directories silently
+    drops those partitions (found via a NULL-keyed erasure miss)."""
     from urllib.parse import unquote
 
-    return null_token if raw == NULL_SENTINEL else unquote(raw)
+    return unquote(raw)
 
 
-def _token_of(value, null_token: str = "None") -> str:
+def _token_of(value) -> str:
     """Partition VALUE (off a collected row) → canonical token."""
-    return null_token if value is None else str(value)
+    return NULL_SENTINEL if value is None else str(value)
 
 
 def _path_tokens(rel_path: str) -> dict[str, str]:
@@ -382,171 +380,49 @@ class Lakehouse:
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
-    # -- table format (the NULL-partition-token flag) ----------------------
+    # -- table format (the NULL-partition token) ---------------------------
 
     FORMAT_FILE = "_format.json"
 
-    def null_token(self, schema: str, name: str) -> str:
-        """The table's canonical NULL-partition token.  Tables created
-        at format v2 (every table this code creates: `_ensure_format`
-        stamps `_format.json` before the first commit) use the
-        dedicated hive sentinel, so a NULL partition key and a literal
-        string 'None' are DISTINCT partition identities.  Tables
-        without the format file — created before the flag existed —
-        keep the documented legacy token 'None' (str(None)), where the
-        two forms share identity; `_stage_overwrite_partitions` refuses
-        writes that would mix them, same-commit or cross-commit."""
+    def _check_format(self, schema: str, name: str, new: bool) -> bool:
+        """True when the table's format file names `NULL_SENTINEL`;
+        False when there is none and the caller says the table is
+        `new` (no commits).  Anything else — a committed table without
+        the file, or a file naming another NULL token (the retired
+        'None' scheme, under which NULL and a literal 'None' shared one
+        partition) — raises `ValueError` rather than being misread."""
         p = os.path.join(self._table_dir(schema, name), self.FORMAT_FILE)
-        if os.path.exists(p):
+        try:
             with open(p) as f:
-                return json.load(f).get("null_token", "None")
-        return "None"
-
-    def migrate_null_token(
-        self, spark: SparkSession, schema: str, name: str
-    ) -> dict:
-        """Upgrade a LEGACY table (NULL token 'None') to format v2 in
-        ONE versioned commit (r13, VERDICT #4).
-
-        Under the legacy scheme a NULL partition key and a literal
-        string 'None' SHARE the token 'None' — physically
-        distinguishable (sentinel dir vs `pcol=None` dir) but one
-        identity to every delete/rewrite.  Migration:
-
-        * no commits yet → stamp `_format.json` with the sentinel,
-          done;
-        * the table's HISTORY (every version directory, raw dir names
-          only — no data read) holds BOTH physical forms → REFUSE:
-          under the shared identity which rows each historical commit
-          meant is ambiguous, and guessing would silently rewrite one
-          form as the other;
-        * otherwise the live 'None'-token rows are rewritten under the
-          new identity — NULL rows re-land in the sentinel dir with
-          the sentinel as their CANONICAL token, superseding the
-          legacy 'None' entry in the same commit — and `_format.json`
-          is stamped with the sentinel plus `migrated_at_version`.
-
-        Time travel / CDC / RESTORE below `migrated_at_version` raise
-        `HistoryUnavailableError` whenever the legacy token ever held
-        data: the old log lines speak the old identity, and re-reading
-        them under the new scheme would silently drop (or double) the
-        NULL partition — surfaced, not guessed."""
-        path = self._table_dir(schema, name)
-        if self.null_token(schema, name) != "None":
-            return {"migrated": False, "reason": "already_v2"}
-
-        def _stamp(guard: int | None) -> None:
-            payload: dict = {"null_token": NULL_SENTINEL}
-            if guard is not None:
-                payload["migrated_at_version"] = guard
-            tmp = os.path.join(path, self.FORMAT_FILE + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, os.path.join(path, self.FORMAT_FILE))
-
-        entries = self.snapshots(schema, name)
-        if not entries:
-            os.makedirs(path, exist_ok=True)
-            _stamp(None)
-            return {
-                "migrated": True,
-                "rewritten_partitions": [],
-                "history_guard_version": None,
-            }
-        # history-wide physical-form census: directory NAMES across
-        # every version dir (live and superseded) — metadata-scale,
-        # no data read
-        hist: dict[str, set[str]] = {}
-        for _root, dirs, _files in os.walk(path):
-            for d in dirs:
-                if "=" not in d:
-                    continue
-                pc, tok = d.split("=", 1)
-                if tok in ("None", NULL_SENTINEL):
-                    hist.setdefault(pc, set()).add(tok)
-        mixed = sorted(p for p, fm in hist.items() if len(fm) == 2)
-        if mixed:
+                token = json.load(f).get("null_token")
+        except FileNotFoundError:
+            if new:
+                return False
+            token = None
+        if token != NULL_SENTINEL:
             raise ValueError(
-                f"{schema}.{name}: cannot migrate null token — history "
-                "holds BOTH NULL-keyed (sentinel) and literal-'None' "
-                f"directories for partition column(s) {mixed}. Under "
-                "the legacy scheme the two shared one identity, so "
-                "which rows each historical commit meant is ambiguous; "
-                "rename or drop one form first instead of letting the "
-                "migration guess."
+                f"{schema}.{name}: unsupported table format — {p} is "
+                f"missing or names NULL-partition token {token!r}, not "
+                f"{NULL_SENTINEL!r}"
             )
-        part_map, _extra, _dvs = self._manifest(schema, name)
-        live_none = part_map.get("None")
-        if live_none is None:
-            # nothing live under the legacy token; the scheme flip is
-            # pure metadata.  Historical data may still have carried
-            # it → guard every pre-flip version.
-            guard = (
-                entries[-1]["version"] + 1
-                if any(hist.values())
-                else None
-            )
-            _stamp(guard)
-            return {
-                "migrated": True,
-                "rewritten_partitions": [],
-                "history_guard_version": guard,
-            }
-        pcol = live_none[1]
-        live_forms = {
-            t
-            for t in self._live_raw_tokens(schema, name, pcol)
-            if t in ("None", NULL_SENTINEL)
-        }
-        # build the read plan BEFORE stamping (it bakes legacy-token
-        # path resolution and filters); the rewrite commit itself is
-        # token-explicit, so the scheme flip lands after the commit
-        cur = self.read(spark, schema, name)
-        if live_forms == {NULL_SENTINEL}:
-            rows = cur.filter(F.col(pcol).isNull())
-            parts = ["None", NULL_SENTINEL]
-        else:
-            rows = cur.filter(F.col(pcol) == "None")
-            parts = ["None"]
-        self.overwrite_partitions(
-            rows, schema, name, pcol, partitions=parts,
-            extra_meta={"migration": "null_token_v2"},
-        )
-        guard = self.snapshots(schema, name)[-1]["version"]
-        _stamp(guard)
-        return {
-            "migrated": True,
-            "rewritten_partitions": parts,
-            "history_guard_version": guard,
-        }
-
-    def _migration_guard_version(
-        self, schema: str, name: str
-    ) -> int | None:
-        p = os.path.join(self._table_dir(schema, name), self.FORMAT_FILE)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f).get("migrated_at_version")
+        return True
 
     def _ensure_format(self, schema: str, name: str) -> None:
-        """Stamp the format file on a genuinely NEW table (no commits,
-        no format file yet) — called from every write entry point
-        BEFORE data is staged, so the token scheme is fixed for the
-        table's whole life.  Existing tables are never upgraded in
-        place: their committed log lines and directory names already
-        speak the legacy token."""
-        path = self._table_dir(schema, name)
-        p = os.path.join(path, self.FORMAT_FILE)
-        if os.path.exists(p):
+        """Stamp the format file on a NEW table (no commits, no format
+        file yet) — called from every write entry point BEFORE data is
+        staged, so the token is fixed for the table's whole life — and
+        refuse a table in any other format (`_check_format`)."""
+        if self._check_format(schema, name, new=True):
             return
+        path = self._table_dir(schema, name)
         with self._table_lock(path):
-            if os.path.exists(p) or self._raw_snapshots(schema, name):
+            new = not self._raw_snapshots(schema, name)
+            if self._check_format(schema, name, new):
                 return
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
+            p = os.path.join(path, self.FORMAT_FILE)
+            with open(p + ".tmp", "w") as f:
                 json.dump({"null_token": NULL_SENTINEL}, f)
-            os.replace(tmp, p)
+            os.replace(p + ".tmp", p)
 
     def _next_data_dir(self, schema: str, name: str) -> tuple[int, str]:
         """(base version, unique staging dir).  The dir name embeds a
@@ -1268,86 +1144,10 @@ class Lakehouse:
             t for f in entry["files"]
             if (t := _path_tokens(f["path"]).get(partition_col)) is not None
         }
-        # a NULL partition value writes the sentinel directory
-        # __HIVE_DEFAULT_PARTITION__.  On format-v2 tables (every
-        # table this code creates) the sentinel IS the canonical NULL
-        # token and a literal string 'None' is an ordinary value.
-        # LEGACY tables (no format file) keep the token 'None', which
-        # a literal string value 'None' SHARES — so the ambiguous mix
-        # is refused loudly instead of silently merging identities
-        # downstream, both within this write and (the cross-commit
-        # case) against the table's live directories.  Only the raw
-        # directory names tell the two forms apart: the caller's
-        # canonical tokens conflate them.
-        nt = self.null_token(schema, name)
-        if nt == "None":
-            self._guard_legacy_null_mix(
-                schema, name, partition_col,
-                {t for t in raw if t in ("None", NULL_SENTINEL)},
-            )
-        parts = {_canon_token(t, nt) for t in raw}
+        parts = {_canon_token(t) for t in raw}
         parts.update(str(p) for p in partitions or ())
         entry["partitions"] = sorted(parts)
         return entry
-
-    def _guard_legacy_null_mix(
-        self,
-        schema: str,
-        name: str,
-        partition_col: str,
-        incoming: set[str],
-    ) -> None:
-        """Refuse the NULL / literal-'None' identity mix on a LEGACY
-        (no `_format.json`) table, where both physical forms share the
-        canonical token 'None'.  `incoming` holds the RAW forms this
-        write carries (subset of {'None', NULL_SENTINEL}), read off
-        the staged directory names.  Raises on a same-commit
-        mix (both forms staged) and on a cross-commit mix (one form
-        staged while the table's live dirs hold the other)."""
-        if len(incoming) == 2:
-            raise ValueError(
-                f"{schema}.{name}: partition column "
-                f"{partition_col!r} mixes NULL and the literal "
-                "string 'None' — this legacy table's token "
-                "scheme gives both the same partition identity "
-                "('None'), so later deletes/rewrites would "
-                "conflate them. Rename the literal value (e.g. "
-                "map it to 'none' or a sentinel) before "
-                "partitioning on it."
-            )
-        if incoming:
-            other = (
-                NULL_SENTINEL if incoming == {"None"} else "None"
-            )
-            if other in self._live_raw_tokens(
-                schema, name, partition_col
-            ):
-                raise ValueError(
-                    f"{schema}.{name}: this write's partition "
-                    f"column {partition_col!r} carries "
-                    f"{'NULL' if other == 'None' else 'a literal string None'} "
-                    "while the table already holds "
-                    f"{'a literal string None' if other == 'None' else 'NULL-keyed'} "
-                    "rows — on this legacy table both forms "
-                    "share partition identity ('None'), so the "
-                    "cross-commit mix is refused the same way "
-                    "the same-commit mix is."
-                )
-
-    def _live_raw_tokens(
-        self, schema: str, name: str, pcol: str
-    ) -> set[str]:
-        """RAW `<pcol>=<token>` directory names of every live file —
-        the one vantage point where NULL (sentinel dir) and a literal
-        string 'None' are physically distinguishable.  Used only by the
-        legacy-table mix guard and the null-token migration (never on
-        the hot path)."""
-        return {
-            t
-            for sl in self._plan(schema, name).slices
-            for f in sl.files
-            if (t := _path_tokens(f["path"]).get(pcol)) is not None
-        }
 
     def _stage_full_write(
         self, df: DataFrame, schema: str, name: str, op: str, data_dir: str
@@ -1685,9 +1485,7 @@ class Lakehouse:
                     )
                 )
             )
-        in_affected = self._pvalue_match(
-            F.col(partition_col), affected, self.null_token(schema, name)
-        )
+        in_affected = self._pvalue_match(F.col(partition_col), affected)
         if validate_cross_partition:
             strays = (
                 current.filter(~in_affected)
@@ -1742,9 +1540,9 @@ class Lakehouse:
             matched = self._matching_positions(
                 spark, schema, name, condition, predicates
             )
-            if matched.limit(1).count() == 0:
-                return None
-            return self._stage_dv(schema, name, matched, None, data_dir)
+            return self._stage_dv(
+                schema, name, matched, None, data_dir, keep_empty=False
+            )
         current, partition_col = self._resolve_partitioning(
             self.read(spark, schema, name), schema, name, partition_col
         )
@@ -1755,10 +1553,7 @@ class Lakehouse:
         if not affected:
             return None
         survivors = current.filter(
-            self._pvalue_match(
-                F.col(partition_col), affected,
-                self.null_token(schema, name),
-            )
+            self._pvalue_match(F.col(partition_col), affected)
         ).filter(~F.coalesce(condition, F.lit(False)))
         return self._stage_overwrite_partitions(
             survivors, schema, name, partition_col, data_dir,
@@ -1800,12 +1595,10 @@ class Lakehouse:
                 f"columns {unknown}"
             )
         if mor:
-            if current.limit(1).count() == 0:
-                return None
             return self._stage_dv(
                 schema, name, current,
                 self._apply_set(current, F.lit(True), assignments),
-                data_dir,
+                data_dir, keep_empty=False,
             )
         current, partition_col = self._resolve_partitioning(
             current, schema, name, partition_col
@@ -1817,12 +1610,7 @@ class Lakehouse:
         if not affected:
             return None
         rewritten = self._apply_set(
-            current.filter(
-                self._pvalue_match(
-                    F.col(partition_col), affected,
-                    self.null_token(schema, name),
-                )
-            ),
+            current.filter(self._pvalue_match(F.col(partition_col), affected)),
             condition,
             assignments,
         )
@@ -1882,7 +1670,8 @@ class Lakehouse:
         matched: DataFrame,
         new_rows: DataFrame | None,
         data_dir: str,
-    ) -> dict:
+        keep_empty: bool = True,
+    ) -> dict | None:
         """The one deletion-vector writer.  `matched` (a positional
         read) names the rows to delete by (file path, row index) — a
         read with positions already excludes earlier vectors, so no
@@ -1890,7 +1679,15 @@ class Lakehouse:
         vector itself is the commit (`delete_dv`, one parquet at
         `data_dir`); with them, the vector goes to `<data_dir>-dv` and
         `new_rows` are appended at `data_dir`, both on ONE `update_mor`
-        entry — the atomic point of a merge-on-read MERGE or UPDATE."""
+        entry — the atomic point of a merge-on-read MERGE or UPDATE.
+
+        The vector is written first; when it names no row and not
+        `keep_empty` (a DELETE or UPDATE that matched nothing, whose
+        `new_rows` derive from `matched`), it is removed again and
+        None returned.  The test is the vector's footer row count, so a
+        no-match costs no extra Spark job."""
+        from .skipping import collect_file_stats
+
         path = self._table_dir(schema, name)
         dv_dir = data_dir if new_rows is None else data_dir + "-dv"
         if new_rows is not None:
@@ -1900,22 +1697,23 @@ class Lakehouse:
             F.col("__dv_file").alias("file_path"),
             F.col("__dv_pos").alias("row_index"),
         ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
+        dv = collect_file_stats(dv_dir, max_columns=0)
+        if not keep_empty and not any(f["rows"] for f in dv["files"]):
+            shutil.rmtree(dv_dir)
+            return None
         if new_rows is None:
-            return self._attach_stats(
-                dict(op="delete_dv", data_dir=os.path.relpath(dv_dir, path)),
-                dv_dir,
+            return dict(
+                op="delete_dv", data_dir=os.path.relpath(dv_dir, path), **dv
             )
         self._to_physical(new_rows, schema, name).write.mode(
             "overwrite"
         ).parquet(data_dir)
-        from .skipping import collect_file_stats
-
         return self._attach_stats(
             dict(
                 op="update_mor",
                 data_dir=os.path.relpath(data_dir, path),
                 dv_dir=os.path.relpath(dv_dir, path),
-                dv_files=collect_file_stats(dv_dir, max_columns=0)["files"],
+                dv_files=dv["files"],
             ),
             data_dir,
             schema,
@@ -1927,12 +1725,8 @@ class Lakehouse:
     ) -> list[str]:
         """The canonical tokens of the partitions `df`'s rows fall in
         (one distinct scan)."""
-        nt = self.null_token(schema, name)
         return sorted(
-            {
-                _token_of(r[0], nt)
-                for r in df.select(pcol).distinct().collect()
-            }
+            {_token_of(r[0]) for r in df.select(pcol).distinct().collect()}
         )
 
     def _affected_partitions(
@@ -1991,7 +1785,6 @@ class Lakehouse:
             spark, schema, name, predicates, with_positions=True
         )
         pfx = f"{os.sep}{pcol}="
-        nt = self.null_token(schema, name)
         toks: set[str] = set()
         for r in probe.select("__dv_file").distinct().collect():
             f = r[0]
@@ -2007,7 +1800,7 @@ class Lakehouse:
             # token — the form _pvalue_match and the commit log speak.
             # Anything less and a NULL/escaped partition records a
             # token no reader matches, silently skipping the partition.
-            toks.add(_canon_token(unquote(seg), nt))
+            toks.add(_canon_token(unquote(seg)))
         return sorted(toks)
 
     def overwrite(
@@ -2249,10 +2042,7 @@ class Lakehouse:
                     if partition_survives(spec, preds, v)
                 }
             df = df.filter(
-                self._pvalue_match(
-                    F.col(partition_col), sorted(values),
-                    self.null_token(schema, name),
-                )
+                self._pvalue_match(F.col(partition_col), sorted(values))
             )
         if target_file_bytes is not None:
             import math
@@ -2463,8 +2253,6 @@ class Lakehouse:
           (MVCC reads are lock-free).  It is reclaimed only once the
           first commit that made it unreachable is `grace_seconds`
           old."""
-        import shutil
-
         data_root = os.path.join(self._table_dir(schema, name), "_data")
         if not os.path.isdir(data_root):
             return {"dirs": [], "bytes": 0}
@@ -2541,16 +2329,6 @@ class Lakehouse:
         checkpoint ≤ `version` when one exists, replaying only the log
         suffix after it.  `entries` is the caller's already-parsed
         log (`snapshots()`), if it has one."""
-        if version is not None:
-            mg = self._migration_guard_version(schema, name)
-            if mg is not None and version < mg:
-                raise HistoryUnavailableError(
-                    f"{schema}.{name}: version {version} predates the "
-                    f"null-token migration (commit {mg}); its log "
-                    "lines speak the legacy 'None' identity and cannot "
-                    "be re-read under the v2 scheme without guessing "
-                    "which physical form they meant"
-                )
         if entries is None:
             entries = self.snapshots(schema, name)
         path = self._table_dir(schema, name)
@@ -2785,22 +2563,17 @@ class Lakehouse:
         return out if keep_positions else out.drop(*self._POS_COLS)
 
     @staticmethod
-    def _pvalue_match(c, values, null_token: str = "None") -> "F.Column":
+    def _pvalue_match(c, values) -> "F.Column":
         """Membership test of a partition COLUMN against the catalog's
-        canonical string tokens.  The null partition's token is the
-        table's `null_token` ('None' on legacy tables, the hive
-        sentinel on format-v2 tables — shared by the explicit-
-        `partitions` path and the directory-derived path); plain
-        isin() is NULL-blind (NULL isin → NULL, silently dropped/kept
-        depending on polarity), so the null token must match NULL rows
-        explicitly.  On legacy tables a LITERAL string value 'None'
-        shares partition identity with NULL (documented, write-guarded);
-        on format-v2 tables the two are distinct — only a literal
+        canonical string tokens.  Plain isin() is NULL-blind (NULL isin
+        → NULL, silently dropped/kept depending on polarity), so the
+        NULL token `NULL_SENTINEL` matches NULL rows explicitly; a
+        literal string 'None' is an ordinary value.  Only a literal
         string equal to the sentinel itself would collide (hive's own
-        universal ambiguity, undetectable from directory names)."""
+        ambiguity, undetectable from directory names)."""
         vals = list(values)
         cond = c.cast("string").isin(vals)
-        if null_token in vals:
+        if NULL_SENTINEL in vals:
             cond = cond | c.isNull()
         return F.coalesce(cond, F.lit(False))
 
@@ -2811,13 +2584,12 @@ class Lakehouse:
         """Drop rows of superseded partitions from an additive-dir
         frame (see `_replay`: a partition overwrite after an append
         supersedes the append's same-partition rows).  NULL-safe both
-        ways: a NULL-keyed row is excluded iff the null token 'None'
-        was overwritten (otherwise it survives — `_pvalue_match` owns
-        that rule); a frame missing the column entirely
-        (pre-evolution append) passes through — unless it's a
+        ways: a NULL-keyed row is excluded iff the NULL partition
+        (`NULL_SENTINEL`) was overwritten (otherwise it survives —
+        `_pvalue_match` owns that rule); a frame missing the column
+        entirely (pre-evolution append) passes through — unless it's a
         hidden-spec column, which is re-derived from its source."""
         spec = self.partition_spec(schema, name)
-        nt = self.null_token(schema, name)
         for pcol, vals in excl.items():
             if not vals:
                 continue
@@ -2831,7 +2603,7 @@ class Lakehouse:
                 c = spec.derive(f)
             else:
                 continue
-            f = f.filter(~self._pvalue_match(c, vals, nt))
+            f = f.filter(~self._pvalue_match(c, vals))
         return f
 
     def _plan(
@@ -2867,12 +2639,15 @@ class Lakehouse:
         whole and never pruned); one without a logged schema lets
         Spark infer it.  `entries` is the caller's already-parsed log
         (`snapshots()`), if it has one; the plan carries the log it
-        was made from, so one read parses the log once."""
+        was made from, so one read parses the log once.  A table with
+        commits has its format checked once per plan (`_check_format`)."""
         from .bloom import bloom_survives
         from .skipping import collect_file_stats, file_survives
 
         if entries is None:
             entries = self.snapshots(schema, name)
+        if entries:
+            self._check_format(schema, name, new=False)
         part_map, extra, dvs = self._readable_manifest(
             schema, name, version, entries
         )
@@ -2898,7 +2673,6 @@ class Lakehouse:
                 files = [{**f, "bytes": size.get(f["path"], 0)} for f in files]
             return files, sch
 
-        nt = self.null_token(schema, name)
         spec = self.partition_spec(schema, name)
         pcols = sorted({pcol for _d, pcol in part_map.values()})
         pcol_any = next(iter(pcols), None)
@@ -2939,7 +2713,7 @@ class Lakehouse:
             files, sch = files_of(d)
             toks = {
                 f["path"]: {
-                    pc: _canon_token(raw, nt)
+                    pc: _canon_token(raw)
                     for pc, raw in _path_tokens(f["path"]).items()
                 }
                 for f in files
@@ -2997,12 +2771,7 @@ class Lakehouse:
             reader = reader.schema(StructType.fromJson(sl.schema))
         df = reader.parquet(*sl.roots)
         if sl.keep is not None:
-            df = df.filter(
-                self._pvalue_match(
-                    F.col(sl.keep[0]), sl.keep[1],
-                    self.null_token(schema, name),
-                )
-            )
+            df = df.filter(self._pvalue_match(F.col(sl.keep[0]), sl.keep[1]))
         if sl.excl:
             df = self._exclusion_filter(df, sl.excl, schema, name)
         return df
@@ -3559,7 +3328,6 @@ class Lakehouse:
         regardless).
         """
         plan = self._plan(schema, name)
-        nt = self.null_token(schema, name)
         pcol = next(iter(plan.partition_cols), None)
         detail: dict[str, dict] = {}
         unattributed_dirs = 0
@@ -3572,7 +3340,7 @@ class Lakehouse:
                 if raw is None:
                     key, stray = "<unpartitioned>", True
                 else:
-                    key = _canon_token(raw, nt)
+                    key = _canon_token(raw)
                 row = detail.setdefault(
                     key, {"files": 0, "small": 0, "bytes": 0}
                 )
@@ -4035,7 +3803,6 @@ def temp_lakehouse(schema: str = "gold", prefix: str = "umdl_tmp_lake_"):
     deleted on exit, so an un-pinned lazy plan would read vanished
     files.  If the process dies inside the block, the OS tempdir
     reaper owns the leak (same story as any mkdtemp)."""
-    import shutil
     import tempfile
 
     root = tempfile.mkdtemp(prefix=prefix)
@@ -4147,7 +3914,6 @@ def attach_or_save_bucketed(
     """
     if attach_bucketed(spark, df, table_name, bucket_col, n_buckets, sort_col):
         return
-    import shutil
     from urllib.parse import urlparse
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path

@@ -87,7 +87,10 @@ def advance_watermark(
 ) -> None:
     """Move the table's watermark `key` to `version` with a
     metadata-only `op` log line (no data written) — for a window whose
-    changes left the derived table as it was."""
+    changes left the derived table as it was.  The line may be the
+    table's first commit (a change feed whose source held no rows), so
+    the table's format is stamped first, as every write does."""
+    lake._ensure_format(schema, name)
     lake._log_snapshot(lake._table_dir(schema, name), op, **{key: version})
 
 
@@ -164,12 +167,6 @@ class MaterializedView:
             r[0] for r in rows.select(self.partition_col).distinct().collect()
         ]
 
-    def _tokens(self, table: tuple[str, str], values: list) -> list[str]:
-        """`partition_col` values as `table`'s canonical partition
-        tokens (a NULL value is the table's null token, not 'None')."""
-        nt = self.lake.null_token(*table)
-        return sorted({_token_of(v, nt) for v in values})
-
     def _aggregate(self, rows: DataFrame) -> DataFrame:
         return rows.groupBy(*self.group_by).agg(
             *[F.expr(expr).alias(name) for name, expr in self.aggs.items()]
@@ -214,16 +211,15 @@ class MaterializedView:
             # (a compaction): advance the watermark, touch no data
             advance_watermark(self.lake, *self.view, current)
             return {"strategy": "advance", "from": last, "to": current}
+        # the affected partitions' canonical tokens, shared by the base
+        # read and the view write (a NULL value is the NULL sentinel)
+        parts = sorted({_token_of(v) for v in values})
         try:
-            rows = self.lake.read(
-                spark, *self.base,
-                partition_values=self._tokens(self.base, values),
-            )
+            rows = self.lake.read(spark, *self.base, partition_values=parts)
         except FileNotFoundError:
             # the base has no live rows: every affected partition
             # empties (an empty frame with the base's columns)
             rows = cdc.filter(F.lit(False))
-        parts = self._tokens(self.view, values)
         self.lake.overwrite_partitions(
             self._aggregate(rows), *self.view,
             partition_col=self.partition_col,
