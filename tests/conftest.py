@@ -53,6 +53,17 @@ def spark(tmp_path_factory):
     spark.stop()
 
 
+def jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

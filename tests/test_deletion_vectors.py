@@ -224,6 +224,30 @@ def test_mor_merge_matches_cow_merge(spark, lake, tmp_path):
     assert lake._manifest("silver", "mor")[2] == []
 
 
+def test_mor_merge_of_pure_inserts_commits_no_vector(spark, lake):
+    """A merge-on-read MERGE whose keys match no live row is a pure
+    insert: it commits the rows on one `update_mor` line without a
+    deletion vector, so later reads pay no vector anti-join."""
+    _seed(spark, lake)
+    inserts = spark.range(5000, 5010).select(
+        F.col("id"), F.lit("new").alias("p"), (F.col("id") * 2).alias("v")
+    )
+    lake.merge_into(
+        spark, "silver", "t", inserts, key="id", mode="merge_on_read"
+    )
+    entry = lake.snapshots("silver", "t")[-1]
+    assert entry["operation"] == "update_mor"
+    assert "dv_dir" not in entry
+    assert lake.describe_detail("silver", "t")["num_deletion_vectors"] == 0
+    df = lake.read(spark, "silver", "t")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan
+    assert df.count() == 1010
+    assert sorted(
+        r["id"] for r in df.filter(F.col("p") == "new").collect()
+    ) == list(range(5000, 5010))
+
+
 def test_dv_survives_table_relocation(spark, tmp_path):
     """Vectors store table-RELATIVE file paths: moving the whole lake
     tree (storage migration) must not resurrect deleted rows."""

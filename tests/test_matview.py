@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from tests.conftest import jobs_in_group
 from urban_mobility_data_lakehouse_spark.sources.lakehouse import Lakehouse
 from urban_mobility_data_lakehouse_spark.sources.matview import (
     MaterializedView,
@@ -410,17 +411,6 @@ def test_bad_definitions_rejected(lake):
         )
 
 
-def _jobs_in_group(spark, group, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_rebuild_over_existing_view_aggregates_base_once(spark, lake):
     """A full rebuild over a view that already holds partitions runs
     no more Spark jobs than a fresh build of the same base: the view's
@@ -440,7 +430,7 @@ def test_rebuild_over_existing_view_aggregates_base_once(spark, lake):
     # the first read of the compacted dir infers its schema (one job,
     # memoized after): pay it here, so neither build counts it
     lake.read(spark, "silver", "t").count()
-    out, rebuild_jobs = _jobs_in_group(
+    out, rebuild_jobs = jobs_in_group(
         spark, "mv-rebuild", lambda: mv.refresh(spark)
     )
     assert out["strategy"] == "full"
@@ -452,9 +442,165 @@ def test_rebuild_over_existing_view_aggregates_base_once(spark, lake):
         aggs=AGGS,
         partition_col="day",
     )
-    out, fresh_jobs = _jobs_in_group(
+    out, fresh_jobs = jobs_in_group(
         spark, "mv-fresh", lambda: fresh.refresh(spark)
     )
     assert out["strategy"] == "full"
     assert 0 < rebuild_jobs <= fresh_jobs
+    assert _got(spark, mv) == _expect(spark, lake)
+
+
+def _spy_read_changes(monkeypatch):
+    """Record every `Lakehouse.read_changes` call (the fallback diff)."""
+    calls = []
+    real = Lakehouse.read_changes
+
+    def spy(self, *args, **kwargs):
+        calls.append(args[1:3])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(Lakehouse, "read_changes", spy)
+    return calls
+
+
+@pytest.mark.parametrize("via", ["direct", "transaction"])
+def test_one_day_overwrite_refreshes_from_the_log(
+    spark, lake, monkeypatch, via
+):
+    """A window of one partition overwrite names its day in the log
+    entry: the refresh runs no change-feed diff, and its only Spark
+    jobs are the recompute's read, aggregate and write (the diff cost
+    four more)."""
+    lake.overwrite_partitions(_rows(spark, 0, 300), "silver", "t", "day")
+    mv = _mv(lake)
+    mv.refresh(spark)
+    upsert = _rows(spark, 1000, 1060).filter(F.col("day") == "1")
+    if via == "direct":
+        lake.overwrite_partitions(upsert, "silver", "t", "day")
+    else:
+        with lake.transaction() as txn:
+            txn.overwrite_partitions(upsert, "silver", "t", "day")
+    calls = _spy_read_changes(monkeypatch)
+    out, jobs = jobs_in_group(
+        spark, f"mv-log-{via}", lambda: mv.refresh(spark)
+    )
+    assert calls == []
+    assert out["strategy"] == "incremental"
+    assert out["affected_partitions"] == ["1"]
+    assert 0 < jobs <= 3
+    assert _got(spark, mv) == _expect(spark, lake)
+
+
+def _null_day(spark, lo, hi):
+    return _rows(spark, lo, hi).withColumn(
+        "day", F.when(F.col("day") != "0", F.col("day"))
+    )
+
+
+@pytest.mark.parametrize(
+    "window", ["overwrite_then_compact", "cow_delete_empties", "null_day"]
+)
+def test_log_named_window_matches_recompute(spark, lake, monkeypatch, window):
+    """Windows of partition overwrites and compactions refresh from the
+    log alone and still equal a from-scratch aggregate: a compaction
+    (full or partition-scoped) names no partition, a copy-on-write
+    DELETE that empties a day names it, and a NULL day is the NULL
+    partition token."""
+    from urban_mobility_data_lakehouse_spark.sources.lakehouse import (
+        NULL_SENTINEL,
+    )
+
+    base = _null_day if window == "null_day" else _rows
+    lake.overwrite_partitions(base(spark, 0, 300), "silver", "t", "day")
+    mv = _mv(lake)
+    mv.refresh(spark)
+    if window == "overwrite_then_compact":
+        lake.overwrite_partitions(
+            _rows(spark, 1000, 1030).filter(F.col("day") == "1"),
+            "silver", "t", "day",
+        )
+        lake.compact(
+            spark, "silver", "t", partition_col="day", partitions=["2"],
+            vacuum=False,
+        )
+        lake.compact(spark, "silver", "t", vacuum=False)
+        want = ["1"]
+    elif window == "cow_delete_empties":
+        lake.delete_where(
+            spark, "silver", "t", F.col("day") == "2", partition_col="day"
+        )
+        want = ["2"]
+    else:
+        lake.overwrite_partitions(
+            _null_day(spark, 600, 630).filter(F.col("day").isNull()),
+            "silver", "t", "day",
+        )
+        want = [NULL_SENTINEL]
+    calls = _spy_read_changes(monkeypatch)
+    out = mv.refresh(spark)
+    assert calls == []
+    assert out["strategy"] == "incremental"
+    assert out["affected_partitions"] == want
+    assert _got(spark, mv) == _expect(spark, lake)
+    if window == "cow_delete_empties":
+        assert not any(r[0] == "2" for r in _got(spark, mv))
+
+
+def test_compaction_only_window_advances_from_the_log(
+    spark, lake, monkeypatch
+):
+    lake.overwrite_partitions(_rows(spark, 0, 300), "silver", "t", "day")
+    mv = _mv(lake)
+    mv.refresh(spark)
+    lake.compact(
+        spark, "silver", "t", partition_col="day", partitions=["0"],
+        vacuum=False,
+    )
+    lake.compact(spark, "silver", "t", partition_col="day", vacuum=False)
+    calls = _spy_read_changes(monkeypatch)
+    assert mv.refresh(spark)["strategy"] == "advance"
+    assert calls == []
+    assert _got(spark, mv) == _expect(spark, lake)
+
+
+@pytest.mark.parametrize(
+    "op", ["append", "delete_dv", "update_mor", "restore", "overwrite"]
+)
+def test_windows_the_log_does_not_name_fall_back_to_the_diff(
+    spark, lake, monkeypatch, op
+):
+    """A commit that logs no partitions for the view's partition column
+    makes the refresh diff the whole window, which still equals a
+    from-scratch aggregate."""
+    lake.overwrite_partitions(_rows(spark, 0, 300), "silver", "t", "day")
+    mv = _mv(lake)
+    mv.refresh(spark)
+    # a logged-partition commit in the same window is diffed too
+    lake.overwrite_partitions(
+        _rows(spark, 1000, 1030).filter(F.col("day") == "0"),
+        "silver", "t", "day",
+    )
+    if op == "append":
+        lake.append(_rows(spark, 2000, 2010), "silver", "t")
+    elif op == "delete_dv":
+        lake.delete_where(
+            spark, "silver", "t", F.col("id") < 20, mode="merge_on_read"
+        )
+    elif op == "update_mor":
+        lake.update_where(
+            spark, "silver", "t", F.col("id") < 20, {"v": F.lit(-1.0)},
+            mode="merge_on_read",
+        )
+    elif op == "restore":
+        lake.restore("silver", "t", 0)
+    else:
+        lake.overwrite(_rows(spark, 3000, 3090), "silver", "t")
+    assert lake.snapshots("silver", "t")[-1]["operation"] == op
+    calls = _spy_read_changes(monkeypatch)
+    out = mv.refresh(spark)
+    assert len(calls) == 1
+    # the restore undoes the window's overwrite: no row changed
+    assert out["strategy"] == (
+        "advance" if op == "restore" else "incremental"
+    )
     assert _got(spark, mv) == _expect(spark, lake)

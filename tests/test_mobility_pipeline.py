@@ -8,6 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from tests.conftest import jobs_in_group
 from urban_mobility_data_lakehouse_spark.pipeline.fixtures import (
     DATES,
     N_ZONES,
@@ -417,3 +418,29 @@ def test_gold_refresh_rebuilds_after_vacuum(pipeline):
         p, "gold", "daily_zone_demand"
     ))
     assert p.refresh_gold_daily_demand()["refreshed_days"] == 0.0
+
+
+def test_incremental_batch_job_budget(pipeline, tmp_path):
+    """One incremental daily batch — bronze day ingest, silver day,
+    audit, gold refresh — runs at most 13 Spark jobs, counted by job
+    group: the gold refresh takes its changed day from the silver
+    commit's log entry (no change-feed diff), and the audit's day
+    count needs no distinct stage."""
+    p = pipeline
+    trips_dir = write_fixtures(str(tmp_path / "sources"))["trips_dir"]
+    p.refresh_gold_daily_demand()  # bring gold current
+    day = DATES[1:2]
+
+    def batch():
+        p.ingest_bronze_trips(trips_dir, day)
+        p.process_days(day)
+        audit = p.audit_batch(day)
+        return audit, p.refresh_gold_daily_demand()
+
+    (audit, refresh), jobs = jobs_in_group(p.spark, "daily-batch", batch)
+    assert audit["batch_days_loaded"] == len(DATES)
+    assert refresh["refreshed_days"] == 1.0
+    assert jobs <= 13
+    assert _demand_rows(p, "gold", "daily_zone_demand") == _demand_rows(
+        p, "silver", "fact_mobility"
+    )

@@ -351,7 +351,10 @@ class MobilityPipeline:
 
     def audit_batch(self, dates: list[str]) -> dict[str, float]:
         """Batch audit (:584-634): rows, Σ trips, days, bad-row %,
-        logged as ONE quality-log commit."""
+        logged as ONE quality-log commit.  The day count is the size of
+        the collected day set (NULL skipped, like COUNT(DISTINCT)): one
+        aggregation stage, where a distinct count adds a second
+        exchange.  The set holds one entry per loaded day."""
         s, lake = self.spark, self.lake
         fact = lake.read(s, "silver", "fact_mobility")
         row = fact.agg(
@@ -359,7 +362,7 @@ class MobilityPipeline:
             F.sum(F.col("trips").cast("decimal(25,6)"))
             .cast("double")
             .alias("total_trips"),
-            F.countDistinct("partition_date").alias("days"),
+            F.size(F.collect_set("partition_date")).alias("days"),
             F.sum(
                 (
                     F.col("origin_zone_id").isNull()
@@ -382,11 +385,13 @@ class MobilityPipeline:
 
     def refresh_gold_daily_demand(self) -> dict[str, float]:
         """gold.daily_zone_demand = per-(day, origin zone) trip totals,
-        partitioned by day, kept current from the silver fact's change
-        feed by a `MaterializedView` (beyond reference — the reference
+        partitioned by day, kept current from the silver fact's commit
+        log by a `MaterializedView` (beyond reference — the reference
         rebuilds gold tables from the full fact every run): a daily
-        batch recomputes only the days it changed, and the sync cursor
-        commits with the gold rows it describes.
+        batch recomputes only the days it changed, named by the
+        `partitions` its silver commit logged (no change-feed diff;
+        windows whose commits name no days fall back to one), and the
+        sync cursor commits with the gold rows it describes.
 
         Returns the synced silver version and the days rewritten: -1
         for a full rebuild (first build, a gold table without a

@@ -1287,7 +1287,8 @@ class Lakehouse:
         cost O(|updates|), no partition rewritten, and a row may move
         partitions freely (its old position is deleted wherever it
         lives, so the cross-partition hazard doesn't exist).  Readers
-        pay the DV anti-join until `compact()` materializes.
+        pay the DV anti-join until `compact()` materializes; a merge
+        that matches no live row (pure inserts) commits no vector.
         """
         _check_mode("merge_into", mode)
         base, data_dir = self._next_data_dir(schema, name)
@@ -1541,7 +1542,8 @@ class Lakehouse:
                 spark, schema, name, condition, predicates
             )
             return self._stage_dv(
-                schema, name, matched, None, data_dir, keep_empty=False
+                schema, name, matched, None, data_dir,
+                rows_without_match=False,
             )
         current, partition_col = self._resolve_partitioning(
             self.read(spark, schema, name), schema, name, partition_col
@@ -1598,7 +1600,7 @@ class Lakehouse:
             return self._stage_dv(
                 schema, name, current,
                 self._apply_set(current, F.lit(True), assignments),
-                data_dir, keep_empty=False,
+                data_dir, rows_without_match=False,
             )
         current, partition_col = self._resolve_partitioning(
             current, schema, name, partition_col
@@ -1670,7 +1672,7 @@ class Lakehouse:
         matched: DataFrame,
         new_rows: DataFrame | None,
         data_dir: str,
-        keep_empty: bool = True,
+        rows_without_match: bool = True,
     ) -> dict | None:
         """The one deletion-vector writer.  `matched` (a positional
         read) names the rows to delete by (file path, row index) — a
@@ -1681,11 +1683,13 @@ class Lakehouse:
         `new_rows` are appended at `data_dir`, both on ONE `update_mor`
         entry — the atomic point of a merge-on-read MERGE or UPDATE.
 
-        The vector is written first; when it names no row and not
-        `keep_empty` (a DELETE or UPDATE that matched nothing, whose
-        `new_rows` derive from `matched`), it is removed again and
-        None returned.  The test is the vector's footer row count, so a
-        no-match costs no extra Spark job."""
+        The vector is written first; when it names no row it is
+        removed again, so no read pays a vector that deletes nothing.
+        `new_rows` then still commit, on an `update_mor` entry without
+        a vector, if `rows_without_match` (a MERGE's inserts); a
+        DELETE or UPDATE that matched nothing (its `new_rows` derive
+        from `matched`) returns None.  The test is the vector's footer
+        row count, so a no-match costs no extra Spark job."""
         from .skipping import collect_file_stats
 
         path = self._table_dir(schema, name)
@@ -1698,27 +1702,26 @@ class Lakehouse:
             F.col("__dv_pos").alias("row_index"),
         ).coalesce(1).write.mode("overwrite").parquet(dv_dir)
         dv = collect_file_stats(dv_dir, max_columns=0)
-        if not keep_empty and not any(f["rows"] for f in dv["files"]):
-            shutil.rmtree(dv_dir)
-            return None
-        if new_rows is None:
-            return dict(
-                op="delete_dv", data_dir=os.path.relpath(dv_dir, path), **dv
+        entry = dict(
+            op="update_mor", data_dir=os.path.relpath(data_dir, path)
+        )
+        if any(f["rows"] for f in dv["files"]):
+            if new_rows is None:
+                return dict(
+                    op="delete_dv", data_dir=os.path.relpath(dv_dir, path),
+                    **dv,
+                )
+            entry.update(
+                dv_dir=os.path.relpath(dv_dir, path), dv_files=dv["files"]
             )
+        else:
+            shutil.rmtree(dv_dir)
+            if new_rows is None or not rows_without_match:
+                return None
         self._to_physical(new_rows, schema, name).write.mode(
             "overwrite"
         ).parquet(data_dir)
-        return self._attach_stats(
-            dict(
-                op="update_mor",
-                data_dir=os.path.relpath(data_dir, path),
-                dv_dir=os.path.relpath(dv_dir, path),
-                dv_files=dv["files"],
-            ),
-            data_dir,
-            schema,
-            name,
-        )
+        return self._attach_stats(entry, data_dir, schema, name)
 
     def _distinct_tokens(
         self, df: DataFrame, pcol: str, schema: str, name: str
@@ -2455,7 +2458,8 @@ class Lakehouse:
                 # (append semantics) + a vector deleting their old
                 # versions
                 extra[d] = {}
-                dvs.append(os.path.join(path, e["dv_dir"]))
+                if e.get("dv_dir") is not None:  # None: nothing matched
+                    dvs.append(os.path.join(path, e["dv_dir"]))
             elif op in ("overwrite_partitions", "compact_partitioned"):
                 if op == "compact_partitioned":
                     part_map.clear()
@@ -2818,6 +2822,34 @@ class Lakehouse:
             self._union_frames(
                 spark, frames, schema, name, version, plan.dvs,
                 with_positions, plan.entries,
+            )
+        )
+
+    def _empty_frame(
+        self, spark: SparkSession, schema: str, name: str,
+        entries: list[dict],
+    ) -> DataFrame:
+        """The table's logical columns as an empty frame, for a table
+        whose live rows are all gone (where `read` has no slice to
+        read): typed from the newest logged commit-dir read schema in
+        `entries` (the table's parsed log), so no file is opened and
+        no Spark job runs."""
+        from pyspark.sql.types import StructType
+
+        logged = next(
+            (
+                e["schema"] for e in reversed(entries)
+                # a delete_dv entry logs its vector's schema
+                if e.get("schema") and e["operation"] != "delete_dv"
+            ),
+            None,
+        )
+        if logged is None:
+            raise FileNotFoundError(f"{schema}.{name} logs no schema")
+        frame = spark.createDataFrame([], StructType.fromJson(logged))
+        return self._drop_hidden(
+            self._union_frames(
+                spark, [frame], schema, name, None, [], False, entries
             )
         )
 

@@ -6,8 +6,9 @@ recompute each `CREATE OR REPLACE TABLE gold.* AS SELECT … GROUP BY`).
 That is fine at GB scale and catastrophic at 100 TB: a one-day upsert
 should never cost a full-table aggregation.  This module is the
 Spark-first replacement — a grouped-aggregate Gold table, partitioned
-by one of its group keys, maintained from the base table's change-data
-feed with work proportional to the CHANGED PARTITIONS, never the table:
+by one of its group keys, maintained from the base table's commit log
+and change-data feed with work proportional to the CHANGED PARTITIONS,
+never the table:
 
     mv = MaterializedView(
         lake, base=("silver", "trips"), view=("gold", "daily_totals"),
@@ -17,22 +18,34 @@ feed with work proportional to the CHANGED PARTITIONS, never the table:
     )
     mv.refresh(spark)        # full build the first time
     …mutate silver.trips…
-    mv.refresh(spark)        # reads CDC, recomputes only touched days
+    mv.refresh(spark)        # recomputes only the touched days
 
 Refresh algorithm (the affected-partition recompute strategy):
 
-1. `read_changes(last_applied, current)` yields every inserted/deleted
-   row since the last refresh — by construction only slices whose
-   manifest mapping changed are diffed, so a daily upsert diffs one
-   partition.
-2. The distinct `partition_col` values of those rows are the AFFECTED
-   PARTITIONS — bounded by the change volume, not the table.
+1. The base's log entries in (last_applied, current] name the
+   AFFECTED PARTITIONS when every entry is a partition overwrite on
+   `partition_col` (`overwrite_partitions`, direct or in a
+   transaction, and the copy-on-write MERGE/DELETE/UPDATE, which
+   commit as one) or a compaction (an entry logging `files_before`:
+   rows unchanged, nothing affected).  Those overwrites log the
+   canonical tokens of the partitions they replaced, so the set is
+   read off the log: no change feed, no Spark job.
+2. Any other entry in the window (a flat append, a full overwrite, a
+   deletion vector, a restore, column DDL, another partition column)
+   does not name its partitions: the window's row changes are read
+   with `read_changes(last_applied, current)` — only slices whose
+   manifest mapping changed are diffed — and their distinct
+   `partition_col` values are the affected partitions.  Either way
+   the set is bounded by the change volume, not the table.  A window
+   whose files vacuum reclaimed rebuilds the view in full on either
+   path.
 3. Each affected partition is re-aggregated whole from the CURRENT
    base state, read partition-pruned.  `partition_col` is a group key,
    so every group lies in one partition and the recompute is exact
    under inserts, updates AND deletes — no restriction to
    self-maintainable (algebraic) aggregates, and a group whose rows all
-   vanished disappears from the view.
+   vanished disappears from the view.  A partition a write replaced
+   with identical rows (a re-run day) recomputes to the same groups.
 4. The affected partitions are replaced in ONE commit whose log line
    records `mv_base_version` — the watermark is atomic with the data
    it reflects, so a crashed refresh either fully happened or fully
@@ -147,25 +160,48 @@ class MaterializedView:
 
     # -- watermarks --------------------------------------------------------
 
-    def _base_version(self) -> int:
-        snaps = self.lake.snapshots(*self.base)
-        if not snaps:
-            raise FileNotFoundError(
-                f"base table {self.base[0]}.{self.base[1]} has no commits"
-            )
-        return snaps[-1]["version"]
-
     def last_applied(self) -> int | None:
         """Newest base version reflected in the view (from the view's
         commit log), or None if the view has never been built."""
         return watermark(self.lake, *self.view)
 
-    # -- aggregation (shared by full build and incremental recompute) ------
+    # -- affected partitions -----------------------------------------------
 
-    def _values(self, rows: DataFrame) -> list:
-        return [
-            r[0] for r in rows.select(self.partition_col).distinct().collect()
-        ]
+    def _logged_partitions(
+        self, entries: list[dict], last: int, current: int
+    ) -> list[str] | None:
+        """The canonical tokens of the partitions the base's commits in
+        (`last`, `current`] replaced, read off their log entries, or
+        None when some entry does not name them (the caller diffs the
+        window instead).  A compaction — keyed on `files_before`,
+        which a partition-scoped one logs on an `overwrite_partitions`
+        line too — rewrites no row and names none."""
+        parts: set[str] = set()
+        for e in entries:
+            if not last < e["version"] <= current or "files_before" in e:
+                continue
+            if (
+                e["operation"] != "overwrite_partitions"
+                or e.get("partition_col") != self.partition_col
+            ):
+                return None
+            parts.update(e["partitions"])
+        return sorted(parts)
+
+    def _diffed_partitions(
+        self, spark: SparkSession, last: int, current: int
+    ) -> list[str]:
+        """The distinct `partition_col` tokens of the window's row
+        changes (`read_window`): one change-feed read and one collect."""
+        cdc = read_window(self.lake, spark, self.base, last, current)
+        if cdc is None:
+            return []
+        return sorted({
+            _token_of(r[0])
+            for r in cdc.select(self.partition_col).distinct().collect()
+        })
+
+    # -- aggregation (shared by full build and incremental recompute) ------
 
     def _aggregate(self, rows: DataFrame) -> DataFrame:
         return rows.groupBy(*self.group_by).agg(
@@ -179,10 +215,12 @@ class MaterializedView:
 
     def refresh(self, spark: SparkSession) -> dict:
         """Bring the view up to the base table's current version by
-        recomputing the partitions the CDC window touched (see the
-        module docstring).  Returns a summary dict: strategy ('noop' |
-        'full' | 'incremental' | 'advance'), the applied version range,
-        and the rewritten partitions for incremental refreshes."""
+        recomputing the partitions the window's commits touched, named
+        by their log entries or, failing that, by the change feed (see
+        the module docstring).  Returns a summary dict: strategy
+        ('noop' | 'full' | 'incremental' | 'advance'), the applied
+        version range, and the rewritten partitions for incremental
+        refreshes."""
         for attempt in range(self.max_retries + 1):
             try:
                 return self._refresh_once(spark)
@@ -192,34 +230,44 @@ class MaterializedView:
         raise AssertionError("unreachable")
 
     def _refresh_once(self, spark: SparkSession) -> dict:
-        current = self._base_version()
+        entries = self.lake.snapshots(*self.base)
+        if not entries:
+            raise FileNotFoundError(
+                f"base table {self.base[0]}.{self.base[1]} has no commits"
+            )
+        current = entries[-1]["version"]
         last = self.last_applied()
         if last is None:
             return self._full_build(spark, current)
         if last >= current:
             return {"strategy": "noop", "from": last, "to": last}
 
+        parts = self._logged_partitions(entries, last, current)
         try:
-            cdc = read_window(self.lake, spark, self.base, last, current)
+            if parts is None:
+                parts = self._diffed_partitions(spark, last, current)
+            else:
+                # the same rule as the diff: a window whose base state
+                # vacuum reclaimed rebuilds (isdir checks, no read)
+                self.lake._readable_manifest(*self.base, last, entries)
         except HistoryUnavailableError:
-            # vacuum reclaimed the CDC window: the only honest refresh
-            # is a rebuild
+            # vacuum reclaimed the window: the only honest refresh is
+            # a rebuild
             return self._full_build(spark, current)
-        values = [] if cdc is None else self._values(cdc)
-        if not values:
-            # metadata-only commits, or row changes that cancelled out
-            # (a compaction): advance the watermark, touch no data
+        if not parts:
+            # metadata-only commits, compactions, or row changes that
+            # cancelled out: advance the watermark, touch no data
             advance_watermark(self.lake, *self.view, current)
             return {"strategy": "advance", "from": last, "to": current}
-        # the affected partitions' canonical tokens, shared by the base
-        # read and the view write (a NULL value is the NULL sentinel)
-        parts = sorted({_token_of(v) for v in values})
+        # the affected partitions' canonical tokens are shared by the
+        # base read and the view write (a NULL value is the NULL
+        # sentinel)
         try:
             rows = self.lake.read(spark, *self.base, partition_values=parts)
         except FileNotFoundError:
             # the base has no live rows: every affected partition
-            # empties (an empty frame with the base's columns)
-            rows = cdc.filter(F.lit(False))
+            # empties
+            rows = self.lake._empty_frame(spark, *self.base, entries)
         self.lake.overwrite_partitions(
             self._aggregate(rows), *self.view,
             partition_col=self.partition_col,
