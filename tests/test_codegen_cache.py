@@ -2,8 +2,11 @@
 is a static conf (`spark.sql.codegen.cache.maxEntries`, default 100).
 One pass over the bench queries generates a few hundred classes, so at
 the default size every pass evicted and recompiled what the last one
-built.  Under test: the session reports the size the factory sets, and
-a repeated pass over the bench queries compiles (almost) nothing."""
+built.  The cache is keyed on the generated source, which by default
+names each class after its codegen stage id, an id AQE assigns in stage
+completion order.  Under test: the session reports the size the factory
+sets and keeps stage ids out of class names, and a repeated pass over
+the bench queries compiles (almost) nothing."""
 
 from __future__ import annotations
 
@@ -24,6 +27,10 @@ def test_session_sizes_the_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_generated_class_names_carry_no_stage_id(spark):
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
 
 
 def test_repeated_bench_pass_reuses_compiled_code(spark, sf_dir):

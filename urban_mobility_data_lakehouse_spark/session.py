@@ -16,6 +16,17 @@ instead of about 400, and a repeated registry pass 116 instead of 2777
 (sf0.001, 4 vCPUs).  The conf is static (read once, at session
 creation), so it cannot ride RUNTIME_CONFS onto a session built
 elsewhere.
+
+The cache is keyed on the generated source, and by default Spark names
+each class after its whole-stage codegen stage id.  Under AQE those ids
+follow the order in which query stages finish, so an unchanged stage
+can come back under another id and compile again: repeated bench
+passes measured 0 to 12 such recompiles each, enough to break the
+10-class budget above.
+RUNTIME_CONFS drops the id from class names; with it every repeated
+pass compiled nothing (5 passes idle, 3 more with 4 CPUs kept busy by
+other processes; sf0.001, 4 vCPUs), and a repeated registry pass
+compiled 6 classes where it compiled 116 with the ids.
 """
 
 from __future__ import annotations
@@ -43,6 +54,11 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Generated classes without the codegen stage id in their name: AQE
+    # numbers stages in completion order, so with the id an unchanged
+    # stage misses the codegen cache whenever its number moves (see the
+    # module docstring).
+    "spark.sql.codegen.useIdInClassName": "false",
     # AQE's parallelism-first coalescing floors post-shuffle partitions
     # at minPartitionSize (default 1 MB): a 2-3 MB window/sessionize
     # shuffle coalesces to 2 tasks and serializes CPU-bound sort+window
