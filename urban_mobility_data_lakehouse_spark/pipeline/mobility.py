@@ -33,9 +33,11 @@ BASELINE.md).
 from __future__ import annotations
 
 from contextlib import contextmanager
+from datetime import datetime
+from decimal import Decimal, localcontext
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
 from ..functions.cleaning import (
@@ -57,10 +59,18 @@ from ..functions.spatial import (
     wkt_centroid_lon,
 )
 from ..sources.csv import read_bronze_csv
-from ..sources.lakehouse import Lakehouse, log_metric, metric_rows
+from ..sources.lakehouse import (
+    QUALITY_LOG_SCHEMA,
+    Lakehouse,
+    log_metric,
+    quality_rows,
+)
 from ..sources.matview import MaterializedView
 
 MADRID_TZ = "Europe/Madrid"
+# the fact commit's per-day audit metrics (`process_days` logs them,
+# `audit_batch` sums them): {partition token: {"rows", "trips", "bad"}}
+DAY_METRICS = "day_metrics"
 
 
 @contextmanager
@@ -71,6 +81,56 @@ def session_tz(spark: SparkSession, tz: str):
         yield
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _bad_row() -> "F.Column":
+    """A fact row the audit counts as bad: a zone id is NULL."""
+    return (
+        F.col("origin_zone_id").isNull()
+        | F.col("destination_zone_id").isNull()
+    )
+
+
+def _observe_days(fact: DataFrame, dates: list[str]):
+    """`fact` with an `Observation` of each date's rows, exact Σ
+    `cast(trips as decimal(25,6))` and bad rows, and the `extra_meta`
+    function that logs them, keyed by partition token, on the commit
+    whose write ran the frame (`DAY_METRICS`; None without dates).  A
+    date Python cannot parse is left out: its partition, if any, has
+    no logged metrics."""
+    days = []
+    for d in dates:
+        try:
+            days.append(datetime.strptime(d, "%Y%m%d").date())
+        except ValueError:
+            pass
+    days = sorted(set(days))
+    if not days:
+        return fact, None
+    obs = Observation()
+    exprs = []
+    for i, day in enumerate(days):
+        on = F.col("partition_date") == F.lit(day)
+        exprs += [
+            F.count(F.when(on, 1)).alias(f"rows{i}"),
+            F.sum(F.when(on, F.col("trips").cast("decimal(25,6)")))
+            .alias(f"trips{i}"),
+            F.count(F.when(on & _bad_row(), 1)).alias(f"bad{i}"),
+        ]
+
+    def day_metrics(_entry: dict) -> dict:
+        got = obs.get
+        return {DAY_METRICS: {
+            day.isoformat(): {
+                "rows": got[f"rows{i}"],
+                "trips": str(got[f"trips{i}"]),
+                "bad": got[f"bad{i}"],
+            }
+            for i, day in enumerate(days)
+            if got[f"rows{i}"]
+        }}
+
+    return fact.observe(obs, *exprs), day_metrics
 
 
 class MobilityPipeline:
@@ -294,10 +354,15 @@ class MobilityPipeline:
 
     def process_days(self, dates: list[str]) -> None:
         """Typed silver fact for the given dates, idempotent per
-        partition.  Period timestamps built under Europe/Madrid."""
+        partition.  Period timestamps built under Europe/Madrid.
+
+        Reads only the dates' bronze partitions.  An `Observation` on
+        the written frame counts each day's rows, exact Σ trips and bad
+        rows (a zone id NULL) on the write job itself, and the fact's
+        commit logs them under `DAY_METRICS` for `audit_batch`."""
         s, lake = self.spark, self.lake
-        bronze = lake.read(s, "bronze", "mobility_data").filter(
-            F.col("fecha").isin(dates)
+        bronze = lake.read(
+            s, "bronze", "mobility_data", partition_values=list(dates)
         )
         dimz = lake.read(s, "silver", "dim_zones")
         zo = dimz.select(
@@ -333,12 +398,13 @@ class MobilityPipeline:
                 )
                 .filter(F.col("trips").isNotNull())
             )
+            fact, day_metrics = _observe_days(fact, dates)
             # fact + its audit-trail row commit ATOMICALLY (the
             # cross-table transaction DuckLake offered, S11): a crash
             # can never leave a batch in the fact without its quality-
             # log record, or vice versa
-            audit_row = metric_rows(
-                s, "silver.fact_mobility",
+            audit_rows = quality_rows(
+                "silver.fact_mobility",
                 {"batch_days_committed": len(dates)},
                 ",".join(sorted(dates)),
             )
@@ -346,35 +412,62 @@ class MobilityPipeline:
                 txn.overwrite_partitions(
                     fact, "silver", "fact_mobility",
                     partition_col="partition_date",
+                    extra_meta=day_metrics,
                 )
-                txn.append(audit_row, "silver", "data_quality_log")
+                txn.append_rows(
+                    audit_rows, QUALITY_LOG_SCHEMA,
+                    "silver", "data_quality_log",
+                )
 
     def audit_batch(self, dates: list[str]) -> dict[str, float]:
-        """Batch audit (:584-634): rows, Σ trips, days, bad-row %,
-        logged as ONE quality-log commit.  The day count is the size of
-        the collected day set (NULL skipped, like COUNT(DISTINCT)): one
-        aggregation stage, where a distinct count adds a second
-        exchange.  The set holds one entry per loaded day."""
+        """Batch audit (:584-634): rows, Σ trips, days, bad-row % over
+        the whole fact, logged as ONE quality-log commit — summed from
+        the per-day metrics the fact's commits logged (`process_days`,
+        `Lakehouse.logged_partition_metrics`) instead of a second scan.
+        The live partitions without usable logged metrics (DML, a live
+        deletion vector, a compaction that applied one, commits older
+        than the metrics) are aggregated with the same expressions over
+        one read of just those partitions (of the whole table when
+        appended or unpartitioned rows are live).  In a daily batch
+        there are none, and the quality-log row is written on the
+        driver, so the audit runs no Spark job.  Days count the live
+        partitions that hold rows, NULL skipped, like COUNT(DISTINCT):
+        every logged day holds rows and has a date."""
         s, lake = self.spark, self.lake
-        fact = lake.read(s, "silver", "fact_mobility")
-        row = fact.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("trips").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_trips"),
-            F.size(F.collect_set("partition_date")).alias("days"),
-            F.sum(
-                (
-                    F.col("origin_zone_id").isNull()
-                    | F.col("destination_zone_id").isNull()
-                ).cast("long")
-            ).alias("bad"),
-        ).collect()[0]
+        logged, rest = lake.logged_partition_metrics(
+            "silver", "fact_mobility", DAY_METRICS
+        )
+        n = sum(m["rows"] for m in logged.values())
+        bad = sum(m["bad"] for m in logged.values())
+        days = len(logged)
+        with localcontext() as ctx:
+            ctx.prec = 60  # exact: a decimal(35,6) sum has ≤ 35 digits
+            trips = sum(
+                (Decimal(m["trips"]) for m in logged.values()), Decimal(0)
+            )
+            if rest is None or rest:
+                row = (
+                    lake.read(
+                        s, "silver", "fact_mobility", partition_values=rest
+                    )
+                    .agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum(F.col("trips").cast("decimal(25,6)"))
+                        .alias("trips"),
+                        F.size(F.collect_set("partition_date")).alias("days"),
+                        F.sum(_bad_row().cast("long")).alias("bad"),
+                    )
+                    .collect()[0]
+                )
+                n += row["n"]
+                trips += row["trips"] or 0
+                days += row["days"]
+                bad += row["bad"] or 0
         metrics = {
-            "batch_rows": float(row["n"]),
-            "batch_total_trips": float(row["total_trips"]),
-            "batch_days_loaded": float(row["days"]),
-            "batch_bad_row_pct": 100.0 * row["bad"] / max(row["n"], 1),
+            "batch_rows": float(n),
+            "batch_total_trips": float(trips),
+            "batch_days_loaded": float(days),
+            "batch_bad_row_pct": 100.0 * bad / max(n, 1),
         }
         log_metric(lake, s, "silver.fact_mobility", metrics)
         return metrics

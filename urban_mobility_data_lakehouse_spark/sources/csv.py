@@ -20,6 +20,8 @@ through pandas for the INE source (…:133-179).
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -31,7 +33,7 @@ def all_string_schema(columns: list[str]) -> StructType:
 
 def read_bronze_csv(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     source_url: str | None = None,
     sep: str = ",",
     header: bool = True,
@@ -43,6 +45,9 @@ def read_bronze_csv(
 
     `columns` forces a headerless schema (the population file case,
     mobility_ingestion_pipeline.py:257-276 — column0/column1 naming).
+    Otherwise the column names come from the first non-empty line,
+    read on the driver (`header_names`) — no Spark job, never an
+    inference scan.
     """
     reader = (
         spark.read.option("sep", sep)
@@ -50,23 +55,119 @@ def read_bronze_csv(
         .option("encoding", encoding)
         .option("mode", "DROPMALFORMED" if ignore_errors else "FAILFAST")
     )
-    if columns is not None:
-        df = reader.schema(all_string_schema(columns)).csv(path)
-    else:
-        # infer structure only (column names), then force all-string:
-        # one cheap pass over headers, never a full inference scan
-        head = spark.read.option("sep", sep).option("header", str(header).lower()).option(
-            "encoding", encoding
-        ).csv(path).limit(0)
-        df = reader.schema(all_string_schema(head.columns)).csv(path)
-    if not header and columns is None:
-        df = df.toDF(*[f"column{i}" for i in range(len(df.columns))])
+    if columns is None:
+        names = header_names(spark, path, sep, encoding)
+        columns = (
+            names if header else [f"column{i}" for i in range(len(names))]
+        )
+    df = reader.schema(all_string_schema(columns)).csv(path)
     return df.select(
         "*",
         F.current_timestamp().alias("ingestion_timestamp"),
         F.lit(source_url or path).alias("source_url"),
         F.input_file_name().alias("filename"),
     )
+
+
+# suffixes Hadoop decompresses that the driver-side header read does not
+_OTHER_CODECS = (".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+
+
+def _first_line(paths: list[str], encoding: str) -> str | None:
+    """The first non-empty line of the files, as Spark's header probe
+    reads it: files largest first (the order of its input splits),
+    lines split on \\n, \\r or \\r\\n, a leading UTF-8 BOM skipped
+    (Hadoop's line reader does), `.gz` decompressed, every line
+    decoded with `encoding`."""
+    import gzip
+
+    for p in sorted(paths, key=lambda p: -os.path.getsize(p)):
+        opener = gzip.open if p.endswith(".gz") else open
+        with opener(p, "rb") as f:
+            for n, raw in enumerate(f):
+                if n == 0:
+                    raw = raw.removeprefix(b"\xef\xbb\xbf")
+                for piece in raw.rstrip(b"\n").split(b"\r"):
+                    line = piece.decode(encoding, errors="replace")
+                    if line.strip(" "):  # Spark's SQL trim(): spaces
+                        return line
+    return None
+
+
+def _split_line(line: str, sep: str) -> list[str]:
+    """One CSV line split as Spark's (univocity) parser splits it:
+    quote `"`, escape `\\` (`\\"` and `\\\\` inside quotes), blanks
+    after a closing quote skipped, and a quoted value that goes on
+    after its closing quote kept raw, quotes and all, up to the next
+    separator."""
+    n = len(line)
+
+    def next_sep(at: int) -> int:
+        k = line.find(sep, at)
+        return n if k < 0 else k
+
+    out, i = [], 0
+    while True:
+        if line.startswith('"', i):
+            buf, j = [], i + 1
+            while j < n and line[j] != '"':
+                if line[j] == "\\" and line[j + 1:j + 2] in ('"', "\\"):
+                    j += 1
+                buf.append(line[j])
+                j += 1
+            k = j + 1
+            while k < n and line[k] <= " " and line[k] != sep:
+                k += 1
+            value = "".join(buf)
+            if k < n and line[k] != sep:
+                k = next_sep(k)
+                value = '"' + value + line[j:k]
+        else:
+            k = next_sep(i)
+            value = line[i:k]
+        out.append(value)
+        if k >= n:
+            return out
+        i = k + 1
+
+
+def _safe_header(row: list[str], case_sensitive: bool) -> list[str]:
+    """Spark's `CSVUtils.makeSafeHeader`: an empty name becomes
+    `_c<i>`, a duplicated one (case-insensitively unless
+    `case_sensitive`) gets its index appended."""
+    fold = (lambda s: s) if case_sensitive else str.lower
+    seen = [fold(v) for v in row]
+    dups = {v for v in seen if seen.count(v) > 1}
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if fold(v) in dups else v
+        for i, v in enumerate(row)
+    ]
+
+
+def header_names(
+    spark: SparkSession, path: str | list[str], sep: str = ",",
+    encoding: str = "UTF-8",
+) -> list[str]:
+    """The column names Spark's CSV reader takes from a header line
+    (`spark.read.csv(path).columns` with `header=true`), read on the
+    driver: no Spark job.  Paths that are not plain or `.gz` local
+    files (a directory, a glob, a remote URI, another Hadoop codec's
+    suffix) and multi-character separators still go through Spark's
+    probe."""
+    paths = [path] if isinstance(path, str) else list(path)
+    local = [p.removeprefix("file:") for p in paths]
+    if len(sep) != 1 or not all(
+        os.path.isfile(p) and not p.endswith(_OTHER_CODECS) for p in local
+    ):
+        return (
+            spark.read.option("sep", sep).option("header", "true")
+            .option("encoding", encoding).csv(path).limit(0).columns
+        )
+    line = _first_line(local, encoding)
+    if line is None:
+        return []
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    return _safe_header(_split_line(line, sep), case_sensitive)
 
 
 def fetch_url(url: str, dest: str, encoding_fallbacks: tuple[str, ...] = ("utf-8-sig", "ISO-8859-1")) -> str:

@@ -11,7 +11,8 @@ into:
     exactly the partitions present in the incoming frame (the
     replaceWhere / DELETE+INSERT analog,
     mobility_ingestion_pipeline.py:519-533,544-567)
-  - `append` — append-only sinks (the quality log)
+  - `append` — append-only sinks; `append_rows` writes a few
+    driver-side rows (the quality log) without a Spark job
   - **multi-table transactions** (`transaction()`) — the DuckLake
     cross-table txn surface: all staged writes commit atomically via
     ONE appended line in a lakehouse-level journal; per-table logs
@@ -56,10 +57,17 @@ import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DoubleType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 SNAPSHOT_LOG = "_snapshots.jsonl"
 TXN_LOG = "_txns.jsonl"
@@ -284,12 +292,19 @@ def _roots(
     return [os.path.join(d, f["path"]) for f in kept]
 
 
-def _with_meta(entry: dict, extra_meta: dict | None) -> dict:
+def _with_meta(
+    entry: dict, extra_meta: dict | Callable[[dict], dict] | None
+) -> dict:
     """Merge caller metadata into a staged commit entry (recorded on
     the log line, atomic with the commit — how a consumer ties applied
     work to the exact commit that carries it, e.g. a materialized
-    view's `mv_base_version` watermark).  Reserved keys are protected:
-    metadata can annotate a commit, never alter its replay semantics."""
+    view's `mv_base_version` watermark).  `extra_meta` may also be a
+    function of the staged entry, called once the stager has written
+    the files: metadata the write itself produced (an `Observation`
+    on the written frame).  Reserved keys are protected: metadata can
+    annotate a commit, never alter its replay semantics."""
+    if callable(extra_meta):
+        extra_meta = extra_meta(entry)
     if not extra_meta:
         return entry
     clash = set(extra_meta) & (
@@ -1180,6 +1195,61 @@ class Lakehouse:
             name,
         )
 
+    def _stage_rows(
+        self, rows: list[tuple], row_schema: StructType,
+        schema: str, name: str, data_dir: str,
+    ) -> dict:
+        """An append of a few driver-side `rows` (tuples in
+        `row_schema`'s field order): ONE zstd parquet written on the
+        driver with pyarrow, carrying Spark's row-schema footer key so
+        the logged read schema is the one a Spark write of the same
+        rows logs — no Spark job.  Refused on a table with CHECK
+        constraints, column mapping or a partition spec: those write
+        paths run through Spark, and rows written around them would
+        bypass what they guarantee."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from .skipping import SPARK_ROW_SCHEMA_KEY
+
+        if (
+            self.constraints(schema, name)
+            or any(self.column_state(schema, name))
+            or self.partition_spec(schema, name) is not None
+        ):
+            raise ValueError(
+                f"{schema}.{name}: driver-written rows would bypass the "
+                "table's CHECK constraints, column mapping or partition "
+                "spec; append a DataFrame instead"
+            )
+        arrow = pa.schema(
+            [
+                pa.field(f.name, to_arrow_type(f.dataType), f.nullable)
+                for f in row_schema.fields
+            ],
+            metadata={SPARK_ROW_SCHEMA_KEY: row_schema.json()},
+        )
+        os.makedirs(data_dir)
+        pq.write_table(
+            pa.Table.from_pylist(
+                [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+            ),
+            os.path.join(
+                data_dir, f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"
+            ),
+            compression="zstd",
+        )
+        path = self._table_dir(schema, name)
+        return self._attach_stats(
+            dict(op="append", data_dir=os.path.relpath(data_dir, path)),
+            data_dir,
+            schema,
+            name,
+        )
+
     def overwrite_partitions(
         self,
         df: DataFrame,
@@ -1187,7 +1257,7 @@ class Lakehouse:
         name: str,
         partition_col: str | None = None,
         partitions: list[str] | None = None,
-        extra_meta: dict | None = None,
+        extra_meta: dict | Callable[[dict], dict] | None = None,
         files_per_partition: int = 1,
         sort_within: tuple[str, ...] = (),
     ) -> None:
@@ -1836,6 +1906,18 @@ class Lakehouse:
             unique_meta=unique_meta,
         )
 
+    def append_rows(
+        self, rows: list[tuple], row_schema: StructType, schema: str, name: str
+    ) -> None:
+        """`append` of a few driver-side rows, written on the driver
+        (`_stage_rows`): the same commit as a Spark append of those
+        rows, without a Spark job."""
+        base, data_dir = self._next_data_dir(schema, name)
+        self._commit(
+            schema, name,
+            self._stage_rows(rows, row_schema, schema, name, data_dir), base,
+        )
+
     # -- multi-table transactions (S11) ------------------------------------
 
     def transaction(self) -> "Transaction":
@@ -1844,7 +1926,8 @@ class Lakehouse:
 
             with lake.transaction() as txn:
                 txn.overwrite_partitions(fact, "silver", "fact", "d")
-                txn.append(audit_row, "silver", "data_quality_log")
+                txn.append_rows(audit_rows, QUALITY_LOG_SCHEMA,
+                                "silver", "data_quality_log")
 
         All data files are written inside the block (the expensive,
         restartable part); the COMMIT POINT is one appended line in the
@@ -2768,8 +2851,6 @@ class Lakehouse:
         """One planned slice as a frame: its roots read under the
         commit dir as `basePath` with the dir's logged schema, then its
         partition-membership and supersede filters."""
-        from pyspark.sql.types import StructType
-
         reader = spark.read.option("basePath", sl.d)
         if sl.schema is not None:
             reader = reader.schema(StructType.fromJson(sl.schema))
@@ -2834,8 +2915,6 @@ class Lakehouse:
         read): typed from the newest logged commit-dir read schema in
         `entries` (the table's parsed log), so no file is opened and
         no Spark job runs."""
-        from pyspark.sql.types import StructType
-
         logged = next(
             (
                 e["schema"] for e in reversed(entries)
@@ -3324,6 +3403,89 @@ class Lakehouse:
             "constraints": self.constraints(schema, name),
         }
 
+    def logged_partition_metrics(
+        self, schema: str, name: str, key: str
+    ) -> tuple[dict[str, dict], list[str] | None]:
+        """The live partitions' metrics as the commits that wrote them
+        logged them under `key` (`extra_meta={key: {token: {"rows": n,
+        ...}}}`), from the commit log alone: no Spark job, no data
+        read.  A compaction (an entry logging `files_before`) rewrites
+        rows without changing them, so a partition it owns keeps the
+        metrics of the commit that owned it before.  Returns (metrics
+        by partition token, the live partitions whose metrics are not
+        usable).  A partition's metrics are not usable when no commit
+        logged any for it (appends, DML, commits older than the
+        metrics), when their `rows` differ from the rows its owning
+        commit logged for the partition's files (a compaction that
+        applied deletion vectors or folded in appended rows), or when
+        a live deletion vector names a file in the partition.  The
+        second item is None when live additive dirs (appends,
+        merge-on-read updates, a full compaction) hold rows no
+        partition owns: then only a whole-table scan answers."""
+        entries = self.snapshots(schema, name)
+        part_map, extra, dvs = self._readable_manifest(
+            schema, name, None, entries
+        )
+        if extra:
+            return {}, None
+        path = self._table_dir(schema, name)
+        owner = {
+            os.path.join(path, e["data_dir"]): e
+            for e in entries if e.get("data_dir") is not None
+        }
+        before: dict[int, dict] = {}  # version → the part_map before it
+
+        def logged_for(token: str, e: dict) -> dict | None:
+            while token not in e.get(key, {}):
+                if "files_before" not in e:
+                    return None
+                v = e["version"] - 1
+                if v not in before:
+                    before[v] = self._manifest(schema, name, v, entries)[0]
+                e = owner.get(before[v].get(token, (None,))[0], {})
+            return e[key][token]
+
+        deleted = self._dv_tokens(dvs)
+        logged: dict[str, dict] = {}
+        rest: list[str] = []
+        for token, (d, pcol) in sorted(part_map.items()):
+            e = owner.get(d, {})
+            m = logged_for(token, e)
+            rows = sum(
+                f["rows"] for f in e.get("files", ())
+                if (raw := _path_tokens(f["path"]).get(pcol)) is not None
+                and _canon_token(raw) == token
+            )
+            if m is None or m.get("rows") != rows or token in deleted:
+                rest.append(token)
+            else:
+                logged[token] = m
+        return logged, rest
+
+    @staticmethod
+    def _dv_tokens(dvs: list[str]) -> set[str]:
+        """Every partition token in the file paths the deletion vectors
+        `dvs` name (read on the driver: vectors are small).  Each path
+        segment is read both as an on-disk name and as the URI-encoded
+        form `_metadata.file_path` may give, so a partition is never
+        missed; an extra token only costs the audit a scan."""
+        if not dvs:
+            return set()
+        import pyarrow.parquet as pq
+        from urllib.parse import unquote
+
+        paths = set()
+        for d in dvs:
+            paths.update(
+                pq.read_table(d, columns=["file_path"])[0].to_pylist()
+            )
+        return {
+            _canon_token(form)
+            for p in paths
+            for raw in _path_tokens(p).values()
+            for form in (raw, unquote(raw))
+        }
+
     def recommend_compaction(
         self,
         schema: str,
@@ -3642,18 +3804,16 @@ class Transaction:
     def overwrite_partitions(
         self, df: DataFrame, schema: str, name: str,
         partition_col: str | None = None,
+        extra_meta: dict | Callable[[dict], dict] | None = None,
     ) -> None:
         self._record_base(schema, name)
         df, partition_col = self.lake._resolve_partitioning(
             df, schema, name, partition_col
         )
-        self._stage(
-            schema, name,
-            self.lake._stage_overwrite_partitions(
-                df, schema, name, partition_col,
-                self._data_dir(schema, name),
-            ),
+        entry = self.lake._stage_overwrite_partitions(
+            df, schema, name, partition_col, self._data_dir(schema, name),
         )
+        self._stage(schema, name, _with_meta(entry, extra_meta))
 
     def overwrite(self, df: DataFrame, schema: str, name: str) -> None:
         self._record_base(schema, name)
@@ -3742,6 +3902,17 @@ class Transaction:
             ),
         )
 
+    def append_rows(
+        self, rows: list[tuple], row_schema: StructType, schema: str, name: str
+    ) -> None:
+        self._record_base(schema, name)
+        self._stage(
+            schema, name,
+            self.lake._stage_rows(
+                rows, row_schema, schema, name, self._data_dir(schema, name)
+            ),
+        )
+
     # -- commit protocol ---------------------------------------------------
 
     def _commit_journal(self) -> None:
@@ -3816,10 +3987,13 @@ class Transaction:
 
 # -- data-quality log (S13 + §5 audits) ------------------------------------
 
-QUALITY_LOG_SCHEMA = (
-    "check_timestamp timestamp, table_name string, metric_name string, "
-    "metric_value double, notes string"
-)
+QUALITY_LOG_SCHEMA = StructType([
+    StructField("check_timestamp", TimestampType()),
+    StructField("table_name", StringType()),
+    StructField("metric_name", StringType()),
+    StructField("metric_value", DoubleType()),
+    StructField("notes", StringType()),
+])
 
 
 @contextmanager
@@ -3846,18 +4020,16 @@ def temp_lakehouse(schema: str = "gold", prefix: str = "umdl_tmp_lake_"):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def metric_rows(
-    spark: SparkSession, table_name: str, metrics: dict, notes: str = ""
-) -> DataFrame:
-    """`{metric_name: value}` as data_quality_log rows: one VALUES
-    relation in ONE partition (one file from one task, not a file per
-    VALUES slice), every row stamped with the same check_timestamp."""
-    from .localrel import values_df
+def quality_rows(
+    table_name: str, metrics: dict, notes: str | None = ""
+) -> list[tuple]:
+    """`{metric_name: value}` as data_quality_log rows
+    (`QUALITY_LOG_SCHEMA`), every row stamped with the same driver UTC
+    instant."""
+    from datetime import datetime, timezone
 
-    rows = [(None, table_name, k, float(v), notes) for k, v in metrics.items()]
-    return values_df(spark, rows, QUALITY_LOG_SCHEMA).coalesce(1).withColumn(
-        "check_timestamp", F.current_timestamp()
-    )
+    now = datetime.now(timezone.utc)
+    return [(now, table_name, k, float(v), notes) for k, v in metrics.items()]
 
 
 def log_metric(
@@ -3865,9 +4037,12 @@ def log_metric(
 ) -> None:
     """Append one audit to silver.data_quality_log: a row per
     `{metric_name: value}` entry, all in ONE commit (the reference's
-    helper, mobility_ingestion_pipeline.py:76-80, commits per row)."""
-    lake.append(
-        metric_rows(spark, table_name, metrics), "silver", "data_quality_log"
+    helper, mobility_ingestion_pipeline.py:76-80, commits per row),
+    written on the driver (`Lakehouse.append_rows`) — no Spark job,
+    so `spark` goes unused."""
+    lake.append_rows(
+        quality_rows(table_name, metrics), QUALITY_LOG_SCHEMA,
+        "silver", "data_quality_log",
     )
 
 

@@ -62,7 +62,7 @@ _PARQUET_SUFFIX = ".parquet"
 STATS_MAX_COLUMNS = 32
 
 # the footer key under which Spark stores a file's row schema (JSON)
-_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 # -- JSON-safe stat value encoding ------------------------------------------
@@ -222,7 +222,7 @@ def collect_file_stats(
 def _read_schema(meta, rel_path: str) -> dict | None:
     """Spark's read schema for a commit dir, from one file's footer
     (see `collect_file_stats`); None when Spark did not write it."""
-    raw = (meta.metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
+    raw = (meta.metadata or {}).get(SPARK_ROW_SCHEMA_KEY)
     if raw is None:
         return None
     fields = [_nullable_field(f) for f in json.loads(raw)["fields"]]
