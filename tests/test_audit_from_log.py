@@ -104,12 +104,11 @@ def test_batch_reads_only_its_bronze_partitions(pipeline, monkeypatch):
 def test_audit_equals_scan_across_fact_op_tape(pipeline):
     """After each fact commit the audit equals the from-scratch scan,
     and only partitions without usable logged metrics are scanned:
-    none after `process_days` or a partition compaction of its commits
-    (0 Spark jobs), the DML-touched ones after copy-on-write and
-    merge-on-read DML and after a compaction that applied the
-    deletion vector, the whole table after a full (unpartitioned)
-    compaction, and none again once a restore brings the logged
-    commits back."""
+    none after `process_days` commits (0 Spark jobs), the rewritten
+    ones after a partition compaction and after copy-on-write DML,
+    the whole table while a deletion vector is live and after a full
+    (unpartitioned) compaction, and none again once `process_days`
+    rewrites the days or a restore brings its commits back."""
     p, s, lake = pipeline, pipeline.spark, pipeline.lake
     d0, d1, d2, d3 = TOKENS
 
@@ -127,15 +126,16 @@ def test_audit_equals_scan_across_fact_op_tape(pipeline):
         ("second day", lambda: p.process_days(DAYS[1:2]), []),
         ("re-run of a day", lambda: p.process_days(DAYS[:1]), []),
         ("two-day batch", lambda: p.process_days(DAYS[2:4]), []),
-        ("partition compaction", compact, []),
+        ("partition compaction", compact, TOKENS),
+        ("re-run of every day", lambda: p.process_days(DAYS), []),
         ("cow delete", lambda: lake.delete_where(
             s, *FACT, on(d1, 1), partition_col="partition_date"), [d1]),
         ("cow update to bad rows", lambda: lake.update_where(
             s, *FACT, on(d2, 2), {"destination_zone_id": F.lit(None)},
             partition_col="partition_date"), [d1, d2]),
         ("mor delete", lambda: lake.delete_where(
-            s, *FACT, on(d3, 3), mode="merge_on_read"), [d1, d2, d3]),
-        ("compaction applying the vector", compact, [d1, d2, d3]),
+            s, *FACT, on(d3, 3), mode="merge_on_read"), None),
+        ("compaction applying the vector", compact, TOKENS),
         ("full compaction", lambda: lake.compact(s, *FACT, vacuum=False),
          None),
         ("restore", lambda: lake.restore(*FACT, restored), []),
@@ -143,7 +143,7 @@ def test_audit_equals_scan_across_fact_op_tape(pipeline):
     restored = None
     for step, commit, unusable in tape:
         commit()
-        if step == "partition compaction":
+        if step == "two-day batch":
             restored = lake.snapshots(*FACT)[-1]["version"]
         logged, rest = lake.logged_partition_metrics(*FACT, DAY_METRICS)
         assert rest == unusable, step
@@ -154,8 +154,7 @@ def test_audit_equals_scan_across_fact_op_tape(pipeline):
             s, f"audit-{step}", lambda: p.audit_batch(DAYS)
         )
         assert audit == scanned(p), step
-        if unusable == []:
-            assert jobs == 0, step
+        assert (jobs == 0) == (unusable == []), step
     assert scanned(p)["batch_bad_row_pct"] == 0.0  # restored past the update
 
 

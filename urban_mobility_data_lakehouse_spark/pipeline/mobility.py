@@ -118,7 +118,7 @@ def _observe_days(fact: DataFrame, dates: list[str]):
             F.count(F.when(on & _bad_row(), 1)).alias(f"bad{i}"),
         ]
 
-    def day_metrics(_entry: dict) -> dict:
+    def day_metrics() -> dict:
         got = obs.get
         return {DAY_METRICS: {
             day.isoformat(): {
@@ -424,11 +424,11 @@ class MobilityPipeline:
         the whole fact, logged as ONE quality-log commit — summed from
         the per-day metrics the fact's commits logged (`process_days`,
         `Lakehouse.logged_partition_metrics`) instead of a second scan.
-        The live partitions without usable logged metrics (DML, a live
-        deletion vector, a compaction that applied one, commits older
-        than the metrics) are aggregated with the same expressions over
-        one read of just those partitions (of the whole table when
-        appended or unpartitioned rows are live).  In a daily batch
+        The live partitions without usable logged metrics (rewritten by
+        DML or a compaction, or committed before the metrics) are
+        aggregated with the same expressions over one read of just
+        those partitions; with a live deletion vector or live appended
+        or unpartitioned rows the whole table is.  In a daily batch
         there are none, and the quality-log row is written on the
         driver, so the audit runs no Spark job.  Days count the live
         partitions that hold rows, NULL skipped, like COUNT(DISTINCT):

@@ -71,77 +71,30 @@ def read_bronze_csv(
 
 # suffixes Hadoop decompresses that the driver-side header read does not
 _OTHER_CODECS = (".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+# how much of each file (decompressed) the driver-side header read scans
+_HEAD_BYTES = 1 << 20
 
 
-def _first_line(paths: list[str], encoding: str) -> str | None:
-    """The first non-empty line of the files, as Spark's header probe
-    reads it: files largest first (the order of its input splits),
-    lines split on \\n, \\r or \\r\\n, a leading UTF-8 BOM skipped
-    (Hadoop's line reader does), `.gz` decompressed, every line
-    decoded with `encoding`."""
+def _first_line(path: str, encoding: str) -> str | None:
+    """The first non-empty line in the file's first `_HEAD_BYTES`, as
+    Hadoop's line reader gives it: lines end at \n, \r or \r\n, a
+    leading UTF-8 BOM is skipped, `.gz` is decompressed, and the line
+    is decoded with `encoding`.  None when no complete non-empty line
+    is found there."""
     import gzip
+    import re
 
-    for p in sorted(paths, key=lambda p: -os.path.getsize(p)):
-        opener = gzip.open if p.endswith(".gz") else open
-        with opener(p, "rb") as f:
-            for n, raw in enumerate(f):
-                if n == 0:
-                    raw = raw.removeprefix(b"\xef\xbb\xbf")
-                for piece in raw.rstrip(b"\n").split(b"\r"):
-                    line = piece.decode(encoding, errors="replace")
-                    if line.strip(" "):  # Spark's SQL trim(): spaces
-                        return line
+    opener = gzip.open if path.endswith(".gz") else open
+    with opener(path, "rb") as f:
+        head = f.read(_HEAD_BYTES + 1)
+    lines = re.split(rb"\r\n|\r|\n", head.removeprefix(b"\xef\xbb\xbf"))
+    if len(head) > _HEAD_BYTES:
+        lines.pop()  # cut off by the read, not by a line end
+    for raw in lines:
+        line = raw.decode(encoding, errors="replace")
+        if line.strip(" "):  # Spark's SQL trim(): spaces
+            return line
     return None
-
-
-def _split_line(line: str, sep: str) -> list[str]:
-    """One CSV line split as Spark's (univocity) parser splits it:
-    quote `"`, escape `\\` (`\\"` and `\\\\` inside quotes), blanks
-    after a closing quote skipped, and a quoted value that goes on
-    after its closing quote kept raw, quotes and all, up to the next
-    separator."""
-    n = len(line)
-
-    def next_sep(at: int) -> int:
-        k = line.find(sep, at)
-        return n if k < 0 else k
-
-    out, i = [], 0
-    while True:
-        if line.startswith('"', i):
-            buf, j = [], i + 1
-            while j < n and line[j] != '"':
-                if line[j] == "\\" and line[j + 1:j + 2] in ('"', "\\"):
-                    j += 1
-                buf.append(line[j])
-                j += 1
-            k = j + 1
-            while k < n and line[k] <= " " and line[k] != sep:
-                k += 1
-            value = "".join(buf)
-            if k < n and line[k] != sep:
-                k = next_sep(k)
-                value = '"' + value + line[j:k]
-        else:
-            k = next_sep(i)
-            value = line[i:k]
-        out.append(value)
-        if k >= n:
-            return out
-        i = k + 1
-
-
-def _safe_header(row: list[str], case_sensitive: bool) -> list[str]:
-    """Spark's `CSVUtils.makeSafeHeader`: an empty name becomes
-    `_c<i>`, a duplicated one (case-insensitively unless
-    `case_sensitive`) gets its index appended."""
-    fold = (lambda s: s) if case_sensitive else str.lower
-    seen = [fold(v) for v in row]
-    dups = {v for v in seen if seen.count(v) > 1}
-    return [
-        f"_c{i}" if not v else f"{v}{i}" if fold(v) in dups else v
-        for i, v in enumerate(row)
-    ]
 
 
 def header_names(
@@ -150,24 +103,30 @@ def header_names(
 ) -> list[str]:
     """The column names Spark's CSV reader takes from a header line
     (`spark.read.csv(path).columns` with `header=true`), read on the
-    driver: no Spark job.  Paths that are not plain or `.gz` local
-    files (a directory, a glob, a remote URI, another Hadoop codec's
-    suffix) and multi-character separators still go through Spark's
-    probe."""
+    driver when that is plainly the line split on `sep`: every file a
+    plain or `.gz` local file, the same first non-empty line in each,
+    no quote or undecodable byte in it, and its names non-empty and
+    unique (case-folded).  Anything else — a directory, a glob, a
+    remote URI, another Hadoop codec, a multi-character separator,
+    quoting, names Spark would rename — goes through Spark's own probe
+    (one job)."""
     paths = [path] if isinstance(path, str) else list(path)
     local = [p.removeprefix("file:") for p in paths]
-    if len(sep) != 1 or not all(
+    if len(sep) == 1 and all(
         os.path.isfile(p) and not p.endswith(_OTHER_CODECS) for p in local
     ):
-        return (
-            spark.read.option("sep", sep).option("header", "true")
-            .option("encoding", encoding).csv(path).limit(0).columns
-        )
-    line = _first_line(local, encoding)
-    if line is None:
-        return []
-    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-    return _safe_header(_split_line(line, sep), case_sensitive)
+        lines = {_first_line(p, encoding) for p in local}
+        line = lines.pop() if len(lines) == 1 else None
+        if line is not None and not {'"', "\ufffd"} & set(line):
+            names = line.split(sep)
+            if all(names) and len(names) == len(
+                {n.casefold() for n in names}
+            ):
+                return names
+    return (
+        spark.read.option("sep", sep).option("header", "true")
+        .option("encoding", encoding).csv(path).limit(0).columns
+    )
 
 
 def fetch_url(url: str, dest: str, encoding_fallbacks: tuple[str, ...] = ("utf-8-sig", "ISO-8859-1")) -> str:

@@ -293,18 +293,18 @@ def _roots(
 
 
 def _with_meta(
-    entry: dict, extra_meta: dict | Callable[[dict], dict] | None
+    entry: dict, extra_meta: dict | Callable[[], dict] | None
 ) -> dict:
     """Merge caller metadata into a staged commit entry (recorded on
     the log line, atomic with the commit — how a consumer ties applied
     work to the exact commit that carries it, e.g. a materialized
     view's `mv_base_version` watermark).  `extra_meta` may also be a
-    function of the staged entry, called once the stager has written
-    the files: metadata the write itself produced (an `Observation`
-    on the written frame).  Reserved keys are protected: metadata can
-    annotate a commit, never alter its replay semantics."""
+    function, called once the stager has written the files: metadata
+    the write itself produced (an `Observation` on the written frame).
+    Reserved keys are protected: metadata can annotate a commit, never
+    alter its replay semantics."""
     if callable(extra_meta):
-        extra_meta = extra_meta(entry)
+        extra_meta = extra_meta()
     if not extra_meta:
         return entry
     clash = set(extra_meta) & (
@@ -1257,7 +1257,7 @@ class Lakehouse:
         name: str,
         partition_col: str | None = None,
         partitions: list[str] | None = None,
-        extra_meta: dict | Callable[[dict], dict] | None = None,
+        extra_meta: dict | None = None,
         files_per_partition: int = 1,
         sort_within: tuple[str, ...] = (),
     ) -> None:
@@ -3406,85 +3406,43 @@ class Lakehouse:
     def logged_partition_metrics(
         self, schema: str, name: str, key: str
     ) -> tuple[dict[str, dict], list[str] | None]:
-        """The live partitions' metrics as the commits that wrote them
+        """The live partitions' metrics as the commits that own them
         logged them under `key` (`extra_meta={key: {token: {"rows": n,
         ...}}}`), from the commit log alone: no Spark job, no data
-        read.  A compaction (an entry logging `files_before`) rewrites
-        rows without changing them, so a partition it owns keeps the
-        metrics of the commit that owned it before.  Returns (metrics
-        by partition token, the live partitions whose metrics are not
-        usable).  A partition's metrics are not usable when no commit
-        logged any for it (appends, DML, commits older than the
-        metrics), when their `rows` differ from the rows its owning
-        commit logged for the partition's files (a compaction that
-        applied deletion vectors or folded in appended rows), or when
-        a live deletion vector names a file in the partition.  The
-        second item is None when live additive dirs (appends,
-        merge-on-read updates, a full compaction) hold rows no
-        partition owns: then only a whole-table scan answers."""
+        read.  Returns (metrics by partition token, the live partitions
+        whose metrics are not usable).  A partition's metrics are
+        usable only when its owning commit logged them and their `rows`
+        equal the rows that commit logged for the partition's files;
+        appends, DML, compactions and commits older than the metrics
+        log none.  The second item is None when live deletion vectors
+        or additive dirs (appends, merge-on-read updates, a full
+        compaction) exist: then only a whole-table scan answers."""
         entries = self.snapshots(schema, name)
         part_map, extra, dvs = self._readable_manifest(
             schema, name, None, entries
         )
-        if extra:
+        if extra or dvs:
             return {}, None
         path = self._table_dir(schema, name)
         owner = {
             os.path.join(path, e["data_dir"]): e
             for e in entries if e.get("data_dir") is not None
         }
-        before: dict[int, dict] = {}  # version → the part_map before it
-
-        def logged_for(token: str, e: dict) -> dict | None:
-            while token not in e.get(key, {}):
-                if "files_before" not in e:
-                    return None
-                v = e["version"] - 1
-                if v not in before:
-                    before[v] = self._manifest(schema, name, v, entries)[0]
-                e = owner.get(before[v].get(token, (None,))[0], {})
-            return e[key][token]
-
-        deleted = self._dv_tokens(dvs)
         logged: dict[str, dict] = {}
         rest: list[str] = []
         for token, (d, pcol) in sorted(part_map.items()):
             e = owner.get(d, {})
-            m = logged_for(token, e)
+            m = e.get(key, {}).get(token)
             rows = sum(
                 f["rows"] for f in e.get("files", ())
                 if (raw := _path_tokens(f["path"]).get(pcol)) is not None
                 and _canon_token(raw) == token
             )
-            if m is None or m.get("rows") != rows or token in deleted:
+            if m is None or m.get("rows") != rows:
                 rest.append(token)
             else:
                 logged[token] = m
         return logged, rest
-
-    @staticmethod
-    def _dv_tokens(dvs: list[str]) -> set[str]:
-        """Every partition token in the file paths the deletion vectors
-        `dvs` name (read on the driver: vectors are small).  Each path
-        segment is read both as an on-disk name and as the URI-encoded
-        form `_metadata.file_path` may give, so a partition is never
-        missed; an extra token only costs the audit a scan."""
-        if not dvs:
-            return set()
-        import pyarrow.parquet as pq
-        from urllib.parse import unquote
-
-        paths = set()
-        for d in dvs:
-            paths.update(
-                pq.read_table(d, columns=["file_path"])[0].to_pylist()
-            )
-        return {
-            _canon_token(form)
-            for p in paths
-            for raw in _path_tokens(p).values()
-            for form in (raw, unquote(raw))
-        }
 
     def recommend_compaction(
         self,
@@ -3804,7 +3762,7 @@ class Transaction:
     def overwrite_partitions(
         self, df: DataFrame, schema: str, name: str,
         partition_col: str | None = None,
-        extra_meta: dict | Callable[[dict], dict] | None = None,
+        extra_meta: dict | Callable[[], dict] | None = None,
     ) -> None:
         self._record_base(schema, name)
         df, partition_col = self.lake._resolve_partitioning(
@@ -4038,8 +3996,7 @@ def log_metric(
     """Append one audit to silver.data_quality_log: a row per
     `{metric_name: value}` entry, all in ONE commit (the reference's
     helper, mobility_ingestion_pipeline.py:76-80, commits per row),
-    written on the driver (`Lakehouse.append_rows`) — no Spark job,
-    so `spark` goes unused."""
+    written on the driver (`Lakehouse.append_rows`) — no Spark job."""
     lake.append_rows(
         quality_rows(table_name, metrics), QUALITY_LOG_SCHEMA,
         "silver", "data_quality_log",
