@@ -6,8 +6,10 @@ turns those lists into the scan.  Under test: no read-side directory
 listing under `<table>/_data`, a logged schema equal to the schema
 Spark infers for every write op, no Spark job on the first read of a
 fresh commit dir, one log parse per vacuum whatever the history
-length, one journal parse per read, and a restore-aware replay that
-visits each log entry once however restores chain.
+length, one journal parse per read, a restore-aware replay that visits
+each log entry once however restores chain, and one fold of the log
+per read — the log is the only record of table state (a `_checkpoints/`
+dir is neither written nor read).
 """
 
 from __future__ import annotations
@@ -19,8 +21,9 @@ import random
 
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
+from urban_mobility_data_lakehouse_spark.sources import lakehouse as lakehouse_mod
 from urban_mobility_data_lakehouse_spark.sources.lakehouse import Lakehouse
 
 
@@ -278,17 +281,14 @@ def test_chained_restores_replay_each_entry_once(lake):
     effective = _effective(entries)
     for v in list(range(n)) + [None]:
         eff = effective[-1 if v is None else v]
-        assert lake._manifest("silver", "t", v) == lake._replay(
-            eff, path, None
-        ), f"manifest diverges at version {v}"
-        for fn in (lake.column_state, lake._widened, lake._added_columns):
-            assert fn("silver", "t", v) == fn(
-                "silver", "t", entries=eff
-            ), f"{fn.__name__} diverges at version {v}"
+        # the whole state: manifest, column mapping, widenings, adds
+        assert lake._state("silver", "t", v) == lake._state(
+            "silver", "t", entries=eff
+        ), f"state diverges at version {v}"
 
     def visits(k: int) -> int:
         _Counted.reads = 0
-        lake._replay([_Counted(e) for e in entries[:k]], path, None)
+        lakehouse_mod._fold_log([_Counted(e) for e in entries[:k]], path)
         return _Counted.reads
 
     # each entry's op is read at most three times (the restore-target
@@ -317,3 +317,87 @@ def test_read_parses_the_journal_once(spark, lake, monkeypatch):
     assert counts["_journal_entries"] <= 1
     assert counts["_raw_snapshots"] <= 2
     assert df.count() == 20
+
+
+def _mk(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("p")
+    )
+
+
+def test_history_with_restore_reads_from_the_log(spark, lake):
+    """12 commits of mixed shape, with a restore in the middle: the
+    latest read, time travel and a pruned read all replay the log."""
+    for i in range(5):
+        lake.append(_mk(spark, i * 10, i * 10 + 10), "silver", "t")  # v0..v4
+    lake.overwrite_partitions(
+        _mk(spark, 100, 120), "silver", "t", partition_col="p"
+    )  # v5
+    lake.restore("silver", "t", version=2)  # v6
+    for i in range(5, 10):
+        lake.append(_mk(spark, i * 10, i * 10 + 10), "silver", "t")  # v7..v11
+    assert len(lake.snapshots("silver", "t")) == 12
+    # v5's partition overwrite was rolled back at v6, then 5 appends
+    ids = sorted(r["id"] for r in lake.read(spark, "silver", "t").collect())
+    assert ids == sorted(list(range(0, 30)) + list(range(50, 100)))
+    old = lake.read_snapshot(spark, "silver", "t", 1).collect()
+    assert sorted(r["id"] for r in old) == list(range(0, 20))
+    hit = lake.read_where(spark, "silver", "t", [("id", ">=", 90)])
+    assert sorted(r["id"] for r in hit.collect()) == list(range(90, 100))
+    assert len(hit.inputFiles()) < len(
+        lake.read(spark, "silver", "t").inputFiles()
+    )
+
+
+def test_stale_checkpoint_file_changes_no_read(spark, lake):
+    """A `_checkpoints/` snapshot an older writer left behind — here one
+    that disagrees with the log — is never read."""
+    for i in range(6):
+        lake.append(_mk(spark, i * 10, i * 10 + 1), "silver", "t")
+
+    def observed():
+        return (
+            sorted(r["id"] for r in lake.read(spark, "silver", "t").collect()),
+            lake._manifest("silver", "t"),
+            lake.describe_detail("silver", "t"),
+        )
+
+    before = observed()
+    assert len(before[1][1]) == 6 and before[2]["num_rows"] == 6
+    cp = os.path.join(lake._table_dir("silver", "t"), "_checkpoints")
+    os.makedirs(cp)
+    with open(os.path.join(cp, "v00000003.json"), "w") as f:
+        json.dump({"version": 3, "part_map": {}, "extra": {}, "dvs": []}, f)
+    assert observed() == before
+
+
+def test_commits_write_no_checkpoints(lake):
+    row_schema = StructType([StructField("id", LongType())])
+    for i in range(40):
+        lake.append_rows([(i,)], row_schema, "silver", "q")
+    assert len(lake.snapshots("silver", "q")) == 40
+    assert not os.path.exists(
+        os.path.join(lake._table_dir("silver", "q"), "_checkpoints")
+    )
+
+
+def test_read_and_read_where_fold_the_log_once(spark, lake, monkeypatch):
+    lake.overwrite_partitions(_rows(spark, 0, 30), "silver", "t", "d")
+    lake.append(_rows(spark, 100, 6), "silver", "t")
+    lake.rename_column(spark, "silver", "t", "s", "s2")
+    lake.add_column(spark, "silver", "t", "extra", "int", default=3)
+    folds = []
+    real = lakehouse_mod._fold_log
+
+    def counting(*a, **k):
+        folds.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(lakehouse_mod, "_fold_log", counting)
+    df = lake.read(spark, "silver", "t")
+    assert len(folds) == 1
+    assert "s2" in df.columns and "extra" in df.columns
+    folds.clear()
+    hit = lake.read_where(spark, "silver", "t", [("id", "<", 5)])
+    assert len(folds) == 1
+    assert sorted(r["id"] for r in hit.collect()) == list(range(5))

@@ -198,7 +198,7 @@ def test_manifest_contract_under_random_op_tape(spark, tmp_path, seed):
             has_excl = any(excl for excl in extra.values())
             has_default = any(
                 a["default"] is not None
-                for a in lake._added_columns("silver", "t")
+                for a in lake._state("silver", "t").added
             )
             assert has_dv or has_excl or has_default, (
                 "export refused with no file-inexpressible state"

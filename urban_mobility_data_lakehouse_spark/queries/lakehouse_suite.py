@@ -238,11 +238,9 @@ _G2_N_OFFSET = 3_000_000_000  # > 2^31: needs the widened bigint
                CAST(NULL AS VARCHAR), count(*)
         FROM final_state GROUP BY p
         UNION ALL
-        -- ckpt: a cold reader seeding from the newest checkpoint and
-        -- replaying only the log suffix (the builder spy-asserts the
-        -- seed version actually used); hash equality against the same
-        -- first-principles aggregate proves checkpoint-seeded
-        -- reconstruction ≡ full-history replay
+        -- ckpt: a cold reader replaying the whole commit log; hash
+        -- equality against the same first-principles aggregate proves
+        -- the log-only reconstruction ≡ the final state
         SELECT 'ckpt', CAST(sum(n) AS BIGINT), p,
                CAST(sum(CAST(v2 AS DECIMAL(25,6))) AS DOUBLE),
                CAST(NULL AS VARCHAR), count(*)
@@ -323,15 +321,11 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     superseded file, wrong column mapping, or a lost widen all fail
     the row.
 
-    Part 'ckpt' (r11): the Delta-checkpoint analog.  The walk runs at
-    checkpoint_interval=4, so the 8-commit history snapshots the
-    replayed manifest at v3 and v7; a COLD Lakehouse instance then
-    reads the table, a spy asserts the read actually seeded from the
-    v7 checkpoint (start_after pinned — a silent full-replay fallback
-    fails the row), and the same per-partition aggregate hash-checks
-    that checkpoint-seeded reconstruction ≡ the oracle's full
-    first-principles state (the cold read now also replays the two
-    post-checkpoint 'adv' compaction commits as log suffix).
+    Part 'ckpt' (r11): a cold read.  A fresh Lakehouse instance
+    reconstructs the table from its commit log alone — the whole
+    history, including the two 'adv' compaction commits — and the
+    same per-partition aggregate hash-checks that reconstruction ≡
+    the oracle's full first-principles state.
 
     Part 'adv' (r12): the OPTIMIZE advisor
     (`Lakehouse.recommend_compaction`) hash-gated.  After the full
@@ -349,9 +343,7 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _FIXTURE_ROOT, f"lakeround_{tag}_{os.getpid()}"
     )
     shutil.rmtree(root, ignore_errors=True)
-    # interval 4 so the 8-commit walk on silver.t writes checkpoints
-    # at v3 and v7 — part 'ckpt' reads through the v7 seed
-    lake = Lakehouse(root, checkpoint_interval=4)
+    lake = Lakehouse(root)
     lake.create_schemas("silver", "gold")
     events = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id"),
@@ -496,32 +488,12 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         schema="part string, id long, p string, v2 double, flag string, n long",
     )
-    # part 'ckpt': the Delta-checkpoint analog, proven non-vacuously.
-    # A COLD Lakehouse instance (no caches) must reconstruct the table
-    # by seeding from the newest checkpoint and replaying only the log
-    # SUFFIX — the spy pins the seed version actually used, so a
-    # silent fall-back to full log replay fails the row rather than
-    # passing by accident; the hashed aggregate then proves the seeded
-    # reconstruction equals the oracle's first-principles final state.
-    cp = lake._load_checkpoint(lake._table_dir("silver", "t"), None)
-    assert cp is not None and cp["version"] >= 7, cp
-    lake_cold = Lakehouse(root, checkpoint_interval=4)
-    seeded_from: list[int | None] = []
-    orig_replay = lake_cold._replay
-
-    def spy_replay(entries, path, version, **kw):
-        if path == lake_cold._table_dir("silver", "t"):
-            seeded_from.append(kw.get("start_after"))
-        return orig_replay(entries, path, version, **kw)
-
-    lake_cold._replay = spy_replay
+    # part 'ckpt': a COLD Lakehouse instance reconstructs the table
+    # from the whole commit log; the hashed aggregate proves the
+    # replay equals the oracle's first-principles final state.
     ckpt_rows = _grouped_part(
-        lake_cold.read(spark, "silver", "t"), "ckpt"
-    ).localCheckpoint(eager=True)  # pin before the spy unwinds
-    assert seeded_from and all(
-        s == cp["version"] for s in seeded_from
-    ), f"cold read did not seed from the v{cp['version']} checkpoint: {seeded_from}"
-    lake_cold._replay = orig_replay
+        Lakehouse(root).read(spark, "silver", "t"), "ckpt"
+    )
     man_rows = _grouped_part(_manifest_replay(spark, manifest), "man")
     dml_rows = (
         lake.read(spark, "silver", "t")

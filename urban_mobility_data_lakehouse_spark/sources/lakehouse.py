@@ -56,7 +56,7 @@ import re
 import shutil
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, field, replace
 from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
@@ -214,32 +214,124 @@ def _path_tokens(rel_path: str) -> dict[str, str]:
 _DV_SCHEMA = "file_path string, row_index long"
 
 
-def _fold_log(entries, version, init, step, seed=None, seeded_at=-1):
-    """Fold `step(state, entry)` over the commit log up to `version`
-    (inclusive; None = latest) and return the state.  `step` mutates
-    the state in place.  A `restore` entry resets the state to what it
-    was after its `of_version`: the walk keeps a copy of the state at
-    every version some restore names, so each entry is visited once
-    however restores chain.  `seed` is a state as of `seeded_at` (a
-    checkpoint); the walk starts after it, unless a later restore
-    names a version the seed already covers — then it starts at 0."""
+@dataclass
+class _TableState:
+    """A table's state as of one version, folded from its commit log
+    (`_fold_log`).  Data dirs are absolute."""
+
+    # partition token → (the commit dir serving it, partition column)
+    part_map: dict[str, tuple[str, str]] = field(default_factory=dict)
+    # additive (append / MoR-update) dirs → partition column → the
+    # tokens a later partition overwrite superseded in them
+    extra: dict[str, dict[str, list[str]]] = field(default_factory=dict)
+    dvs: list[str] = field(default_factory=list)  # live deletion vectors
+    renames: dict[str, str] = field(default_factory=dict)  # physical → logical
+    dropped: set[str] = field(default_factory=set)  # dropped physical names
+    widened: dict[str, str] = field(default_factory=dict)  # physical → type
+    # add_column declarations, keyed by the PHYSICAL name the column
+    # had when added (later renames layer on top)
+    added: list[dict] = field(default_factory=list)
+
+    def dirs(self) -> set[str]:
+        """Every data dir the state references."""
+        held = {d for d, _ in self.part_map.values()}
+        return held | set(self.extra) | set(self.dvs)
+
+
+def _step(state: _TableState, e: dict, path: str) -> None:
+    """Apply one non-restore log entry to `state` in place; `path` is
+    the table dir the entry's data dirs are relative to."""
+    op = e["operation"]
+    if op in ("rename_column", "drop_column"):
+        logical = e["old"] if op == "rename_column" else e["column"]
+        phys = next(
+            (p for p, l in state.renames.items() if l == logical), logical
+        )
+        if op == "drop_column":
+            state.renames.pop(phys, None)
+            state.dropped.add(phys)
+        elif e["new"] == phys:
+            state.renames.pop(phys, None)  # renamed back home
+        else:
+            state.renames[phys] = e["new"]
+        return
+    if op == "widen_column":
+        # the commit guard admits only strictly-widening steps, so the
+        # last widening of a column is its widest
+        state.widened[e["column"]] = e["to_type"]
+        return
+    if op == "add_column":
+        state.added.append(
+            {
+                "column": e["column"],
+                "dtype": e["dtype"],
+                "default": e.get("default"),
+            }
+        )
+        return
+    d = e.get("data_dir")
+    if d is None:
+        return
+    d = os.path.join(path, d)
+    part_map, extra, dvs = state.part_map, state.extra, state.dvs
+    if op in ("overwrite", "compact"):
+        # full rewrite: data was read THROUGH the DV filter, so the new
+        # files are clean — vectors reset
+        part_map.clear()
+        extra.clear()
+        dvs.clear()
+        extra[d] = {}
+    elif op == "append":
+        extra[d] = {}
+    elif op == "delete_dv":
+        dvs.append(d)
+    elif op == "update_mor":
+        # merge-on-read MERGE: one atomic line = new rows (append
+        # semantics) + a vector deleting their old versions
+        extra[d] = {}
+        if e.get("dv_dir") is not None:  # None: nothing matched
+            dvs.append(os.path.join(path, e["dv_dir"]))
+    elif op in ("overwrite_partitions", "compact_partitioned"):
+        if op == "compact_partitioned":
+            part_map.clear()
+            extra.clear()
+            dvs.clear()
+        pcol = e["partition_col"]
+        parts = [str(p) for p in e["partitions"]]
+        for p in parts:
+            part_map[p] = (d, pcol)
+        # supersede these partitions in every OLDER live additive dir
+        # (rows written there now have a newer image in `d` — without
+        # this they'd resurrect; a newer append of the same partition
+        # enters `extra` after the overwrite, with no exclusion)
+        for excl in extra.values():
+            excl[pcol] = sorted(set(excl.get(pcol, ())) | set(parts))
+        # a partition overwrite leaves vectors in place: DV rows
+        # referencing superseded files go inert (their file paths are
+        # no longer scanned); compaction reclaims them
+
+
+def _fold_log(
+    entries: list[dict], path: str, version: int | None = None
+) -> _TableState:
+    """The table's state as of `version` (inclusive; None = latest),
+    folded from its parsed commit log `entries` in one walk — pure log
+    arithmetic, no filesystem listing, no Spark job.  The log is the
+    only record of table state and is never truncated, so every
+    version replays from it.  A `restore` entry resets the state to
+    what it was after its `of_version` (the rollback is one log line,
+    no data is copied): the walk keeps a copy of the state at every
+    version some restore names, so each entry is visited once however
+    restores chain."""
     live = [e for e in entries if version is None or e["version"] <= version]
-    restores = [e for e in live if e["operation"] == "restore"]
-    targets = {e["of_version"] for e in restores}
-    if seed is not None and any(
-        e["version"] > seeded_at and e["of_version"] <= seeded_at
-        for e in restores
-    ):
-        seed, seeded_at = None, -1
-    state = init() if seed is None else seed
+    targets = {e["of_version"] for e in live if e["operation"] == "restore"}
+    state = _TableState()
     kept = {}
     for e in live:
-        if e["version"] <= seeded_at:
-            continue
         if e["operation"] == "restore":
             state = copy.deepcopy(kept[e["of_version"]])
         else:
-            step(state, e)
+            _step(state, e, path)
         if e["version"] in targets:
             kept[e["version"]] = copy.deepcopy(state)
     return state
@@ -265,6 +357,7 @@ class _Plan(NamedTuple):
     partition_cols: list[str]  # the manifest's partition columns
     version: int | None  # the planned version (None: no commits)
     entries: list[dict]  # the parsed log the plan was made from
+    state: _TableState  # the table state as of `version`
 
 
 def _roots(
@@ -351,16 +444,9 @@ class Lakehouse:
     # Every commit entry that adds files lists them (path, rows, bytes,
     # footer min/max/null stats) together with the dir's Spark read
     # schema (`skipping.collect_file_stats`); reads plan from that
-    # record (`_plan`), never from a directory listing.
-    # Delta checkpoint analog: every `checkpoint_interval` commits the
-    # writer snapshots the REPLAYED manifest to `_checkpoints/v<N>.json`,
-    # so readers replay only the log suffix after the newest checkpoint
-    # ≤ their target version instead of the whole history.  Metadata
-    # cost per read becomes O(interval), not O(total commits) — the
-    # difference between a streaming table with 100k commits being
-    # readable and not.  0 disables writing; existing checkpoints are
-    # always honored, tables without any stay fully readable.
-    checkpoint_interval: int = 32
+    # record (`_plan`), never from a directory listing.  The commit
+    # log is the only record of table state: each call folds it once
+    # (`_fold_log`), and a `_checkpoints/` dir is never read.
 
     def _table_dir(self, schema: str, name: str) -> str:
         return os.path.join(self.root, schema, name)
@@ -557,30 +643,18 @@ class Lakehouse:
         Empty structures mean logical == physical (the common case —
         callers fast-path on it).  `entries` is the caller's
         already-parsed log (`snapshots()`), if it has one."""
+        state = self._state(schema, name, version, entries)
+        return state.renames, state.dropped
 
-        def step(state: tuple[dict[str, str], set[str]], e: dict) -> None:
-            mapping, dropped = state
-            op = e["operation"]
-            if op == "rename_column":
-                phys = next(
-                    (p for p, l in mapping.items() if l == e["old"]),
-                    e["old"],
-                )
-                if e["new"] == phys:
-                    mapping.pop(phys, None)  # renamed back home
-                else:
-                    mapping[phys] = e["new"]
-            elif op == "drop_column":
-                phys = next(
-                    (p for p, l in mapping.items() if l == e["column"]),
-                    e["column"],
-                )
-                mapping.pop(phys, None)
-                dropped.add(phys)
-
+    def _state(
+        self, schema: str, name: str, version: int | None = None,
+        entries: list[dict] | None = None,
+    ) -> _TableState:
+        """`_fold_log` over the table's log (`entries`, if the caller
+        already parsed it)."""
         if entries is None:
             entries = self.snapshots(schema, name)
-        return _fold_log(entries, version, lambda: ({}, set()), step)
+        return _fold_log(entries, self._table_dir(schema, name), version)
 
     def _retired_physical(self, schema: str, name: str) -> set[str]:
         """Physical names no data-facing writer may reuse: dropped
@@ -759,48 +833,9 @@ class Lakehouse:
             base,
         )
 
-    def _widened(
-        self, schema: str, name: str, version: int | None = None,
-        entries: list[dict] | None = None,
-    ) -> dict[str, str]:
-        """physical column → widest committed type as of `version`
-        (restore-aware, like `column_state`).  Later widenings of the
-        same column override earlier ones (the commit guard only
-        admits strictly-widening steps, so last-wins == widest)."""
-
-        def step(widened: dict[str, str], e: dict) -> None:
-            if e["operation"] == "widen_column":
-                widened[e["column"]] = e["to_type"]
-
-        if entries is None:
-            entries = self.snapshots(schema, name)
-        return _fold_log(entries, version, dict, step)
-
-    def _added_columns(
-        self, schema: str, name: str, version: int | None = None,
-        entries: list[dict] | None = None,
-    ) -> list[dict]:
-        """add_column declarations live as of `version` (restore-aware,
-        like `column_state`).  Keyed by PHYSICAL name — the name the
-        column had when added; later renames layer on top."""
-
-        def step(adds: list[dict], e: dict) -> None:
-            if e["operation"] == "add_column":
-                adds.append(
-                    {
-                        "column": e["column"],
-                        "dtype": e["dtype"],
-                        "default": e.get("default"),
-                    }
-                )
-
-        if entries is None:
-            entries = self.snapshots(schema, name)
-        return _fold_log(entries, version, list, step)
-
+    @staticmethod
     def _fill_added(
-        self, frames: list[DataFrame], schema: str, name: str,
-        version: int | None = None, entries: list[dict] | None = None,
+        frames: list[DataFrame], state: _TableState
     ) -> list[DataFrame]:
         """Attach declared-but-absent added columns (typed default or
         NULL) to each per-commit frame BEFORE the union — frame
@@ -812,39 +847,34 @@ class Lakehouse:
         int64 file generations surface as one bigint column) — every
         read path (read / read_where / read_changes) funnels through
         here, so widening applies uniformly."""
-        adds = self._added_columns(schema, name, version, entries)
-        widened = self._widened(schema, name, version, entries)
-        if not adds and not widened:
+        if not state.added and not state.widened:
             return frames
         out = []
         for f in frames:
-            for a in adds:
+            for a in state.added:
                 if a["column"] not in f.columns:
                     f = f.withColumn(
                         a["column"],
                         F.lit(a["default"]).cast(a["dtype"]),
                     )
-            for col, t in widened.items():
+            for col, t in state.widened.items():
                 if col in f.columns:
                     f = f.withColumn(col, F.col(col).cast(t))
             out.append(f)
         return out
 
-    def _apply_column_mapping(
-        self, df: DataFrame, schema: str, name: str,
-        version: int | None = None, entries: list[dict] | None = None,
-    ) -> DataFrame:
+    @staticmethod
+    def _apply_column_mapping(df: DataFrame, state: _TableState) -> DataFrame:
         """physical→logical projection for read paths.  Hidden and
         positional plumbing columns pass through untouched (they are
         never renameable)."""
-        mapping, dropped = self.column_state(schema, name, version, entries)
-        if not mapping and not dropped:
+        if not state.renames and not state.dropped:
             return df
         return df.select(
             *[
-                df[c].alias(mapping.get(c, c))
+                df[c].alias(state.renames.get(c, c))
                 for c in df.columns
-                if c not in dropped
+                if c not in state.dropped
             ]
         )
 
@@ -2062,16 +2092,15 @@ class Lakehouse:
         version, data_dir = self._next_data_dir(schema, name)
         plan = self._plan(schema, name)
         before = sum(len(sl.files) for sl in plan.slices)
-        live_values = self._manifest(schema, name)[0]
+        live_values = plan.state.part_map
         df = self.read(spark, schema, name)
         # rewrite in PHYSICAL names (the namespace every data dir
         # shares); sort/zorder args arrive logical and translate the
         # same way.  Dropped columns are already absent from the read
         # frame, so compaction is also the point their bytes actually
         # leave the files.
-        cmap, _ = self.column_state(schema, name)
         df = self._to_physical(df, schema, name)
-        _inv = {l: p for p, l in cmap.items()}
+        _inv = {l: p for p, l in plan.state.renames.items()}
         sort_by = [_inv.get(c, c) for c in sort_by] if sort_by else sort_by
         zorder_by = (
             [_inv.get(c, c) for c in zorder_by] if zorder_by else zorder_by
@@ -2350,8 +2379,7 @@ class Lakehouse:
         last_ref: dict[str, int] = {}
         # one log parse: every version's manifest replays from it
         for v in range(entries[-1]["version"] + 1):
-            part_map, extra, dvs = self._replay(entries, path, v)
-            dirs = {d for d, _ in part_map.values()} | set(extra) | set(dvs)
+            dirs = _fold_log(entries, path, v).dirs()
             for d in dirs:
                 last_ref[d] = v
             if v >= keep_version:
@@ -2408,170 +2436,13 @@ class Lakehouse:
         dict[str, tuple[str, str]], dict[str, dict[str, list[str]]],
         list[str],
     ]:
-        """Replay the commit log up to `version` (inclusive; None =
-        latest) → (partition → (data_dir, partition_col), extra dirs,
-        live deletion-vector dirs).  Pure log arithmetic — no
-        filesystem listing, no Spark job.  Seeds from the newest
-        checkpoint ≤ `version` when one exists, replaying only the log
-        suffix after it.  `entries` is the caller's already-parsed
-        log (`snapshots()`), if it has one."""
-        if entries is None:
-            entries = self.snapshots(schema, name)
-        path = self._table_dir(schema, name)
-        cp = self._load_checkpoint(path, version)
-        if cp is None:
-            return self._replay(entries, path, version)
-        seed = (
-            {
-                value: (os.path.join(path, d), pcol)
-                for value, (d, pcol) in cp["part_map"].items()
-            },
-            {
-                os.path.join(path, d): excl
-                for d, excl in self._norm_extra(cp["extra"]).items()
-            },
-            [os.path.join(path, d) for d in cp.get("dvs", [])],
-        )
-        return self._replay(
-            entries, path, version, seed=seed, start_after=cp["version"]
-        )
-
-    def _checkpoints_dir(self, path: str) -> str:
-        return os.path.join(path, "_checkpoints")
-
-    def _load_checkpoint(
-        self, path: str, version: int | None
-    ) -> dict | None:
-        """Newest checkpoint with version ≤ `version` (None = any)."""
-        d = self._checkpoints_dir(path)
-        if not os.path.isdir(d):
-            return None
-        best = None
-        for fname in os.listdir(d):
-            if not (fname.startswith("v") and fname.endswith(".json")):
-                continue
-            v = int(fname[1:-5])
-            if version is not None and v > version:
-                continue
-            if best is None or v > best:
-                best = v
-        if best is None:
-            return None
-        with open(os.path.join(d, f"v{best:08d}.json")) as f:
-            return json.load(f)
-
-    def _write_checkpoint(self, path: str, entries: list[dict]) -> None:
-        """Snapshot the replayed manifest at the log head (caller holds
-        the table lock).  Atomic via tmp + rename; data dirs are stored
-        relative to the table so the tree stays relocatable."""
-        part_map, extra, dvs = self._replay(entries, path, None)
-        version = entries[-1]["version"]
-        cp = {
-            "version": version,
-            "part_map": {
-                value: [os.path.relpath(d, path), pcol]
-                for value, (d, pcol) in part_map.items()
-            },
-            "extra": {
-                os.path.relpath(d, path): excl
-                for d, excl in extra.items()
-            },
-            "dvs": [os.path.relpath(d, path) for d in dvs],
-        }
-        d = self._checkpoints_dir(path)
-        os.makedirs(d, exist_ok=True)
-        target = os.path.join(d, f"v{version:08d}.json")
-        tmp = target + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(cp, f)
-        os.replace(tmp, target)
-
-    @staticmethod
-    def _norm_extra(raw) -> dict[str, dict[str, list[str]]]:
-        """Normalize an additive-dir manifest: dir → {partition_col →
-        sorted excluded partition values}.  Accepts the legacy bare
-        list-of-dirs shape (pre-exclusion checkpoints) as 'no
-        exclusions'."""
-        if isinstance(raw, dict):
-            return {
-                d: {p: sorted(v) for p, v in excl.items()}
-                for d, excl in raw.items()
-            }
-        return {d: {} for d in raw}
-
-    def _replay(
-        self,
-        entries: list[dict],
-        path: str,
-        version: int | None,
-        seed: tuple[dict, dict, list] | None = None,
-        start_after: int = -1,
-    ) -> tuple[
-        dict[str, tuple[str, str]], dict[str, dict[str, list[str]]],
-        list[str],
-    ]:
-        def step(state: tuple[dict, dict, list], e: dict) -> None:
-            # part_map: partition → (data_dir, partition_col).
-            # extra: additive (append / MoR-update) dirs → partition
-            # exclusions: a later partition OVERWRITE supersedes
-            # same-partition rows that live in OLDER additive dirs, so
-            # each overwritten value is recorded here and filtered out
-            # at read time (a newer append of the same partition is
-            # unaffected — its dir enters the map after the overwrite,
-            # with no exclusion).  dvs: live deletion-vector dirs.
-            part_map, extra, dvs = state
-            d = e.get("data_dir")
-            if d is None:
-                return
-            d = os.path.join(path, d)
-            op = e["operation"]
-            if op in ("overwrite", "compact"):
-                # full rewrite: data was read THROUGH the DV filter, so
-                # the new files are clean — vectors reset
-                part_map.clear()
-                extra.clear()
-                dvs.clear()
-                extra[d] = {}
-            elif op == "append":
-                extra[d] = {}
-            elif op == "delete_dv":
-                dvs.append(d)
-            elif op == "update_mor":
-                # merge-on-read MERGE: one atomic line = new rows
-                # (append semantics) + a vector deleting their old
-                # versions
-                extra[d] = {}
-                if e.get("dv_dir") is not None:  # None: nothing matched
-                    dvs.append(os.path.join(path, e["dv_dir"]))
-            elif op in ("overwrite_partitions", "compact_partitioned"):
-                if op == "compact_partitioned":
-                    part_map.clear()
-                    extra.clear()
-                    dvs.clear()
-                pcol = e["partition_col"]
-                parts = [str(p) for p in e["partitions"]]
-                for p in parts:
-                    part_map[p] = (d, pcol)
-                # supersede these partitions in every OLDER live
-                # additive dir (rows written there now have a newer
-                # image in `d` — without this they'd resurrect)
-                for excl in extra.values():
-                    excl[pcol] = sorted(
-                        set(excl.get(pcol, ())) | set(parts)
-                    )
-                # a partition overwrite leaves vectors in place: DV rows
-                # referencing superseded files go inert (their file
-                # paths are no longer scanned); compaction reclaims them
-
-        if seed is not None:
-            seed = (
-                dict(seed[0]), self._norm_extra(seed[1]), list(seed[2]),
-            )
-        # a restore resets to the state as of the restored version —
-        # the rollback is one log line, no data is copied
-        return _fold_log(
-            entries, version, lambda: ({}, {}, []), step, seed, start_after
-        )
+        """The data part of the table state as of `version` (None =
+        latest; `_fold_log`) → (partition → (data_dir, partition_col),
+        additive dirs → their exclusions, live deletion-vector dirs).
+        `entries` is the caller's already-parsed log (`snapshots()`),
+        if it has one."""
+        state = self._state(schema, name, version, entries)
+        return state.part_map, state.extra, state.dvs
 
     def restore(self, schema: str, name: str, version: int) -> None:
         """RESTORE TABLE ... TO VERSION AS OF analog: make the table's
@@ -2604,8 +2475,8 @@ class Lakehouse:
         per-relation pseudo-column).  The file path is made RELATIVE
         to the table dir (each side — DV write and later reads — uses
         its own current absolute prefix), so vectors keep deleting the
-        right rows after the whole table tree is relocated, same as
-        the checkpoint/log relative-path contract."""
+        right rows after the whole table tree is relocated, the same
+        contract as the log's table-relative data dirs."""
         norm = F.regexp_replace(
             F.col("_metadata.file_path"), "^file:/*", "/"
         )
@@ -2669,7 +2540,7 @@ class Lakehouse:
         schema: str, name: str,
     ) -> DataFrame:
         """Drop rows of superseded partitions from an additive-dir
-        frame (see `_replay`: a partition overwrite after an append
+        frame (see `_step`: a partition overwrite after an append
         supersedes the append's same-partition rows).  NULL-safe both
         ways: a NULL-keyed row is excluded iff the NULL partition
         (`NULL_SENTINEL`) was overwritten (otherwise it survives —
@@ -2726,7 +2597,8 @@ class Lakehouse:
         whole and never pruned); one without a logged schema lets
         Spark infer it.  `entries` is the caller's already-parsed log
         (`snapshots()`), if it has one; the plan carries the log it
-        was made from, so one read parses the log once.  A table with
+        was made from and the table state folded from it (`state`), so
+        one read parses and folds the log once.  A table with
         commits has its format checked once per plan (`_check_format`)."""
         from .bloom import bloom_survives
         from .skipping import collect_file_stats, file_survives
@@ -2735,9 +2607,8 @@ class Lakehouse:
             entries = self.snapshots(schema, name)
         if entries:
             self._check_format(schema, name, new=False)
-        part_map, extra, dvs = self._readable_manifest(
-            schema, name, version, entries
-        )
+        state = self._readable_state(schema, name, version, entries)
+        part_map, extra = state.part_map, state.extra
         path = self._table_dir(schema, name)
         logged: dict[str, tuple[list[dict] | None, dict | None]] = {}
         for e in entries:
@@ -2769,8 +2640,7 @@ class Lakehouse:
             # predicates arrive in LOGICAL names; footer stats and
             # bloom filters are keyed by the PHYSICAL names the files
             # store
-            cmap, _ = self.column_state(schema, name, version, entries)
-            inv = {l: p for p, l in cmap.items()}
+            inv = {l: p for p, l in state.renames.items()}
             phys = [(inv.get(p[0], p[0]), *p[1:]) for p in predicates]
             bloom_cfg = self.bloom_index(schema, name)
             if spec is not None:
@@ -2839,10 +2709,11 @@ class Lakehouse:
             )
         return _Plan(
             slices,
-            [d for d in dvs if files_of(d)[0]],
+            [d for d in state.dvs if files_of(d)[0]],
             pcols,
             entries[-1]["version"] if version is None and entries else version,
             entries,
+            state,
         )
 
     def _slice_frame(
@@ -2901,8 +2772,8 @@ class Lakehouse:
         ]
         return self._drop_hidden(
             self._union_frames(
-                spark, frames, schema, name, version, plan.dvs,
-                with_positions, plan.entries,
+                spark, frames, schema, name, plan.state, plan.dvs,
+                with_positions,
             )
         )
 
@@ -2928,7 +2799,8 @@ class Lakehouse:
         frame = spark.createDataFrame([], StructType.fromJson(logged))
         return self._drop_hidden(
             self._union_frames(
-                spark, [frame], schema, name, None, [], False, entries
+                spark, [frame], schema, name,
+                self._state(schema, name, None, entries), [], False,
             )
         )
 
@@ -2938,17 +2810,16 @@ class Lakehouse:
         frames: list[DataFrame],
         schema: str,
         name: str,
-        version: int | None,
+        state: _TableState,
         dvs: list[str],
         with_positions: bool,
-        entries: list[dict],
     ) -> DataFrame:
         """The common tail of `read` and `read_where`: one frame per
         commit-dir slice → the table's logical rows (added-column
         defaults filled, live deletion vectors anti-joined out, column
-        mapping applied; hidden columns still present).  `entries` is
-        the parsed log the slices were planned from."""
-        frames = self._fill_added(frames, schema, name, version, entries)
+        mapping applied; hidden columns still present).  `state` is
+        the table state the slices were planned from."""
+        frames = self._fill_added(frames, state)
         tag = with_positions or bool(dvs)
         if tag:
             tdir = self._table_dir(schema, name)
@@ -2962,9 +2833,7 @@ class Lakehouse:
             out = self._apply_dvs(
                 spark, out, dvs, keep_positions=with_positions
             )
-        return self._apply_column_mapping(
-            out, schema, name, version, entries
-        )
+        return self._apply_column_mapping(out, state)
 
     def read_where(
         self,
@@ -3019,22 +2888,21 @@ class Lakehouse:
             self._slice_frame(spark, schema, name, sl) for sl in plan.slices
         ]
         out = self._union_frames(
-            spark, frames, schema, name, version, plan.dvs, with_positions,
-            plan.entries,
+            spark, frames, schema, name, plan.state, plan.dvs, with_positions
         )
         return self._drop_hidden(out.filter(predicates_to_column(predicates)))
 
-    def _readable_manifest(
-        self, schema: str, name: str, version: int | None = None,
-        entries: list[dict] | None = None,
-    ):
-        """`_manifest`, refused with HistoryUnavailableError when vacuum
+    def _readable_state(
+        self, schema: str, name: str, version: int | None,
+        entries: list[dict],
+    ) -> _TableState:
+        """The table state as of `version` folded from the parsed log
+        `entries`, refused with HistoryUnavailableError when vacuum
         reclaimed any directory it references — what every versioned
         read serves from, so none returns partial history.  O(|manifest|)
         isdir checks — no listing, no data read."""
-        part_map, extra, dvs = self._manifest(schema, name, version, entries)
-        dirs = {d for d, _ in part_map.values()} | set(extra) | set(dvs)
-        missing = sorted(d for d in dirs if not os.path.isdir(d))
+        state = self._state(schema, name, version, entries)
+        missing = sorted(d for d in state.dirs() if not os.path.isdir(d))
         if missing:
             raise HistoryUnavailableError(
                 f"{schema}.{name} (version {'latest' if version is None else version}): "
@@ -3044,7 +2912,7 @@ class Lakehouse:
                 "time travel / CDC cannot reach past retention — "
                 "recompute from the current state instead"
             )
-        return part_map, extra, dvs
+        return state
 
     def read_snapshot(
         self, spark: SparkSession, schema: str, name: str, version: int
@@ -3109,8 +2977,7 @@ class Lakehouse:
         versions = [e["version"] for e in entries]
         if versions != list(range(len(versions))):
             errors.append(f"non-dense version sequence: {versions}")
-        part_map, extra, dvs = self._manifest(schema, name)
-        live_dirs = {d for d, _ in part_map.values()} | set(extra) | set(dvs)
+        live_dirs = self._state(schema, name, None, entries).dirs()
         for d in sorted(live_dirs):
             if not os.path.isdir(d):
                 errors.append(
@@ -3312,8 +3179,7 @@ class Lakehouse:
             # CDF after a schema change)
             return self._drop_hidden(
                 self._union_frames(
-                    spark, frames, schema, name, to_version, side.dvs,
-                    False, new.entries,
+                    spark, frames, schema, name, new.state, side.dvs, False
                 )
             )
 
@@ -3418,10 +3284,8 @@ class Lakehouse:
         or additive dirs (appends, merge-on-read updates, a full
         compaction) exist: then only a whole-table scan answers."""
         entries = self.snapshots(schema, name)
-        part_map, extra, dvs = self._readable_manifest(
-            schema, name, None, entries
-        )
-        if extra or dvs:
+        state = self._readable_state(schema, name, None, entries)
+        if state.extra or state.dvs:
             return {}, None
         path = self._table_dir(schema, name)
         owner = {
@@ -3430,7 +3294,7 @@ class Lakehouse:
         }
         logged: dict[str, dict] = {}
         rest: list[str] = []
-        for token, (d, pcol) in sorted(part_map.items()):
+        for token, (d, pcol) in sorted(state.part_map.items()):
             e = owner.get(d, {})
             m = e.get(key, {}).get(token)
             rows = sum(
@@ -3566,12 +3430,8 @@ class Lakehouse:
                 "exclusions (a rewrite superseded rows inside append "
                 "files); compact() first"
             )
-        bad_adds = [
-            a for a in self._added_columns(
-                schema, name, version, plan.entries
-            )
-            if a["default"] is not None
-        ]
+        added = plan.state.added
+        bad_adds = [a for a in added if a["default"] is not None]
         if bad_adds:
             raise ManifestExportError(
                 f"{schema}.{name}@v{resolved} declares non-NULL ADD "
@@ -3595,9 +3455,7 @@ class Lakehouse:
                 (hive_files if "=" in f["path"] else flat_files).append(
                     os.path.join(sl.d, f["path"])
                 )
-        mapping, dropped = self.column_state(
-            schema, name, version, plan.entries
-        )
+        mapping = plan.state.renames
         spec = self.partition_spec(schema, name)
         manifest = {
             "table": f"{schema}.{name}",
@@ -3607,7 +3465,7 @@ class Lakehouse:
             "flat_files": sorted(flat_files),
             # physical name (as stored in files / hive paths) → logical
             "column_mapping": mapping,
-            "dropped_physical_columns": sorted(dropped),
+            "dropped_physical_columns": sorted(plan.state.dropped),
             # read with union-by-name: schema-evolved commits may add
             # NULL-backed columns missing from older files
             "union_by_name": True,
@@ -3625,9 +3483,7 @@ class Lakehouse:
                     "column": mapping.get(a["column"], a["column"]),
                     "dtype": a["dtype"],
                 }
-                for a in self._added_columns(
-                    schema, name, version, plan.entries
-                )
+                for a in added
             ],
             # type-widened columns: files keep their narrow physical
             # type (immutable), so consumers must CAST after the read
@@ -3635,9 +3491,7 @@ class Lakehouse:
             # but a table whose files are all still narrow would
             # otherwise surface the narrow type.  Keyed by PHYSICAL
             # name (pre-mapping), values are Spark/ANSI type names.
-            "widened_columns": self._widened(
-                schema, name, version, plan.entries
-            ),
+            "widened_columns": plan.state.widened,
         }
         if write:
             mdir = os.path.join(
@@ -3696,14 +3550,6 @@ class Lakehouse:
         }
         with open(log, "a") as f:
             f.write(json.dumps(entry) + "\n")
-        if (
-            self.checkpoint_interval
-            and (version + 1) % self.checkpoint_interval == 0
-        ):
-            self._write_checkpoint(
-                path,
-                self._raw_snapshots(*_schema_name_from(path, self.root)),
-            )
 
 
 def _schema_name_from(path: str, root: str) -> tuple[str, str]:

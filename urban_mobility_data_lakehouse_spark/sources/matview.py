@@ -249,7 +249,7 @@ class MaterializedView:
             else:
                 # the same rule as the diff: a window whose base state
                 # vacuum reclaimed rebuilds (isdir checks, no read)
-                self.lake._readable_manifest(*self.base, last, entries)
+                self.lake._readable_state(*self.base, last, entries)
         except HistoryUnavailableError:
             # vacuum reclaimed the window: the only honest refresh is
             # a rebuild
